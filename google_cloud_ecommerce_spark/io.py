@@ -119,20 +119,14 @@ def compact_parquet_dir(
     shuffle when only merging (narrow dependency), which is the common
     case.
 
-    Returns the number of output files requested.
+    Returns the number of parquet files written: ``coalesce`` can only
+    merge, so a scan planned into fewer partitions than requested writes
+    fewer files.
     """
-    # Hadoop FS listing works for any scheme (file://, s3a://, gs://),
-    # unlike a local glob.
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(src_dir)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    it = fs.listFiles(jpath, True)
     total_bytes, n_files = 0, 0
-    while it.hasNext():
-        st = it.next()
-        if st.getPath().getName().endswith(".parquet"):
-            total_bytes += st.getLen()
-            n_files += 1
+    for st in _parquet_statuses(spark, src_dir):
+        total_bytes += st.getLen()
+        n_files += 1
     n_out = max(1, -(-total_bytes // target_file_bytes))  # ceil division
     df = spark.read.parquet(src_dir)
     if n_out < max(n_files, 1):
@@ -140,7 +134,19 @@ def compact_parquet_dir(
     else:
         df = df.repartition(int(n_out))  # splitting needs a shuffle
     df.write.mode("overwrite").parquet(dst_dir)
-    return int(n_out)
+    return sum(1 for _ in _parquet_statuses(spark, dst_dir))
+
+
+def _parquet_statuses(spark: SparkSession, path: str):
+    """FileStatus of every ``.parquet`` file under ``path``. Hadoop FS
+    listing works for any scheme (file://, s3a://, gs://), unlike a
+    local glob."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    it = jpath.getFileSystem(spark._jsc.hadoopConfiguration()).listFiles(jpath, True)
+    while it.hasNext():
+        st = it.next()
+        if st.getPath().getName().endswith(".parquet"):
+            yield st
 
 
 def read_parquet_evolved(spark: SparkSession, path: str) -> DataFrame:

@@ -1186,11 +1186,31 @@ ORACLE["dedup_prefix_filter"] = _dedup_prefix_filter_sql()
 
 SEMDEDUP_CLUSTER_CAP = 256
 SEMDEDUP_SPLIT_BITS = 8  # max n_sub = 256 subkeys per oversized cluster
-# clusters above this size get the pair-join salt (see semdedup_clusters
-# step 2): below it, even a degenerate sign-LSH split leaves a bounded
-# single-task pair space, and skipping the salt keeps the keeper-side
-# exchange at 1x rows instead of salt_n x.
-SEMDEDUP_SALT_MIN_CLUSTER = 4 * SEMDEDUP_CLUSTER_CAP
+# clusters above this many cluster_caps get the pair-join salt (see
+# semdedup_clusters step 2): below it, even a degenerate sign-LSH split
+# leaves a bounded single-task pair space, and skipping the salt keeps
+# the keeper-side exchange at 1x rows instead of salt_n x.
+SEMDEDUP_SALT_MIN_CAPS = 4
+
+
+def _shuffle_partitions(spark: SparkSession) -> int:
+    """``spark.sql.shuffle.partitions`` as a number. Runtimes that accept
+    a non-numeric value (``"auto"``) size shuffles themselves; fall back
+    to the default parallelism then."""
+    value = spark.conf.get("spark.sql.shuffle.partitions", "200")
+    try:
+        return int(value)
+    except ValueError:
+        return spark.sparkContext.defaultParallelism
+
+
+def _semdedup_salt_count_expr(cluster_cap: int, salt_n: int, salt_base: int) -> str:
+    """Per-row salt count: the full salt above SEMDEDUP_SALT_MIN_CAPS
+    cluster caps, the adaptive base below."""
+    return (
+        f"CAST(IF(c_n > {SEMDEDUP_SALT_MIN_CAPS * cluster_cap}, {salt_n}, "
+        f"{salt_base}) AS INT) AS s_n"
+    )
 
 
 def _semdedup_split_key_expr() -> str:
@@ -1320,12 +1340,12 @@ def semdedup_clusters(
     #      amplification. So salt_base = ceil(shuffle_partitions / k)
     #      capped at salt_n — the full 8 locally (bit-identical plan
     #      economics to r12), 1 at production k — and clusters above
-    #      SEMDEDUP_SALT_MIN_CLUSTER always take the full salt as the
+    #      SEMDEDUP_SALT_MIN_CAPS caps always take the full salt as the
     #      degenerate-LSH safety net (an uneven sign split of a huge
     #      cluster can leave one subkey holding most of its pair
     #      space; c_n is computed identically on both join sides).
     salt_n = 8
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    shuffle_p = _shuffle_partitions(spark)
     salt_base = max(1, min(salt_n, -(-shuffle_p // max(int(k), 1))))
     # selectExpr, ONE py4j call: a 64-element F.col("v")[i] list
     # comprehension costs ~190 driver round-trips per build (~0.6 s
@@ -1336,8 +1356,7 @@ def semdedup_clusters(
         "cluster_id",
         "subkey",
         "norm",
-        f"CAST(IF(c_n > {SEMDEDUP_SALT_MIN_CLUSTER}, {salt_n}, "
-        f"{salt_base}) AS INT) AS s_n",
+        _semdedup_salt_count_expr(cluster_cap, salt_n, salt_base),
         *[f"v[{i}] AS e{i}" for i in range(EMBED_DIM)],
     )
     a = expanded.withColumn(

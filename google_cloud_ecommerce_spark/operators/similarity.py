@@ -1895,9 +1895,9 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-12: the centroid was ONE aggregate with EMBED_DIM=64 parallel
     # decimal sum columns — the exact codegen-blowup shape the round-6
     # kmeans gotcha records. The posexplode + per-dim aggregate + array
-    # reassembly shape (kmeans_assign's _kmeans_update_step) computes the
-    # SAME order-independent decimal means; interleaved A/B at sf0.1:
-    # min 3.10 -> 1.01 s, identical output rows.
+    # reassembly shape (kmeans_assign's _kmeans_update_row does the same
+    # per centroid) computes the SAME order-independent decimal means;
+    # interleaved A/B at sf0.1: min 3.10 -> 1.01 s, identical output rows.
     per_dim = (
         emb.select(F.posexplode("v").alias("pos", "val"))
         .groupBy("pos")

@@ -752,3 +752,48 @@ def test_semdedup_mega_cluster_splits_and_matches_oracle(spark, tmp_path):
         for r in semdedup_clusters(spark, str(tmp_path)).collect()
     }
     assert (n_big, n_big + 1) in found
+
+
+def test_shuffle_partitions_falls_back_on_non_numeric_conf():
+    """Runtimes that accept spark.sql.shuffle.partitions="auto" must not
+    crash the semdedup salt sizing: it falls back to defaultParallelism."""
+    from types import SimpleNamespace
+
+    from google_cloud_ecommerce_spark.operators.dedup import _shuffle_partitions
+
+    def stub(value):
+        return SimpleNamespace(
+            conf=SimpleNamespace(get=lambda key, default=None: value),
+            sparkContext=SimpleNamespace(defaultParallelism=7),
+        )
+
+    assert _shuffle_partitions(stub("auto")) == 7
+    assert _shuffle_partitions(stub("12")) == 12
+
+
+def test_semdedup_salt_threshold_follows_cluster_cap():
+    from google_cloud_ecommerce_spark.operators.dedup import (
+        SEMDEDUP_CLUSTER_CAP,
+        _semdedup_salt_count_expr,
+    )
+
+    assert "c_n > 256," in _semdedup_salt_count_expr(64, 8, 1)
+    # the default cap keeps the historical 4 x 256 threshold
+    assert "c_n > 1024," in _semdedup_salt_count_expr(SEMDEDUP_CLUSTER_CAP, 8, 1)
+
+
+def test_semdedup_rows_independent_of_salt(spark, sf_smoke):
+    """The salt only spreads pair work: one salt (1 shuffle partition)
+    and the full 8-way salt (32 partitions) give identical rows."""
+    from google_cloud_ecommerce_spark.operators.dedup import semdedup_clusters
+
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    rows = {}
+    try:
+        for parts in ("1", "32"):
+            spark.conf.set(key, parts)
+            rows[parts] = sorted(semdedup_clusters(spark, sf_smoke).collect())
+    finally:
+        spark.conf.set(key, saved)
+    assert rows["1"] == rows["32"]
