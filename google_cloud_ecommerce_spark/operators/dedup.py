@@ -1269,33 +1269,19 @@ def semdedup_clusters(
     are k ~ 11k clusters (the SemDeDup paper's LAION scale), iters ~
     10, and a cluster_cap sized so cap^2 pairs fit one task's budget —
     k is the primary knob; the cap is the skew safety net."""
-    from google_cloud_ecommerce_spark.iterative import iterate
     from google_cloud_ecommerce_spark.operators.similarity import (
         KMEANS_ITERS,
         KMEANS_K,
         _emb,
-        _kmeans_assign_step_row,
-        _kmeans_update_row,
+        _kmeans_train,
     )
 
     k = KMEANS_K if k is None else k
     iters = KMEANS_ITERS if iters is None else iters
-    emb = _emb(spark, sf_dir).select("vec_id", "v")
-    # one-row centroid state per Lloyd round (r13, see kmeans_assign):
-    # one corpus aggregate + one broadcast per round, no regroup
-    # exchange.
-    cents_row = emb.filter(F.col("vec_id") < k).agg(
-        F.collect_list(
-            F.struct(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
-        ).alias("cs")
-    )
-    cents_row = iterate(
-        cents_row,
-        lambda c, _rnd: _kmeans_update_row(_kmeans_assign_step_row(emb, c)),
-        iters,
-    )
     assigned = (
-        _kmeans_assign_step_row(emb, cents_row)
+        # one-row centroid state per Lloyd round (see _kmeans_train): one
+        # corpus aggregate + one broadcast per round, no regroup exchange
+        _kmeans_train(_emb(spark, sf_dir).select("vec_id", "v"), k, iters)
         .select("vec_id", "v", F.col("c_id").alias("cluster_id"))
         .withColumn("norm", F.expr(f"sqrt({dot_expr('v', 'v')})"))
         # pin: both join sides read this; without it the assignment

@@ -244,7 +244,7 @@ N_PROBE = 4
 def _assigned(spark: SparkSession, sf_dir: str, n_probe: int = N_PROBE) -> DataFrame:
     """Corpus with its n_probe nearest-centroid cells (cosine desc,
     ties to the lower centroid id). Round-4 rewrite, same shape as
-    _kmeans_assign_step: the 16 centroids collapse to ONE broadcast
+    _lloyd_assign: the 16 centroids collapse to ONE broadcast
     row of (c_id, cv, cnorm) structs and the per-vector top-n_probe is
     array_sort over a per-row struct transform (negated cosine sorts
     descending, c_id breaks ties — the SAME total order the old
@@ -659,18 +659,8 @@ def build_similarity_index(
     pq_dir = _index_dir(sf_dir, "pq")
     pq_marker = pq_dir / "_SOURCE"
     if force or not pq_marker.exists() or pq_marker.read_text() != _marker_content(fp, "pq"):
-        emb = _emb(spark, sf_dir).select("vec_id", "v")
-        sub = _pq_subvecs(emb).localCheckpoint(eager=False)
-        cents = _pq_seed_rows(sub)
-        trained = _pq_update_rows(_pq_assign_step_row(sub, cents))
-        final = _pq_assign_step_row(sub, trained)
-        codes = final.groupBy("vec_id").agg(
-            *[
-                F.max(F.when(F.col("m") == i, F.col("c_id"))).alias(f"code_{i}")
-                for i in range(PQ_M)
-            ]
-        )
-        codes.write.mode("overwrite").parquet(str(pq_dir / "codes"))
+        trained, final = _pq_train(_pq_subvecs(_emb(spark, sf_dir).select("vec_id", "v")))
+        _pq_codes(final).write.mode("overwrite").parquet(str(pq_dir / "codes"))
         _pq_codebook_frame(trained).write.mode("overwrite").parquet(
             str(pq_dir / "codebook")
         )
@@ -693,17 +683,8 @@ def build_similarity_index(
             F.col("c_id").alias("cell"),
             F.expr("zip_with(v, cv, (a, b) -> a - b)").alias("v"),
         )
-        sub = _pq_subvecs(resid.select("vec_id", "v")).localCheckpoint(eager=False)
-        seeds = _pq_seed_rows(sub)
-        trained = _pq_update_rows(_pq_assign_step_row(sub, seeds))
-        final = _pq_assign_step_row(sub, trained)
-        codes = final.groupBy("vec_id").agg(
-            *[
-                F.max(F.when(F.col("m") == i, F.col("c_id"))).alias(f"code_{i}")
-                for i in range(PQ_M)
-            ]
-        )
-        codes = codes.join(resid.select("vec_id", "cell"), "vec_id")
+        trained, final = _pq_train(_pq_subvecs(resid.select("vec_id", "v")))
+        codes = _pq_codes(final).join(resid.select("vec_id", "cell"), "vec_id")
         codes.write.mode("overwrite").partitionBy("cell").parquet(
             str(ivfpq_dir / "codes")
         )
@@ -803,8 +784,8 @@ ORACLE["similarity_ivf_index_topk"] = _similarity_ivf_topk_sql()
 # (the trained form of the IVF cell structure above, whose centroids
 # are fixed corpus rows). Each round:
 #   assign  corpus x broadcast(K centroids) -> argmin squared distance
-#           (row_number tie-broken to the lower centroid id). The
-#           corpus NEVER shuffles for assignment — K rows broadcast.
+#           (ties to the lower centroid id). The corpus NEVER shuffles
+#           for assignment — one row of K centroids broadcasts.
 #   update  posexplode to (cluster, dim), ONE hash aggregate with
 #           map-side partials; the per-dim mean uses the same
 #           order-independent DECIMAL(18,6) accumulation as
@@ -840,25 +821,31 @@ def _sqdist_sql(a: str, b: str, dim: int = EMBED_DIM) -> str:
     )
 
 
-def _kmeans_assign_step_row(emb: DataFrame, cents_row: DataFrame) -> DataFrame:
-    """Shuffle-free assignment from a pre-collapsed ONE-row centroid
-    frame (``cs``: array of (c_id, cv) structs), broadcast everywhere;
-    the per-vector argmin is array_min over a struct transform —
-    sq_dist first, c_id tie-break, the SAME total order as a per-vec
-    window rank but with zero corpus shuffle. This matters at scale:
-    the old form (broadcast join to k rows per vector +
-    Window.partitionBy(vec_id)) re-shuffled the whole corpus on EVERY
-    Lloyd iteration; this form touches each vector where it already
-    sits."""
+def _lloyd_assign(
+    points: DataFrame, cents: DataFrame, on: tuple[str, ...] = ()
+) -> DataFrame:
+    """One Lloyd assignment, shared by k-means and PQ. ``cents`` is the
+    broadcastable centroid state: per ``on`` key, one row whose ``cs``
+    is an array of (c_id, cv) structs. ``on=()`` is plain k-means (one row,
+    cross join); ``on=("m",)`` is PQ (one codebook per subspace,
+    equi-join). The per-point argmin is array_min over a struct
+    transform — sq_dist first, c_id tie-break, the SAME total order as
+    a per-point window rank but with zero corpus shuffle: the old form
+    (broadcast join to k rows per point + Window.partitionBy(vec_id))
+    re-shuffled the whole corpus on EVERY Lloyd iteration; this form
+    touches each point where it already sits. argmin is
+    order-independent, so the order of ``cs`` is never observed."""
     best = (
         f"array_min(transform(cs, c -> "
         f"struct({_sqdist_expr('v', 'c.cv')} AS sq_dist, c.c_id AS c_id)))"
     )
     return (
-        emb.join(F.broadcast(cents_row))
+        # join(on=[]) raises in PySpark; None is the cross join
+        points.join(F.broadcast(cents), list(on) or None)
         .withColumn("best", F.expr(best))
         .select(
             "vec_id",
+            *on,
             "v",
             F.col("best.c_id").alias("c_id"),
             F.col("best.sq_dist").alias("sq_dist"),
@@ -866,36 +853,31 @@ def _kmeans_assign_step_row(emb: DataFrame, cents_row: DataFrame) -> DataFrame:
     )
 
 
-def _kmeans_assign_step(emb: DataFrame, cents: DataFrame) -> DataFrame:
-    """Assignment from a (c_id, cv) centroid FRAME — collapses it to
-    the one-row form first. argmin is order-independent, so the
-    collect_list arrival order is irrelevant."""
-    cents_row = cents.agg(F.collect_list(F.struct("c_id", "cv")).alias("cs"))
-    return _kmeans_assign_step_row(emb, cents_row)
-
-
-def _kmeans_update_row(assigned: DataFrame) -> DataFrame:
-    """Centroid update fused to the broadcastable ONE-row form (r13,
+def _lloyd_update(assigned: DataFrame, on: tuple[str, ...] = ()) -> DataFrame:
+    """Centroid update to the broadcastable ``(*on, cs)`` form (r13,
     guide §2.4): the old chain ran gb(c_id, dim) -> gb(c_id) ->
     agg(collect_list) — three exchanges per Lloyd round, each an AQE
-    stage/job whose scheduling dominates at any per-round data size
-    (the per-centroid groups are k*dim rows). The per-(c_id, dim)
-    aggregate (the only one that touches corpus-scale data, map-side
-    partials) is kept; the regroup-to-centroid and collapse-to-row
-    aggregates fuse into ONE single-row aggregate whose array assembly
-    runs as an in-plan expression over k*dim elements. Exactness: comp
-    values come from the same decimal sums; cv arrays are assembled
-    sorted by dim exactly as the old array_sort(collect_list) did; the
-    cs array order differs only in c_id order, which the argmin never
-    observes.
+    stage/job whose scheduling dominates at any per-round data size.
+    The per-(*on, c_id, dim) aggregate (the only one that touches
+    corpus-scale data, map-side partials) is kept; the regroup and
+    collapse aggregates fuse into ONE groupBy(*on) whose centroid
+    assembly is an in-plan expression. Every per-dim mean accumulates
+    ROUND(x, 6) as DECIMAL(18,6) — order-independent, so centroid
+    doubles are bit-identical across engines and partitionings.
+
+    Assembly is sort-linear: every present c_id has exactly ``d`` =
+    max(dim) entries, so ONE array_sort by (c_id, dim) lays the
+    centroids out back to back and stride-``d`` slices cut them apart,
+    in c_id order with each cv in dim order. (Filtering the flat array
+    once per centroid was O(k²·dim) inside one task.)
 
     NOTE: a one-shot k-row aggregate with EMBED_DIM separate decimal
     sum columns was A/B'd here and LOST 2x (64 aggregate expressions
     per unrolled round blow up codegen compilation); the posexplode
     shape keeps each round's plan small and whole-stage-compiled."""
     per_dim = (
-        assigned.select("c_id", F.posexplode("v").alias("pos", "val"))
-        .groupBy("c_id", (F.col("pos") + 1).alias("dim"))
+        assigned.select(*on, "c_id", F.posexplode("v").alias("pos", "val"))
+        .groupBy(*on, "c_id", (F.col("pos") + 1).alias("dim"))
         .agg(
             (
                 F.sum(F.round("val", 6).cast("decimal(18,6)")).cast("double")
@@ -903,15 +885,38 @@ def _kmeans_update_row(assigned: DataFrame) -> DataFrame:
             ).alias("comp")
         )
     )
-    return per_dim.agg(
-        F.collect_list(F.struct("c_id", "dim", "comp")).alias("flat")
-    ).select(
-        F.expr(
-            "transform(array_sort(array_distinct(transform(flat, s -> s.c_id))), "
-            "cid -> named_struct('c_id', cid, 'cv', "
-            "transform(array_sort(filter(flat, s -> s.c_id = cid)), s -> s.comp)))"
+    return (
+        per_dim.groupBy(*on)
+        .agg(
+            F.expr("array_sort(collect_list(struct(c_id, dim, comp)))").alias("flat"),
+            F.max("dim").alias("d"),
+        )
+        .select(
+            *on,
+            F.expr(
+                "transform(sequence(0, size(flat) DIV d - 1), i -> named_struct("
+                "'c_id', flat[i * d].c_id, "
+                "'cv', transform(slice(flat, i * d + 1, d), s -> s.comp)))"
+            ).alias("cs"),
+        )
+    )
+
+
+def _kmeans_train(emb: DataFrame, k: int, iters: int) -> DataFrame:
+    """Lloyd's k-means over (vec_id, v): the vectors with vec_id < k
+    seed the centroids, ``iters`` assign/update rounds train them, and
+    the final assignment (vec_id, v, c_id, sq_dist) is returned. The
+    seeds go straight to the one-row broadcast state, so every round is
+    exactly one corpus-side aggregate plus one broadcast build."""
+    seeds = emb.filter(F.col("vec_id") < k).agg(
+        F.collect_list(
+            F.struct(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
         ).alias("cs")
     )
+    cents = iterate(
+        seeds, lambda c, _rnd: _lloyd_update(_lloyd_assign(emb, c)), iters
+    )
+    return _lloyd_assign(emb, cents)
 
 
 # scan-audit: unrolled training rounds re-scan by design (iterative); the
@@ -928,22 +933,7 @@ def kmeans_assign(
     knobs scale to SemDeDup-sized clusterings (k ~ 10k+, iters ~ 10) —
     every round stays one broadcast of k centroids plus one map-side
     partial aggregate, the corpus never shuffles."""
-    emb = _emb(spark, sf_dir).select("vec_id", "v")
-    # initial centroids straight to the one-row broadcast form (r13):
-    # the per-round state is (cs) — one row — so every Lloyd round is
-    # exactly one corpus-side aggregate plus one broadcast build, with
-    # no per-centroid regroup exchange in between.
-    cents_row = emb.filter(F.col("vec_id") < k).agg(
-        F.collect_list(
-            F.struct(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
-        ).alias("cs")
-    )
-    cents_row = iterate(
-        cents_row,
-        lambda c, _rnd: _kmeans_update_row(_kmeans_assign_step_row(emb, c)),
-        iters,
-    )
-    final = _kmeans_assign_step_row(emb, cents_row)
+    final = _kmeans_train(_emb(spark, sf_dir).select("vec_id", "v"), k, iters)
     return final.select(
         "vec_id",
         F.col("c_id").alias("cluster_id"),
@@ -1226,10 +1216,10 @@ def _pq_subvecs(emb: DataFrame) -> DataFrame:
         F.explode(
             F.expr(
                 f"transform(sequence(0, {PQ_M - 1}), "
-                f"m -> struct(m AS m, slice(v, m * {PQ_SUB_DIM} + 1, {PQ_SUB_DIM}) AS sv))"
+                f"m -> struct(m AS m, slice(v, m * {PQ_SUB_DIM} + 1, {PQ_SUB_DIM}) AS v))"
             )
         ).alias("s"),
-    ).select("vec_id", F.col("s.m").alias("m"), F.col("s.sv").alias("sv"))
+    ).select("vec_id", "s.m", "s.v")
 
 
 def _pq_seed_rows(sub: DataFrame) -> DataFrame:
@@ -1258,15 +1248,15 @@ def _pq_seed_rows(sub: DataFrame) -> DataFrame:
     embedded the previous seeds twice) + a fresh groupBy(m) collapse
     before it could broadcast. This chain is single-reference, so no
     pins are needed and each round materializes exactly once as the
-    next round's broadcast build — measured 17 -> 10 jobs on
+    next round's broadcast build — measured 17 -> 13 jobs on
     pq_encode with picks bit-identical (same (mind, nid) argmax)."""
     seeds = sub.filter(F.col("vec_id") == 0).groupBy("m").agg(
         F.collect_list(
-            F.struct(F.lit(0).cast("long").alias("c_id"), F.col("sv").alias("cv"))
+            F.struct(F.lit(0).cast("long").alias("c_id"), F.col("v").alias("cv"))
         ).alias("cs")
     )
     for i in range(1, PQ_K):
-        mind = f"array_min(transform(cs, c -> {_sqdist_expr('sv', 'c.cv')}))"
+        mind = f"array_min(transform(cs, c -> {_sqdist_expr('v', 'c.cv')}))"
         seeds = (
             sub.join(F.broadcast(seeds), "m")
             .withColumn("mind", F.expr(mind))
@@ -1276,8 +1266,8 @@ def _pq_seed_rows(sub: DataFrame) -> DataFrame:
                     F.struct(
                         F.col("mind"),
                         (-F.col("vec_id")).alias("nid"),
-                        F.col("sv").alias("sv"),
-                        F.col("cs").alias("cs"),
+                        F.col("v"),
+                        F.col("cs"),
                     )
                 ).alias("p")
             )
@@ -1285,66 +1275,35 @@ def _pq_seed_rows(sub: DataFrame) -> DataFrame:
                 "m",
                 F.expr(
                     f"concat(p.cs, array(named_struct("
-                    f"'c_id', CAST({i} AS BIGINT), 'cv', p.sv)))"
+                    f"'c_id', CAST({i} AS BIGINT), 'cv', p.v)))"
                 ).alias("cs"),
             )
         )
     return seeds
 
 
-def _pq_assign_step_row(sub: DataFrame, cents_rows: DataFrame) -> DataFrame:
-    """Shuffle-free PQ assignment (round 4, same rewrite as
-    _kmeans_assign_step_row): the per-subspace codebook is already PQ_M
-    broadcastable rows of (m, cs); the per-(vector, subspace) argmin is
-    array_min over a struct transform — sq_dist first, c_id tie-break,
-    the SAME total order the old per-(vec_id, m) window rank imposed,
-    with zero shuffle of the sub-vector table per training round."""
-    best = (
-        f"array_min(transform(cs, c -> "
-        f"struct({_sqdist_expr('sv', 'c.cv')} AS sq_dist, c.c_id AS c_id)))"
-    )
-    return (
-        sub.join(F.broadcast(cents_rows), "m")
-        .withColumn("best", F.expr(best))
-        .select(
-            "vec_id",
-            "m",
-            "sv",
-            F.col("best.c_id").alias("c_id"),
-            F.col("best.sq_dist").alias("sq_dist"),
-        )
-    )
+def _pq_train(sub: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """PQ codebook training over the ``_pq_subvecs`` table: maxmin seeds,
+    one Lloyd round per subspace, then the final assignment. Returns
+    (codebook, final): the (m, cs) broadcast rows and every subvector's
+    (vec_id, m, v, c_id, sq_dist). The subvector table is pinned
+    (lazy checkpoint): it feeds the seed selection, the training round
+    and the final assignment, and is re-derived per reference
+    otherwise."""
+    sub = sub.localCheckpoint(eager=False)
+    on = ("m",)
+    codebook = _lloyd_update(_lloyd_assign(sub, _pq_seed_rows(sub), on), on)
+    return codebook, _lloyd_assign(sub, codebook, on)
 
 
-def _pq_update_rows(assigned: DataFrame) -> DataFrame:
-    """Codebook update fused to the broadcastable (m, cs) form (r13,
-    same fusion as _kmeans_update_row): the per-(m, c_id, dim)
-    aggregate (map-side partials over the corpus) is kept; the
-    regroup-to-(m, c_id) and collapse-to-broadcast aggregates fuse into
-    ONE groupBy(m) whose cv assembly runs as an in-plan expression over
-    k*sub_dim elements. comp values and the dim-sorted cv order are
-    exactly the old array_sort(collect_list) results."""
-    per_dim = (
-        assigned.select("m", "c_id", F.posexplode("sv").alias("pos", "val"))
-        .groupBy("m", "c_id", (F.col("pos") + 1).alias("dim"))
-        .agg(
-            (
-                F.sum(F.round("val", 6).cast("decimal(18,6)")).cast("double")
-                / F.count("*")
-            ).alias("comp")
-        )
-    )
-    return (
-        per_dim.groupBy("m")
-        .agg(F.collect_list(F.struct("c_id", "dim", "comp")).alias("flat"))
-        .select(
-            "m",
-            F.expr(
-                "transform(array_sort(array_distinct(transform(flat, s -> s.c_id))), "
-                "cid -> named_struct('c_id', cid, 'cv', "
-                "transform(array_sort(filter(flat, s -> s.c_id = cid)), s -> s.comp)))"
-            ).alias("cs"),
-        )
+def _pq_codes(final: DataFrame) -> DataFrame:
+    """Per-vector code roll-up of a PQ assignment: (vec_id, code_0 ..
+    code_{PQ_M-1}), the row layout the index layouts persist."""
+    return final.groupBy("vec_id").agg(
+        *[
+            F.max(F.when(F.col("m") == i, F.col("c_id"))).alias(f"code_{i}")
+            for i in range(PQ_M)
+        ]
     )
 
 
@@ -1357,14 +1316,7 @@ def _pq_codebook_frame(cents_rows: DataFrame) -> DataFrame:
 
 
 def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir).select("vec_id", "v")
-    # lazy checkpoint: the subvector table feeds the seed selection, the
-    # training round, and the final assignment — re-derived per
-    # reference otherwise
-    sub = _pq_subvecs(emb).localCheckpoint(eager=False)
-    cents = _pq_seed_rows(sub)
-    trained = _pq_update_rows(_pq_assign_step_row(sub, cents))
-    final = _pq_assign_step_row(sub, trained)
+    _, final = _pq_train(_pq_subvecs(_emb(spark, sf_dir).select("vec_id", "v")))
     # per-vector rollup: codes in subspace order; the error fold runs in
     # the same m-order in both engines (sorted array left-fold, never a
     # partition-order SUM over doubles). Codes emit as one
@@ -1509,7 +1461,7 @@ def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook = spark.read.parquet(str(_Path(paths["pq"]) / "codebook"))
     qsub = _pq_subvecs(
         _emb(spark, sf_dir).filter(F.col("vec_id") < N_QUERY_VECS).select("vec_id", "v")
-    ).select(F.col("vec_id").alias("q_id"), "m", F.col("sv").alias("qsv"))
+    ).select(F.col("vec_id").alias("q_id"), "m", F.col("v").alias("qsv"))
     # r12 (guide §2.4/§3.1): ONE broadcast of a per-query
     # (m, c_id) -> d lookup MAP crossed with the codes scan replaces
     # the old 4 chained per-subspace broadcast joins (each re-planned
@@ -1895,7 +1847,7 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-12: the centroid was ONE aggregate with EMBED_DIM=64 parallel
     # decimal sum columns — the exact codegen-blowup shape the round-6
     # kmeans gotcha records. The posexplode + per-dim aggregate + array
-    # reassembly shape (kmeans_assign's _kmeans_update_row does the same
+    # reassembly shape (the k-means update _lloyd_update does the same
     # per centroid) computes the SAME order-independent decimal means;
     # interleaved A/B at sf0.1: min 3.10 -> 1.01 s, identical output rows.
     per_dim = (
@@ -2322,11 +2274,7 @@ ORACLE["ivf_balance_report"] = _ivf_balance_report_sql()
 
 
 def pq_distortion_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir).select("vec_id", "v")
-    sub = _pq_subvecs(emb).localCheckpoint(eager=False)
-    cents = _pq_seed_rows(sub)
-    trained = _pq_update_rows(_pq_assign_step_row(sub, cents))
-    final = _pq_assign_step_row(sub, trained)
+    _, final = _pq_train(_pq_subvecs(_emb(spark, sf_dir).select("vec_id", "v")))
     return (
         final.groupBy("m", "c_id")
         .agg(

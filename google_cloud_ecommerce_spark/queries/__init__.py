@@ -67,38 +67,44 @@ def _modules():
 # Round-12 rotation (VERDICT r11 "next round" #5): CORRECTNESS_r11
 # landed 50/50 green and the driver-green union is 291/291 — the
 # never-checked tail is EMPTY, so every slot is a DOCUMENTED re-check.
-# Slate composition (round 12 is an optimization round: re-checks are
-# the queries whose plans were rewritten, then strictly oldest
-# evidence):
-# 12 re-checks whose code changed in round-12 optimization commits —
-# curation_funnel_v2 (one-pass spine), corpus_to_training_batches +
-# pretraining_corpus_prep (digest-window keeper), embedding_outliers
-# (posexplode centroid), skipgram_pairs + skipgram_pmi (zip_with
-# slices), schema_evolution_read (overlapped fixture writes),
-# hybrid_search_rrf + corpus_drift (full-outer joins fused to
-# union/conditional aggregates), pagerank_categories (single-row
-# integer rounds), vocab_prune_coverage (fused totals),
-# semdedup_clusters (pair stage SHUFFLE_HASH);
+# Slate composition (re-checks are the queries whose plans were
+# rewritten, then strictly oldest evidence):
+# 5 re-checks whose trainers were rewritten since their last CORRECTNESS row
+# (r13 one-row Lloyd state, then the shared _lloyd_assign/_lloyd_update
+# kernels with _kmeans_train/_pq_train): similarity_pq_topk,
+# similarity_ivfpq_topk, pq_encode, pq_distortion_report, kmeans_assign.
+# They took slots 1-5 from curation_funnel_v2, corpus_to_training_batches,
+# pretraining_corpus_prep, embedding_outliers and skipgram_pairs, whose
+# round-12 code changes are green in CORRECTNESS_r12 and r13;
+# 7 re-checks whose code changed in round-12 optimization commits —
+# skipgram_pmi (zip_with slices), schema_evolution_read (overlapped
+# fixture writes), hybrid_search_rrf + corpus_drift (full-outer joins
+# fused to union/conditional aggregates), pagerank_categories
+# (single-row integer rounds), vocab_prune_coverage (fused totals),
+# semdedup_clusters (pair stage SHUFFLE_HASH; its k-means now runs on
+# _kmeans_train too);
 # 5 re-checks routed through the round-12 manifest-layer hardening
 # (empty-diff change feed, claim fencing, temporal stats bounds,
 # retryable rebase): lakehouse_change_feed, streaming_version_feed,
 # lakehouse_pruned_read, lakehouse_append_ingest,
 # streaming_manifest_ingest;
 # tpch_q1_pricing_summary as the cross-round canary;
-# then strictly oldest evidence: the 19 remaining r05-last names
-# (rolling_median_daily_value onward — skipgram_pairs/pmi already
-# appear above as code-changed), then the first 15 of the 44 r06-last
-# names alphabetically, skipping the three already in the
-# code-changed group (corpus_to_training_batches, hybrid_search_rrf,
+# then strictly oldest evidence: 18 of the 19 r05-last names
+# (rolling_median_daily_value onward — skipgram_pmi already appears
+# above as code-changed; skipgram_pairs left with the five above),
+# then the first 15 of the 44 r06-last
+# names alphabetically, skipping the three that held code-changed
+# slots (corpus_to_training_batches, hybrid_search_rrf,
 # pretraining_corpus_prep). Every name has an oracle;
 # tests/test_registry.py pins the slate and the no-wasted-slot rule.
 PRIORITY: tuple[str, ...] = (
-    # --- 12 re-checks: code changed in round-12 commits ---
-    "curation_funnel_v2",
-    "corpus_to_training_batches",
-    "pretraining_corpus_prep",
-    "embedding_outliers",
-    "skipgram_pairs",
+    # --- 5 re-checks: Lloyd trainers rewritten since the last check ---
+    "similarity_pq_topk",
+    "similarity_ivfpq_topk",
+    "pq_encode",
+    "pq_distortion_report",
+    "kmeans_assign",
+    # --- 7 re-checks: code changed in round-12 commits ---
     "skipgram_pmi",
     "schema_evolution_read",
     "hybrid_search_rrf",

@@ -140,10 +140,12 @@ def test_scan_compaction_parallelizes_the_scan(spark, tmp_path, monkeypatch):
     try:
         df = load_table(spark, "/root/testdata/sf0.1", "lineitem")
         # The single-row-group original decodes in exactly 1 task; the
-        # mirror splits at the 1 MB openCostInBytes floor (~15 splits
-        # for sf0.1 lineitem) — assert genuine fan-out, not a fixed
-        # core count the floor deliberately trades away.
-        assert df.rdd.getNumPartitions() >= 8
+        # mirror splits at max(1 MB openCostInBytes, bytes /
+        # defaultParallelism) — ~15 splits for sf0.1 lineitem on a
+        # many-core machine, about one per core on a small one. Genuine
+        # fan-out is at least one split per core, up to 8.
+        parallelism = spark.sparkContext.defaultParallelism
+        assert df.rdd.getNumPartitions() >= min(8, parallelism)
     finally:
         catalog._PLAN_CACHE.clear()  # don't leak tmp-cache plans to other tests
 

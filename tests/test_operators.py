@@ -260,7 +260,7 @@ def test_kmeans_assign_properties(spark, sf_smoke):
     from google_cloud_ecommerce_spark.operators.similarity import (
         KMEANS_K,
         _emb,
-        _kmeans_assign_step,
+        _lloyd_assign,
         kmeans_assign,
     )
 
@@ -273,12 +273,12 @@ def test_kmeans_assign_properties(spark, sf_smoke):
     # the update step must actually move centroids: assignments after
     # two Lloyd rounds differ from the nearest-initial-seed partition
     emb = _emb(spark, sf_smoke).select("vec_id", "v")
-    seeds = emb.filter(SF.col("vec_id") < KMEANS_K).select(
-        SF.col("vec_id").alias("c_id"), SF.col("v").alias("cv")
+    seeds = emb.filter(SF.col("vec_id") < KMEANS_K).agg(
+        SF.collect_list(
+            SF.struct(SF.col("vec_id").alias("c_id"), SF.col("v").alias("cv"))
+        ).alias("cs")
     )
-    initial = {
-        r.vec_id: r.c_id for r in _kmeans_assign_step(emb, seeds).collect()
-    }
+    initial = {r.vec_id: r.c_id for r in _lloyd_assign(emb, seeds).collect()}
     moved = sum(1 for r in out if initial[r.vec_id] != r.cluster_id)
     assert moved > 0
     # deterministic across executions
@@ -286,6 +286,81 @@ def test_kmeans_assign_properties(spark, sf_smoke):
     assert {(r.vec_id, r.cluster_id, r.sq_dist) for r in out} == {
         (r.vec_id, r.cluster_id, r.sq_dist) for r in again
     }
+
+
+def _synthetic_assigned(spark, n, k, dim, on=()):
+    """(vec_id, *on, v, c_id) frame: deterministic dim-length vectors,
+    n points spread over k non-contiguous centroid ids (3 * (id % k)),
+    one copy per subspace m in 0..3 when on=("m",)."""
+    df = spark.range(n).select(
+        F.col("id").alias("vec_id"), ((F.col("id") % k) * 3).alias("c_id")
+    )
+    if on:
+        df = df.withColumn("m", F.explode(F.sequence(F.lit(0), F.lit(3))))
+    v = (
+        f"transform(sequence(1, {dim}), j -> "
+        f"CAST(pmod(hash(vec_id, {'m, ' if on else ''}j), 2000003) AS DOUBLE) "
+        f"/ 1000.0 - 1000.0)"
+    )
+    return df.select("vec_id", *on, F.expr(v).alias("v"), "c_id")
+
+
+@pytest.mark.parametrize(
+    "n,k,dim,on",
+    [(400, 4, 64, ()), (200, 4, 16, ("m",)), (6000, 2000, 8, ())],
+    ids=["kmeans_k4_d64", "pq_m4_k4_d16", "k2000_d8"],
+)
+def test_lloyd_update_matches_per_centroid_reference(spark, n, k, dim, on):
+    """_lloyd_update's sort-and-stride assembly equals a plain
+    groupBy(*on, c_id) + array_sort(collect_list(struct(dim, comp)))
+    reference row for row, with cs in ascending c_id order."""
+    assigned = _synthetic_assigned(spark, n, k, dim, on)
+    got = (
+        similarity._lloyd_update(assigned, on)
+        .select(*on, F.posexplode("cs").alias("i", "c"))
+        .select(*on, "i", "c.c_id", "c.cv")
+        .collect()
+    )
+    ref = (
+        assigned.select(*on, "c_id", F.posexplode("v").alias("pos", "val"))
+        .groupBy(*on, "c_id", (F.col("pos") + 1).alias("dim"))
+        .agg(
+            (
+                F.sum(F.round("val", 6).cast("decimal(18,6)")).cast("double")
+                / F.count("*")
+            ).alias("comp")
+        )
+        .groupBy(*on, "c_id")
+        .agg(
+            F.expr(
+                "transform(array_sort(collect_list(struct(dim, comp))), s -> s.comp)"
+            ).alias("cv")
+        )
+        .collect()
+    )
+    key = lambda r: (*[r[o] for o in on], r.c_id)  # noqa: E731
+    want = {key(r): r.cv for r in ref}
+    assert len(want) == k * (4 if on else 1)
+    assert all(len(cv) == dim for cv in want.values())
+    assert {key(r): r.cv for r in got} == want
+    # each group's cs lists its centroids in ascending c_id order
+    ordered = sorted(got, key=lambda r: (*[r[o] for o in on], r.i))
+    assert [key(r) for r in ordered] == sorted(want)
+
+
+def test_lloyd_update_plan_has_no_per_centroid_rescan(spark):
+    """The update assembles centroids with one sort plus stride slices;
+    a filter(...) lambda over the flat array (one rescan per centroid,
+    O(k^2 * dim) in a single task) must not come back."""
+    for on in ((), ("m",)):
+        plan = (
+            similarity._lloyd_update(_synthetic_assigned(spark, 40, 4, 8, on), on)
+            ._jdf.queryExecution()
+            .optimizedPlan()
+            .toString()
+        )
+        assert "array_sort(" in plan
+        assert "filter(" not in plan
 
 
 def test_embedding_quantize_error_bound(spark, sf_smoke):

@@ -50,18 +50,23 @@ _FAMILY_ANCHORS = {
 # Round-12 window slate (VERDICT r11 directive #5): CORRECTNESS_r11
 # landed 50/50 and the driver-green union is 291/291 — the
 # never-checked tail is EMPTY, so ALL 50 slots are DOCUMENTED
-# re-checks: the 12 queries whose plans were rewritten by round-12
+# re-checks: the 5 queries whose k-means/PQ trainers were rewritten
+# (r13 one-row Lloyd state, then one shared Lloyd trainer) and have no
+# CORRECTNESS row since, 7 more whose plans were rewritten by round-12
 # optimization commits, the 5 entries routed through the round-12
 # manifest-layer hardening (empty-diff change feed, claim fencing,
 # temporal stats bounds, retryable rebase), the tpch_q1 canary, then
-# strictly oldest evidence (the 19 remaining r05-last names — two of
-# which, skipgram_pairs/pmi, double as code-changed — then the first
-# 15 r06-last names alphabetically, skipping the three already in the
-# code-changed group). An undocumented re-check is still a wasted slot.
+# strictly oldest evidence (18 of the 19 r05-last names — one of
+# which, skipgram_pmi, doubles as code-changed — then the first 15
+# r06-last names alphabetically, skipping the three that held
+# code-changed slots). The trainer re-checks replaced five round-12
+# re-checks that CORRECTNESS_r12 and r13 already show green. An
+# undocumented re-check is still a wasted slot.
 _RECHECK_SLATE = {
+    # k-means / PQ trainers rewritten since their last CORRECTNESS row
+    "similarity_pq_topk", "similarity_ivfpq_topk", "pq_encode",
+    "pq_distortion_report", "kmeans_assign",
     # round-12 optimization code changes
-    "curation_funnel_v2", "corpus_to_training_batches",
-    "pretraining_corpus_prep", "embedding_outliers", "skipgram_pairs",
     "skipgram_pmi", "schema_evolution_read", "hybrid_search_rrf",
     "corpus_drift", "pagerank_categories", "vocab_prune_coverage",
     "semdedup_clusters",
