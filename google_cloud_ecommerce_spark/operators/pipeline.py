@@ -1966,10 +1966,10 @@ ORACLE["jsonl_roundtrip"] = JSONL_ROUNDTRIP_SQL
 # lengths land in the same batch; the per-batch report IS the evidence.
 #
 # Scale shape: the global order comes from range_partition_rank
-# (repartitionByRange + per-partition ids + broadcast prefix offsets —
-# operators/ranking.py), never an unpartitioned window; the batch id is
-# closed-form rank arithmetic and the report is one hash aggregate on
-# batch_id. The oracle expresses the same thing with the window form
+# (repartitionByRange + per-partition ids + prefix offsets collected
+# from the per-partition counts — operators/ranking.py), never an
+# unpartitioned window; the batch id is closed-form rank arithmetic
+# and the report is one hash aggregate on batch_id. The oracle expresses the same thing with the window form
 # (oracles don't need the scale posture, they need the same values).
 # ---------------------------------------------------------------------------
 

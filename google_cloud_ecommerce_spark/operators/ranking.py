@@ -10,20 +10,24 @@ two-pass construction here keeps every stage parallel:
      keys — a real distributed sort (sampled range boundaries), each
      partition sorted locally.
   2. ``monotonically_increasing_id`` stamps (partition_id << 33 |
-     local_row_number); per-partition counts are tiny (one row per
-     partition), so the exclusive prefix-sum over them is a broadcast
-     triangular join, and global rank = prefix_offset + local id.
+     local_row_number); the per-partition counts (one row per
+     partition, bounded by the n_parts knob) are collected to the
+     driver, turned into exclusive offsets in Python and added back as
+     ``element_at(array(<offset literals>), pid + 1)`` — global rank =
+     offset + local id, with no join and an exact row count N.
   3. The tile index is closed-form ntile arithmetic over (rank, N):
      the first N % t tiles hold N DIV t + 1 rows.
 
 ``localCheckpoint`` pins the sampled range boundaries and assigned ids
 so the two downstream consumers (counts, ranked rows) agree — without
-it, recomputation could resample boundaries and re-deal ids.
+it, recomputation could resample boundaries and re-deal ids. Every
+rank is then a deterministic projection of that one pinned frame.
 
 The same machinery (with the tile step swapped for a plain offset add)
-backs ``record_id`` (queries/reference.py) and was proven
-value-identical to the window form by ``lineitem_quartiles_distributed``
-whose oracle IS the window-ntile SQL. Extracted in round 4 so
+backs ``record_id`` (queries/reference.py) and the stream replay
+chunks (streaming/replay.py), and was proven value-identical to the
+window form by ``lineitem_quartiles_distributed`` whose oracle IS the
+window-ntile SQL. Extracted in round 4 so
 ``lineitem_quartiles`` and ``decile_lift_chart`` — the last two
 global-window plans in the repo — could drop it in (VERDICT r3 #3).
 """
@@ -32,6 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 # monotonically_increasing_id layout: partition id in the high bits,
 # per-partition record number in the low 33.
@@ -39,34 +44,30 @@ _MID_RECORD_BITS = 33
 _MID_MASK = (1 << _MID_RECORD_BITS) - 1
 
 
-def _partition_exclusive_offsets(
-    per_partition: DataFrame, value_col: str, out_col: str
-) -> DataFrame:
-    """(__pid, value) -> (__pid, ``out_col`` = sum of value over all
-    EARLIER partition ids) via the triangular broadcast θ-join — one
-    row per PARTITION on both sides (bounded by the n_parts knob), so
-    the quadratic pair space and the broadcast are never data-sized.
-    The one definition shared by the global-rank and prefix-sum
-    constructions."""
-    earlier = per_partition.select(
-        F.col("__pid").alias("__e_pid"), F.col(value_col).alias("__e_v")
-    )
-    return (
-        per_partition.join(
-            F.broadcast(earlier), F.col("__e_pid") < F.col("__pid"), "left"
-        )
-        .groupBy("__pid")
-        .agg(F.coalesce(F.sum("__e_v"), F.lit(0)).alias(out_col))
-    )
+def _collected_offsets(
+    ordered: DataFrame, pid: Column, agg: Column
+) -> tuple[Column, int]:
+    """Collect ``agg`` per range partition of the PINNED ``ordered``
+    frame (one row per non-empty partition — bounded by the n_parts
+    knob, never by the data) and return (``element_at`` of the
+    exclusive prefix offsets by ``pid``, grand total). The offsets ride
+    back into the plan as one array literal: no broadcast, no join."""
+    per_part = dict(ordered.groupBy(pid.alias("__p")).agg(agg).collect())
+    offsets, total = [], 0
+    for p in range(max(per_part, default=0) + 1):
+        offsets.append(total)
+        total += per_part.get(p) or 0
+    arr = F.expr("array(" + ", ".join(f"{o}L" for o in offsets) + ")")
+    return F.element_at(arr, (pid + 1).cast("int")), total
 
 
 def _ranked(
     df: DataFrame,
     order_exprs: list[Column | str],
     n_parts: int | None,
-) -> DataFrame:
-    """The shared two-pass construction: returns ``df`` plus ``__r``
-    (0-based global rank over the total order) and ``__n_total``."""
+) -> tuple[DataFrame, int]:
+    """The shared two-pass construction: returns (``df`` plus ``__r``,
+    the 0-based global rank over the total order, and the row count)."""
     spark = df.sparkSession
     if n_parts is None:
         n_parts = max(2, spark.sparkContext.defaultParallelism)
@@ -76,21 +77,11 @@ def _ranked(
         .withColumn("__mid", F.monotonically_increasing_id())
         .localCheckpoint()  # pin sampled range boundaries + assigned ids
     )
-    with_pid = ordered.withColumn("__pid", F.shiftright("__mid", _MID_RECORD_BITS))
-    counts = with_pid.groupBy("__pid").agg(F.count("*").alias("__n"))
-    offsets = _partition_exclusive_offsets(counts, "__n", "__offset")
-    total = counts.agg(F.sum("__n").alias("__n_total"))
-    return (
-        with_pid.join(F.broadcast(offsets), "__pid")
-        .crossJoin(F.broadcast(total))
-        .withColumn(
-            "__r",
-            (F.col("__offset") + F.col("__mid").bitwiseAND(F.lit(_MID_MASK))).cast(
-                "long"
-            ),
-        )
-        .drop("__mid", "__pid", "__offset")
+    offset, n = _collected_offsets(
+        ordered, F.shiftright("__mid", _MID_RECORD_BITS), F.count("*")
     )
+    rank = offset + F.col("__mid").bitwiseAND(F.lit(_MID_MASK))
+    return ordered.withColumn("__r", rank.cast("long")).drop("__mid"), n
 
 
 def range_partition_rank(
@@ -103,11 +94,8 @@ def range_partition_rank(
     given by ``order_exprs`` — the window-free replacement for
     ``row_number() OVER (ORDER BY ...) - 1``. Same machinery as the
     ntile form; the order MUST be total for deterministic ranks."""
-    return (
-        _ranked(df, order_exprs, n_parts)
-        .withColumn(out_col, F.col("__r"))
-        .drop("__r", "__n_total")
-    )
+    ranked, _ = _ranked(df, order_exprs, n_parts)
+    return ranked.withColumn(out_col, F.col("__r")).drop("__r")
 
 
 def range_partition_prefix_sum(
@@ -117,20 +105,23 @@ def range_partition_prefix_sum(
     out_col: str = "prefix",
     n_parts: int | None = None,
 ) -> DataFrame:
-    """Add ``out_col`` = the EXCLUSIVE running sum of ``value_col`` over
-    the total order given by ``order_exprs`` — the scale-true
-    replacement for both ``SUM(v) OVER (ORDER BY ... ROWS BETWEEN
-    UNBOUNDED PRECEDING AND 1 PRECEDING)`` (an unpartitioned window:
-    one task sorts everything) and the triangular broadcast θ-join
-    (quadratic in the input and a whole-table broadcast). Shape:
+    """Add ``out_col`` = the EXCLUSIVE running sum of the INTEGRAL
+    ``value_col`` over the total order given by ``order_exprs`` — the
+    scale-true replacement for both ``SUM(v) OVER (ORDER BY ... ROWS
+    BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)`` (an unpartitioned
+    window: one task sorts everything) and the triangular broadcast
+    θ-join (quadratic in the input and a whole-table broadcast). Shape:
     range-partition on the order keys, running sum WITHIN each range
     partition via a window partitioned by the range id (parallel,
-    local sorts only), and a triangular broadcast join over the
-    per-partition sums — one row per PARTITION, never per input row —
-    for the cross-partition offsets. The order MUST be total for
-    deterministic sums. Used by the frequency-histogram prefix in
-    token_zipf_fit / vocab_prune_coverage when the histogram exceeds
-    the broadcast bound (operators/guards.hist_bytes_bound)."""
+    local sorts only), plus the cross-partition offsets collected from
+    the per-partition sums (one row per PARTITION, never per input
+    row). Integral only: the offsets are exact Python ints. The order
+    MUST be total for deterministic sums. Used by the frequency-histogram
+    prefix in token_zipf_fit / vocab_prune_coverage when the histogram
+    exceeds the broadcast bound (operators/guards.hist_bytes_bound)."""
+    dtype = df.schema[value_col].dataType
+    if not isinstance(dtype, IntegralType):
+        raise TypeError(f"{value_col} is {dtype}, not integral")
     spark = df.sparkSession
     if n_parts is None:
         n_parts = max(2, spark.sparkContext.defaultParallelism)
@@ -140,19 +131,14 @@ def range_partition_prefix_sum(
         .localCheckpoint()  # pin sampled range boundaries: the partition
         # sums and the per-row window must see the SAME assignment
     )
-    psums = ordered.groupBy("__pid").agg(F.sum(value_col).alias("__s"))
-    offsets = _partition_exclusive_offsets(psums, "__s", "__off")
+    offset, _ = _collected_offsets(ordered, F.col("__pid"), F.sum(value_col))
     w = (
         Window.partitionBy("__pid")
         .orderBy(*order_exprs)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     local = F.coalesce(F.sum(value_col).over(w), F.lit(0))
-    return (
-        ordered.join(F.broadcast(offsets), "__pid")
-        .withColumn(out_col, (F.col("__off") + local).cast("long"))
-        .drop("__pid", "__off")
-    )
+    return ordered.withColumn(out_col, (offset + local).cast("long")).drop("__pid")
 
 
 def range_partition_ntile(
@@ -167,16 +153,16 @@ def range_partition_ntile(
     for descending keys). The order MUST be total (include a unique
     tie-breaker) for deterministic tiles. No single-partition window —
     every stage is parallel; only per-partition counts (one row each)
-    are broadcast."""
-    ranked = _ranked(df, order_exprs, n_parts)
-    # ntile semantics: the first (N % t) tiles hold (N DIV t + 1) rows.
-    # When N < t the WHEN branch covers every row (CASE is lazy, so the
-    # DIV-by-zero ELSE arm never evaluates).
-    t = int(n_tiles)
-    tile = F.expr(
-        f"CASE WHEN __r < (__n_total % {t}) * (__n_total DIV {t} + 1) "
-        f"THEN __r DIV (__n_total DIV {t} + 1) + 1 "
-        f"ELSE (__r - (__n_total % {t}) * (__n_total DIV {t} + 1)) DIV (__n_total DIV {t}) "
-        f"     + (__n_total % {t}) + 1 END"
-    )
-    return ranked.withColumn(out_col, tile.cast("long")).drop("__n_total", "__r")
+    reach the driver."""
+    ranked, n = _ranked(df, order_exprs, n_parts)
+    # ntile semantics: the first (N % t) tiles hold (N DIV t + 1) rows;
+    # when N < t every row is its own tile.
+    q, r = divmod(n, int(n_tiles))
+    big = r * (q + 1)
+    tile = F.col("__r") + 1
+    if q:
+        tile = F.expr(
+            f"CASE WHEN __r < {big} THEN __r DIV {q + 1} "
+            f"ELSE (__r - {big}) DIV {q} + {r} END + 1"
+        )
+    return ranked.withColumn(out_col, tile.cast("long")).drop("__r")

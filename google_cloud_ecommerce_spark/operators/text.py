@@ -2288,9 +2288,10 @@ def _hist_exclusive_prefix(
         |hist| and broadcasts it — unbeatable while the histogram is
         provably tiny, an executor OOM + 10^13-pair blowup at 100 TB
         (|hist| <= sqrt(2 * tokens) ~ 7M rows there);
-      - range_partition_prefix_sum (0.92 / 0.73 s locally): one range
-        shuffle of the sub-linear histogram, per-partition window,
-        per-PARTITION offsets broadcast — linear at any scale. The
+      - range_partition_prefix_sum (0.92 / 0.73 s locally, measured
+        with the old broadcast offsets): one range shuffle of the
+        sub-linear histogram, per-partition window, per-PARTITION sums
+        collected to the driver as offsets — linear at any scale. The
         ~0.2 s local delta is the extra shuffle + checkpoint barrier;
         kept as the above-bound path only."""
     if broadcast_threshold is None:

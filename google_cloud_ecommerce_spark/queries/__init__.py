@@ -83,6 +83,11 @@ def _modules():
 # (single-row integer rounds), vocab_prune_coverage (fused totals),
 # semdedup_clusters (pair stage SHUFFLE_HASH; its k-means now runs on
 # _kmeans_train too);
+# 3 re-checks whose global rank now comes from partition offsets
+# collected to the driver (operators/ranking.py, no broadcast θ-join):
+# decile_lift_chart, lineitem_quartiles_distributed, record_id. They
+# took the last three r06-last slots (hard_negative_mining,
+# ivf_balance_report, label_centroids);
 # 5 re-checks routed through the round-12 manifest-layer hardening
 # (empty-diff change feed, claim fencing, temporal stats bounds,
 # retryable rebase): lakehouse_change_feed, streaming_version_feed,
@@ -92,10 +97,11 @@ def _modules():
 # then strictly oldest evidence: 18 of the 19 r05-last names
 # (rolling_median_daily_value onward — skipgram_pmi already appears
 # above as code-changed; skipgram_pairs left with the five above),
-# then the first 15 of the 44 r06-last
+# then 12 of the first 15 of the 44 r06-last
 # names alphabetically, skipping the three that held code-changed
 # slots (corpus_to_training_batches, hybrid_search_rrf,
-# pretraining_corpus_prep). Every name has an oracle;
+# pretraining_corpus_prep) and the three that gave way to the rank
+# re-checks above. Every name has an oracle;
 # tests/test_registry.py pins the slate and the no-wasted-slot rule.
 PRIORITY: tuple[str, ...] = (
     # --- 5 re-checks: Lloyd trainers rewritten since the last check ---
@@ -112,6 +118,10 @@ PRIORITY: tuple[str, ...] = (
     "pagerank_categories",
     "vocab_prune_coverage",
     "semdedup_clusters",
+    # --- 3 re-checks: global rank now from collected partition offsets ---
+    "decile_lift_chart",
+    "lineitem_quartiles_distributed",
+    "record_id",
     # --- 5 re-checks: routed through the r12 manifest hardening ---
     "lakehouse_change_feed",
     "streaming_version_feed",
@@ -138,7 +148,7 @@ PRIORITY: tuple[str, ...] = (
     "streaming_view_purchase_full_outer",
     "tokenizer_fertility",
     "user_activity_bitmap",
-    # --- 15 re-checks: next-oldest evidence (r06-last), alphabetical ---
+    # --- 12 re-checks: next-oldest evidence (r06-last), alphabetical ---
     "balanced_group_sample",
     "corpus_mixture_sample",
     "corpus_quality_dashboard",
@@ -150,9 +160,6 @@ PRIORITY: tuple[str, ...] = (
     "doc_tokens_udtf",
     "embedding_dim_stats",
     "expanded_keyword_search",
-    "hard_negative_mining",
-    "ivf_balance_report",
-    "label_centroids",
     "length_bucket_batches",
 )
 

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from google_cloud_ecommerce_spark.catalog import load_table
+from google_cloud_ecommerce_spark.operators.ranking import range_partition_rank
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30-minute inactivity gap, in microseconds
 
@@ -276,7 +277,8 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # version of the reference's per-chunk pandas index
 # (write_session_batch.py:172-173), built scale-true. A global
 # row_number window is a single-partition sort; instead this is the
-# two-pass partition-offset construction:
+# two-pass partition-offset construction of operators/ranking.py
+# (range_partition_rank):
 #
 #   1. range-partition on the order key and sort within partitions —
 #      partitions are globally ordered, each sorts in parallel;
@@ -285,9 +287,9 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 #      One localCheckpoint pins the sampled range boundaries and the
 #      assigned ids so both passes see identical partitions (the range
 #      partitioner's boundary sampling is not re-run per consumer).
-#   2. per-partition counts -> cumulative offsets. The offset table has
-#      one row per partition, so the running-sum window over it is a
-#      post-aggregate triviality, and it broadcasts back onto the data.
+#   2. per-partition counts -> exclusive offsets. The count table has
+#      one row per partition, so it is collected to the driver and the
+#      offsets ride back into the plan as an array literal.
 #
 # record_id = offset[pid] + local. Dense, deterministic, no global
 # sort; the only full shuffle is the range repartition the total order
@@ -295,39 +297,11 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # monotonically_increasing_id alone (no shuffle at all).
 # ---------------------------------------------------------------------------
 
-_MID_LOCAL_MASK = (1 << 33) - 1  # monotonically_increasing_id: pid<<33 | local
-
 
 def record_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir).select("ts", "event_id", "event_type")
-    n_parts = max(2, spark.sparkContext.defaultParallelism)
-    ordered = (
-        ev.repartitionByRange(n_parts, "ts", "event_id")
-        .sortWithinPartitions("ts", "event_id")
-        .withColumn("mid", F.monotonically_increasing_id())
-        .localCheckpoint()
-    )
-    with_pid = ordered.withColumn("pid", F.shiftright("mid", 33))
-    counts = with_pid.groupBy("pid").agg(F.count("*").alias("n"))
-    # prefix sums over the one-row-per-partition count table via a
-    # triangular broadcast join (sum of strictly-lower pids) — ≤ a few
-    # hundred rows even on a large cluster, and no unpartitioned window
-    # anywhere in the plan
-    earlier = counts.select(F.col("pid").alias("e_pid"), F.col("n").alias("e_n"))
-    offsets = (
-        counts.join(F.broadcast(earlier), F.col("e_pid") < F.col("pid"), "left")
-        .groupBy("pid")
-        .agg(F.coalesce(F.sum("e_n"), F.lit(0)).alias("offset"))
-    )
-    return (
-        with_pid.join(F.broadcast(offsets), "pid")
-        .select(
-            (F.col("offset") + (F.col("mid").bitwiseAND(F.lit(_MID_LOCAL_MASK))))
-            .cast("long")
-            .alias("record_id"),
-            "event_id",
-            "event_type",
-        )
+    return range_partition_rank(ev, ["ts", "event_id"], out_col="record_id").select(
+        "record_id", "event_id", "event_type"
     )
 
 

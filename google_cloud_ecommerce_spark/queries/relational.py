@@ -267,7 +267,7 @@ def first_shipment_per_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 # by the unique line key). Round 4 retired the `ntile(4) OVER (ORDER BY
 # ...)` single-partition window this used to carry (the one global-sort
 # plan in the suite, VERDICT r3 #3): it now delegates to the
-# range-partition + broadcast-prefix-offset construction below, which
+# range-partition + collected-prefix-offset construction below, which
 # the shared oracle (the window-ntile SQL) proves value-identical. The
 # plan lint in tests/test_plans.py now rejects any registry entry with
 # an unpartitioned WindowExec over a data-sized input.
@@ -789,7 +789,7 @@ ORACLE["return_excess_orders"] = RETURN_EXCESS_ORDERS_SQL
 # lineitem_quartiles built scale-true: instead of the single-partition
 # ntile window, global rank comes from the two-pass partition-offset
 # construction (range partition + in-partition sort + per-partition
-# counts -> broadcast prefix offsets, exactly record_id's machinery),
+# counts -> collected prefix offsets, exactly record_id's machinery),
 # and the quartile is computed from the rank with ntile's
 # remainder-to-front arithmetic. The oracle IS the window-ntile SQL —
 # proving the distributed construction is value-identical to the

@@ -954,7 +954,7 @@ ORACLE["ab_test_cuped"] = AB_TEST_CUPED_SQL
 # CUMULATIVE share of total purchase revenue. A concentrated curve
 # (top decile holding most of the revenue) is what justifies targeting
 # — the classic lift/gains analysis. Deciles come from the
-# range-partition + broadcast-prefix-offset ntile (operators/
+# range-partition + collected-prefix-offset ntile (operators/
 # ranking.py) over the PER-USER AGGREGATE — round 4 retired the global
 # `ntile(10) OVER (ORDER BY ...)` window this carried (VERDICT r3 #3):
 # even over the reduced user dimension, an unpartitioned window is one

@@ -453,7 +453,7 @@ def _safe_register(spark: SparkSession) -> None:
 def wire_format_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch face: equality filter pushed INTO the Python reader (rows
     pruned at parse time), then a typed aggregate per day. The result is
-    pinned executor-side (parquet write + re-read, never a driver
+    pinned executor-side (an eager localCheckpoint, never a driver
     collect) before the temp wire dir is deleted — the same
     ``_pin_result`` discipline the streaming entries use."""
     import shutil

@@ -50,20 +50,13 @@ from google_cloud_ecommerce_spark.streaming.replay import (
 
 
 def _pin_result(df: DataFrame) -> DataFrame:
-    """Materialize a bounded streaming result EXECUTOR-side: one
-    parquet write to a fresh result dir (cleaned at process exit),
-    read back as a plain scan. Replaces the old driver-side
-    ``createDataFrame(df.collect(), schema)`` pinning — the result
-    never rides through the driver, so the harness shape still holds
-    when the "bounded" result is millions of rows, while the replay /
-    checkpoint temp dirs it was derived from can be removed."""
-    import atexit
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="spark_graft_stream_result_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    df.write.mode("overwrite").parquet(out)
-    return df.sparkSession.read.parquet(out)
+    """Materialize a bounded streaming result EXECUTOR-side: one eager
+    ``localCheckpoint`` into the block managers, lineage cut. The result
+    never rides through the driver (the harness shape holds when the
+    "bounded" result is millions of rows), the replay / checkpoint /
+    sink temp dirs it was derived from can be removed, and no result
+    directory is written — the blocks go when the frame does."""
+    return df.localCheckpoint(eager=True)
 
 
 def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
@@ -81,7 +74,12 @@ def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
     finally:
         if q.isActive:  # pragma: no cover - defensive
             q.stop()
-    return stream_df.sparkSession.table(name)
+    spark = stream_df.sparkSession
+    result = spark.table(name)
+    # the frame holds the sink's plan; the view would otherwise pile up
+    # one uniquely named entry per run for the session's lifetime
+    spark.catalog.dropTempView(name)
+    return result
 
 
 # ---------------------------------------------------------------------------

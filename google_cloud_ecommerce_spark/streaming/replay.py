@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from google_cloud_ecommerce_spark.catalog import load_table
-from google_cloud_ecommerce_spark.operators.ranking import range_partition_rank
+from google_cloud_ecommerce_spark.operators.ranking import _ranked
 
 EVENTS_DDL = (
     "event_id bigint, ts timestamp, user_id bigint, "
@@ -42,26 +42,27 @@ def write_replay_dir(
     the next chunk (duplicate delivery).
 
     Scale shape (VERDICT r5 "what's wrong" #2): the global event order
-    comes from the window-free ``range_partition_rank`` (range shuffle +
-    broadcast per-partition offsets), never ``row_number() OVER ()`` on
-    an unpartitioned window; all chunks land in ONE partitioned write
-    instead of an n_files-iteration driver loop that re-plans the sort
-    per chunk. The lazy localCheckpoint is load-bearing: the range
-    partitioner samples boundaries per evaluation, and the chunk and
-    overlap-duplicate branches of the union must read one materialized
-    numbering, not two divergent ones."""
+    comes from the window-free ``_ranked`` (range shuffle, one pinned
+    localCheckpoint, per-partition counts collected as offsets), never
+    ``row_number() OVER ()`` on an unpartitioned window; all chunks
+    land in ONE partitioned write instead of an n_files-iteration driver
+    loop that re-plans the sort per chunk. The rank also yields the row
+    count, and every numbering is a deterministic projection of the one
+    pinned frame, so the chunk and overlap-duplicate branches of the
+    union read the same blocks: 7 Spark jobs in all (checkpoint 3,
+    offsets 2, write 2). ``file_id = rn * n_files / n`` gives every
+    chunk an exact row share — never a sampled range partition per
+    chunk, whose sizes would change from call to call."""
     out = tempfile.mkdtemp(prefix="spark_graft_replay_")
     events = load_table(spark, sf_dir, "events")
-    n = events.count()
+    ranked, n = _ranked(events, ["ts", "event_id"], n_files)
     if n == 0:
         raise ValueError(f"events table under {sf_dir!r} is empty: nothing to replay")
     # tiny inputs: never demand more chunks than rows (an empty file_id
     # partition is not a pacing signal, it's a missing part file)
     n_files = min(n_files, n)
-    numbered = (
-        range_partition_rank(events, ["ts", "event_id"], out_col="rn", n_parts=n_files)
-        .withColumn("file_id", (F.col("rn") * n_files / F.lit(n)).cast("int"))
-        .localCheckpoint(eager=False)
+    numbered = ranked.withColumnRenamed("__r", "rn").withColumn(
+        "file_id", (F.col("rn") * n_files / F.lit(n)).cast("int")
     )
     chunks = numbered
     if overlap_every:

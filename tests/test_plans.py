@@ -448,13 +448,14 @@ def test_quantize_drift_bpe_plan_shapes(spark, sf_smoke):
 
 def test_distributed_quartiles_has_no_window(spark, sf_smoke):
     """The scale-true ntile must plan ZERO window operators (the global
-    sort is replaced by range partition + broadcast prefix offsets) and
-    keep every offset/total join broadcast."""
+    sort is replaced by range partition + collected prefix offsets) and
+    no join at all: the per-partition offsets and the total ride into
+    the plan as literals, so nothing is joined back onto the data."""
     from google_cloud_ecommerce_spark.queries import relational
 
     plan = plan_of(relational.lineitem_quartiles_distributed(spark, sf_smoke))
     assert "Window" not in plan
-    assert "BroadcastHashJoin" in plan
+    assert "Join" not in plan
     assert "CartesianProduct" not in plan
 
 

@@ -60,8 +60,11 @@ _FAMILY_ANCHORS = {
 # which, skipgram_pmi, doubles as code-changed — then the first 15
 # r06-last names alphabetically, skipping the three that held
 # code-changed slots). The trainer re-checks replaced five round-12
-# re-checks that CORRECTNESS_r12 and r13 already show green. An
-# undocumented re-check is still a wasted slot.
+# re-checks that CORRECTNESS_r12 and r13 already show green; the three
+# queries whose global rank now comes from collected partition offsets
+# (decile_lift_chart, lineitem_quartiles_distributed, record_id) took
+# the last three r06-last slots. An undocumented re-check is still a
+# wasted slot.
 _RECHECK_SLATE = {
     # k-means / PQ trainers rewritten since their last CORRECTNESS row
     "similarity_pq_topk", "similarity_ivfpq_topk", "pq_encode",
@@ -70,6 +73,8 @@ _RECHECK_SLATE = {
     "skipgram_pmi", "schema_evolution_read", "hybrid_search_rrf",
     "corpus_drift", "pagerank_categories", "vocab_prune_coverage",
     "semdedup_clusters",
+    # global rank now from collected partition offsets
+    "decile_lift_chart", "lineitem_quartiles_distributed", "record_id",
     # routed through the r12 manifest hardening
     "lakehouse_change_feed", "streaming_version_feed",
     "lakehouse_pruned_read", "lakehouse_append_ingest",
@@ -85,12 +90,12 @@ _RECHECK_SLATE = {
     "streaming_rate_limit", "streaming_similarity_topk",
     "streaming_two_level_window", "streaming_view_purchase_full_outer",
     "tokenizer_fertility", "user_activity_bitmap",
-    # next-oldest evidence: last driver row is r06 (first 15, alphabetical)
+    # next-oldest evidence: last driver row is r06 (12 of the first 15,
+    # alphabetical; the other three gave way to the rank re-checks)
     "balanced_group_sample", "corpus_mixture_sample",
     "corpus_quality_dashboard", "corpus_stats", "dedup_embedding_cosine",
     "dedup_segments", "dedup_simhash", "doc_fingerprint",
     "doc_tokens_udtf", "embedding_dim_stats", "expanded_keyword_search",
-    "hard_negative_mining", "ivf_balance_report", "label_centroids",
     "length_bucket_batches",
 }
 

@@ -43,10 +43,10 @@ def test_overlap_injects_duplicates(spark, sf_smoke):
 
 
 def test_stream_equals_batch_daily_events(spark, sf_smoke):
-    stream_rows = {
-        (r.day, r.event_type): r.n_events
-        for r in jobs.streaming_daily_events(spark, sf_smoke).collect()
-    }
+    result = jobs.streaming_daily_events(spark, sf_smoke)
+    # the memory-sink view is dropped on return; the frame stays valid
+    assert not [t for t in spark.catalog.listTables() if t.name.startswith("stream_")]
+    stream_rows = {(r.day, r.event_type): r.n_events for r in result.collect()}
     batch_rows = {
         (r.day, r.event_type): r.n_events
         for r in daily_events(spark, sf_smoke).collect()
@@ -262,3 +262,66 @@ def test_replay_dirs_raise_clearly_on_empty_events(spark, tmp_path):
         write_replay_dir(spark, sf, n_files=4)
     with pytest.raises(ValueError, match="empty"):
         write_gap_replay_dir(spark, sf, n_slices=4)
+
+
+def _chunk_ids(d):
+    import pyarrow.parquet as pq
+
+    return [
+        sorted(pq.read_table(f, columns=["event_id"]).column(0).to_pylist())
+        for f in sorted(glob.glob(f"{d}/chunk-*.parquet"))
+    ]
+
+
+def test_replay_chunks_match_window_reference(spark, sf_smoke):
+    """Row for row, every chunk holds what the window form deals it:
+    rn = row_number() OVER (ORDER BY ts, event_id) - 1, file_id =
+    rn * n_files / n, plus the overlap duplicates moved one chunk on."""
+    from pyspark.sql import Window
+
+    n_files = 4
+    events = load_table(spark, sf_smoke, "events")
+    n = events.count()
+    numbered = events.select(
+        "event_id",
+        (F.row_number().over(Window.orderBy("ts", "event_id")) - 1).alias("rn"),
+    ).withColumn("file_id", (F.col("rn") * n_files / F.lit(n)).cast("int"))
+    rows = numbered.collect()
+    for overlap_every in (0, 5):
+        want = [[] for _ in range(n_files)]
+        for r in rows:
+            want[r.file_id].append(r.event_id)
+            if overlap_every and r.rn % overlap_every == 0 and r.file_id < n_files - 1:
+                want[r.file_id + 1].append(r.event_id)
+        d = write_replay_dir(spark, sf_smoke, n_files=n_files, overlap_every=overlap_every)
+        try:
+            assert _chunk_ids(d) == [sorted(w) for w in want]
+        finally:
+            shutil.rmtree(d, ignore_errors=True)
+
+
+def test_replay_dir_runs_at_most_seven_jobs(spark, sf_smoke):
+    """Range checkpoint (3 jobs), collected partition offsets (2) and
+    the one partitioned write (2): no separate count, no offsets join."""
+    load_table(spark, sf_smoke, "events")  # any first-touch mirror work
+    sc = spark.sparkContext
+    group = f"replay_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "write_replay_dir job count")
+    try:
+        d = write_replay_dir(spark, sf_smoke, n_files=4, overlap_every=5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    shutil.rmtree(d, ignore_errors=True)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 7
+
+
+def test_pin_result_leaves_no_result_dir(spark, sf_smoke):
+    import os
+    import tempfile
+
+    pattern = os.path.join(tempfile.gettempdir(), "spark_graft_stream_result_*")
+    before = set(glob.glob(pattern))
+    src = load_table(spark, sf_smoke, "events").groupBy("event_type").count()
+    pinned = jobs._pin_result(src)
+    assert set(glob.glob(pattern)) == before
+    assert sorted(pinned.collect()) == sorted(src.collect())
