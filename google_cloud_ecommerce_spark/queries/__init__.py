@@ -88,15 +88,25 @@ def _modules():
 # decile_lift_chart, lineitem_quartiles_distributed, record_id. They
 # took the last three r06-last slots (hard_negative_mining,
 # ivf_balance_report, label_centroids);
+# 5 re-checks whose stream plumbing moved into the shared harness (one
+# _drain, one chunk landing, one epoch fold) and that held no slot:
+# streaming_corpus_prep (now rank-chunked), streaming_lakehouse_ingest,
+# streaming_session_state, streaming_jdbc_sink, wire_stream_sink. They
+# took five of the seven non-streaming r05-last slots
+# (rolling_median_daily_value, rolling_weekly_active_users,
+# series_similarity, span_corruption_masks, stratified_hash_sample),
+# green in CORRECTNESS_r12 and r13 and untouched by that change; the
+# ten streaming r05-last names keep their slots, rewritten by it too;
 # 5 re-checks routed through the round-12 manifest-layer hardening
 # (empty-diff change feed, claim fencing, temporal stats bounds,
 # retryable rebase): lakehouse_change_feed, streaming_version_feed,
 # lakehouse_pruned_read, lakehouse_append_ingest,
 # streaming_manifest_ingest;
 # tpch_q1_pricing_summary as the cross-round canary;
-# then strictly oldest evidence: 18 of the 19 r05-last names
-# (rolling_median_daily_value onward — skipgram_pmi already appears
-# above as code-changed; skipgram_pairs left with the five above),
+# then strictly oldest evidence: 13 of the 19 r05-last names
+# (streaming_band_enrichment onward — skipgram_pmi already appears
+# above as code-changed; skipgram_pairs left with the trainer five,
+# and five gave way to the streaming-harness five above),
 # then 12 of the first 15 of the 44 r06-last
 # names alphabetically, skipping the three that held code-changed
 # slots (corpus_to_training_batches, hybrid_search_rrf,
@@ -122,6 +132,12 @@ PRIORITY: tuple[str, ...] = (
     "decile_lift_chart",
     "lineitem_quartiles_distributed",
     "record_id",
+    # --- 5 re-checks: stream plumbing moved into the shared harness ---
+    "streaming_corpus_prep",
+    "streaming_lakehouse_ingest",
+    "streaming_session_state",
+    "streaming_jdbc_sink",
+    "wire_stream_sink",
     # --- 5 re-checks: routed through the r12 manifest hardening ---
     "lakehouse_change_feed",
     "streaming_version_feed",
@@ -130,12 +146,7 @@ PRIORITY: tuple[str, ...] = (
     "streaming_manifest_ingest",
     # --- cross-round canary ---
     "tpch_q1_pricing_summary",
-    # --- 17 re-checks: oldest evidence (r05-last, the deferred tail) ---
-    "rolling_median_daily_value",
-    "rolling_weekly_active_users",
-    "series_similarity",
-    "span_corruption_masks",
-    "stratified_hash_sample",
+    # --- 12 re-checks: oldest evidence (r05-last, the deferred tail) ---
     "streaming_band_enrichment",
     "streaming_dedup_within_watermark",
     "streaming_incremental_mv",

@@ -56,15 +56,18 @@ _FAMILY_ANCHORS = {
 # optimization commits, the 5 entries routed through the round-12
 # manifest-layer hardening (empty-diff change feed, claim fencing,
 # temporal stats bounds, retryable rebase), the tpch_q1 canary, then
-# strictly oldest evidence (18 of the 19 r05-last names — one of
+# strictly oldest evidence (13 of the 19 r05-last names — one of
 # which, skipgram_pmi, doubles as code-changed — then the first 15
 # r06-last names alphabetically, skipping the three that held
 # code-changed slots). The trainer re-checks replaced five round-12
 # re-checks that CORRECTNESS_r12 and r13 already show green; the three
 # queries whose global rank now comes from collected partition offsets
 # (decile_lift_chart, lineitem_quartiles_distributed, record_id) took
-# the last three r06-last slots. An undocumented re-check is still a
-# wasted slot.
+# the last three r06-last slots. The five entries whose stream plumbing
+# moved into the shared harness (_drain, chunk landing, epoch fold) and
+# that held no slot took five of the seven non-streaming r05-last slots
+# (green in r12 and r13, untouched by that change). An undocumented
+# re-check is still a wasted slot.
 _RECHECK_SLATE = {
     # k-means / PQ trainers rewritten since their last CORRECTNESS row
     "similarity_pq_topk", "similarity_ivfpq_topk", "pq_encode",
@@ -75,6 +78,9 @@ _RECHECK_SLATE = {
     "semdedup_clusters",
     # global rank now from collected partition offsets
     "decile_lift_chart", "lineitem_quartiles_distributed", "record_id",
+    # stream plumbing moved into the shared harness, no slot before
+    "streaming_corpus_prep", "streaming_lakehouse_ingest",
+    "streaming_session_state", "streaming_jdbc_sink", "wire_stream_sink",
     # routed through the r12 manifest hardening
     "lakehouse_change_feed", "streaming_version_feed",
     "lakehouse_pruned_read", "lakehouse_append_ingest",
@@ -82,8 +88,6 @@ _RECHECK_SLATE = {
     # cross-round canary
     "tpch_q1_pricing_summary",
     # oldest evidence: last driver row is r05 (the deferred tail)
-    "rolling_median_daily_value", "rolling_weekly_active_users",
-    "series_similarity", "span_corruption_masks", "stratified_hash_sample",
     "streaming_band_enrichment", "streaming_dedup_within_watermark",
     "streaming_incremental_mv", "streaming_kmv_sketch",
     "streaming_media_features", "streaming_purchase_attribution_outer",
