@@ -36,7 +36,10 @@ from __future__ import annotations
 
 import datetime as dt
 import errno
+import glob
 import os
+import shutil
+import tempfile
 import time
 import uuid
 from dataclasses import dataclass
@@ -402,8 +405,6 @@ def write_wire_dir(
 ) -> str:
     """Serialize events to wire message files with JVM-side expressions
     (concat_ws — the codegen'd form of SURVEY §2.3 #19)."""
-    import tempfile
-
     out = out or tempfile.mkdtemp(prefix="spark_graft_wire_")
     events = load_table(spark, sf_dir, "events")
     # every field NULL-coalesced BEFORE concat_ws: concat_ws silently
@@ -422,10 +423,7 @@ def write_wire_dir(
     )
     tmp = os.path.join(out, "_stage")
     lines.repartition(n_files).write.mode("overwrite").text(tmp)
-    import glob as _glob
-    import shutil
-
-    for i, part in enumerate(sorted(_glob.glob(os.path.join(tmp, "part-*")))):
+    for i, part in enumerate(sorted(glob.glob(os.path.join(tmp, "part-*")))):
         if not part.endswith(".crc"):
             shutil.move(part, os.path.join(out, f"messages-{i:04d}.wire"))
     shutil.rmtree(tmp)
@@ -456,13 +454,11 @@ def wire_format_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned executor-side (an eager localCheckpoint, never a driver
     collect) before the temp wire dir is deleted — the same
     ``_pin_result`` discipline the streaming entries use."""
-    import shutil
-
     from google_cloud_ecommerce_spark.streaming.jobs import _pin_result
 
     _safe_register(spark)
-    wire_dir = write_wire_dir(spark, sf_dir, n_files=4)
-    try:
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as wire_dir:
+        write_wire_dir(spark, sf_dir, n_files=4, out=wire_dir)
         df = spark.read.format(WIRE_FORMAT).load(wire_dir)
         res = (
             df.filter(F.col("event_type") == "purchase")
@@ -475,28 +471,22 @@ def wire_format_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return _pin_result(res)
-    finally:
-        shutil.rmtree(wire_dir, ignore_errors=True)
 
 
 def wire_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming face: the same message files consumed as micro-batches
     through the SimpleDataSourceStreamReader offsets."""
-    import shutil
-
     from google_cloud_ecommerce_spark.streaming.jobs import _run_to_memory
 
     _safe_register(spark)
-    wire_dir = write_wire_dir(spark, sf_dir, n_files=4)
-    try:
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as wire_dir:
+        write_wire_dir(spark, sf_dir, n_files=4, out=wire_dir)
         stream = spark.readStream.format(WIRE_FORMAT).load(wire_dir)
         agg = stream.groupBy("event_type").agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
         )
         return _run_to_memory(agg, "complete")
-    finally:
-        shutil.rmtree(wire_dir, ignore_errors=True)
 
 
 QUERIES = {
@@ -525,31 +515,19 @@ def wire_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the verification read consumes committed_only — so a message
     only counts if its epoch's manifest landed. The batch oracle over
     the source events must match exactly."""
-    import shutil
-    import tempfile
-
-    from google_cloud_ecommerce_spark.streaming.jobs import _pin_result
+    from google_cloud_ecommerce_spark.streaming.jobs import _drain, _pin_result
     from google_cloud_ecommerce_spark.streaming.replay import (
         read_replay_stream,
         write_replay_dir,
     )
 
     _safe_register(spark)
-    replay = write_replay_dir(spark, sf_dir, n_files=8)
-    out = tempfile.mkdtemp(prefix="spark_graft_wire_sink_")
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_wire_sink_ckpt_")
-    try:
-        stream = read_replay_stream(spark, replay).select(
-            "event_id", "ts", "user_id", "event_type", "value", "props"
-        )
-        q = (
-            stream.writeStream.format(WIRE_FORMAT)
-            .option("path", out)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as tmp:
+        out = os.path.join(tmp, "messages")
+        stream = read_replay_stream(
+            spark, write_replay_dir(spark, sf_dir, out=os.path.join(tmp, "replay"))
+        ).select("event_id", "ts", "user_id", "event_type", "value", "props")
+        _drain(stream.writeStream.format(WIRE_FORMAT).option("path", out))
         back = (
             spark.read.format(WIRE_FORMAT)
             .option("committed_only", "true")
@@ -561,10 +539,6 @@ def wire_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
         )
         return _pin_result(final)
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(checkpoint, ignore_errors=True)
 
 
 QUERIES["wire_stream_sink"] = wire_stream_sink

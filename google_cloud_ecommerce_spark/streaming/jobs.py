@@ -4,13 +4,26 @@ plus the stateful layer it lacked (SURVEY.md §2.9 T5: "reference has
 none — streaming job is stateless; all windowed aggs were done later in
 BigQuery").
 
-Each job runs the file-replay source to completion with an availableNow
-trigger into a memory sink, which makes the result deterministic — so
-these queries() entries carry REAL DuckDB oracles (stream ≡ batch is
-checked by the same comparator as everything else, not a weaker
-rows-only pass). The streaming plan is identical to what would run
-unbounded against Kafka; only the source/trigger/sink bindings are
-test-harness choices.
+Each job replays its input to completion with an availableNow trigger,
+which makes the result deterministic — so these queries() entries carry
+REAL DuckDB oracles (stream ≡ batch is checked by the same comparator
+as everything else, not a weaker rows-only pass). The result outlives
+every scratch dir: plain aggregates drain into a memory sink
+(``_run_to_memory``); the foreachBatch entries (state folds, lakehouse,
+MERGE, JDBC, retrieval) write a sink and pin the read-back
+executor-side (``_pin_result``). The streaming plan is identical to
+what would run unbounded against Kafka; only the source/trigger/sink
+bindings are test-harness choices, and they live in one place each:
+
+  ``_drain``                  every stream's checkpoint temp dir,
+                              availableNow trigger, start/await, stop
+                              on error and cleanup;
+  ``replay.land_chunks``      every chunk file — replays, document
+                              replays and flush sentinels — in one
+                              partitioned write with explicit mtimes in
+                              commit order;
+  ``_fold_epochs``            foreachBatch epochs folded into versioned
+                              ``v{epoch}`` state, retry-safe.
 
 (Spark 4's transformWithState[InPandas] is the successor API for the
 custom-state job below; its driver-side state server requires the
@@ -33,17 +46,21 @@ memory sink, which in production becomes parquet/Kafka via
 from __future__ import annotations
 
 import os
-import shutil
+import tempfile
 import uuid
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from google_cloud_ecommerce_spark.catalog import load_table
 from google_cloud_ecommerce_spark.streaming.replay import (
+    DOCUMENTS_DDL,
+    land_chunks,
     read_replay_stream,
     write_replay_dir,
 )
@@ -59,27 +76,71 @@ def _pin_result(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+def _drain(writer: DataStreamWriter) -> None:
+    """Drive one bounded stream to completion: a fresh checkpoint temp
+    dir, the availableNow trigger, start, await; a query the wait left
+    running (it raised) is stopped before its checkpoint is removed.
+    Every sink — memory, foreachBatch, a Python data source — runs
+    through here."""
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as ckpt:
+        q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+        try:
+            q.awaitTermination()
+        finally:
+            if q.isActive:
+                q.stop()
+
+
 def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
     """Drive a streaming frame to completion; return the result table."""
     name = f"stream_{uuid.uuid4().hex[:12]}"
-    q = (
-        stream_df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if q.isActive:  # pragma: no cover - defensive
-            q.stop()
+    _drain(stream_df.writeStream.outputMode(output_mode).format("memory").queryName(name))
     spark = stream_df.sparkSession
     result = spark.table(name)
     # the frame holds the sink's plan; the view would otherwise pile up
     # one uniquely named entry per run for the session's lifetime
     spark.catalog.dropTempView(name)
     return result
+
+
+def _read_state(spark: SparkSession, version: str) -> dict[str, DataFrame]:
+    return {n: spark.read.parquet(os.path.join(version, n)) for n in os.listdir(version)}
+
+
+def _fold_epochs(
+    stream: DataFrame,
+    fold: Callable[[DataFrame, dict[str, DataFrame] | None], dict[str, DataFrame]],
+    final: Callable[..., DataFrame],
+) -> DataFrame:
+    """Drain ``stream`` through foreachBatch, folding every epoch into
+    versioned state: ``fold(batch, prev)`` returns the named state
+    tables after the batch (``prev`` is None on the first epoch), each
+    written to ``v{epoch}/<name>`` under a state temp dir; the result is
+    ``final(**tables)`` of the last version, pinned before the dir goes.
+
+    Retry idempotence: if the checkpoint commit failed after a
+    successful write, the engine replays that epoch while the latest
+    version is already ITS OWN output — folding against it would count
+    the batch twice (a bottom-k sample survives that via union +
+    distinct, counts and sums do not). The parent is then the PRE-batch
+    state."""
+    spark = stream.sparkSession
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as root:
+        latest: list[str] = []
+
+        def step(batch_df: DataFrame, epoch_id: int) -> None:
+            out = os.path.join(root, f"v{epoch_id}")
+            parent = latest[-1] if latest else None
+            if parent == out:
+                prev = os.path.join(root, f"v{epoch_id - 1}")
+                parent = prev if os.path.isdir(prev) else None
+            prior = None if parent is None else _read_state(batch_df.sparkSession, parent)
+            for name, table in fold(batch_df, prior).items():
+                table.write.mode("overwrite").parquet(os.path.join(out, name))
+            latest.append(out)
+
+        _drain(stream.writeStream.foreachBatch(step))
+        return _pin_result(final(**_read_state(spark, latest[-1])))
 
 
 # ---------------------------------------------------------------------------
@@ -90,15 +151,12 @@ def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
 
 
 def streaming_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    replay = write_replay_dir(spark, sf_dir, n_files=8)
-    try:
-        stream = read_replay_stream(spark, replay)
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as replay:
+        stream = read_replay_stream(spark, write_replay_dir(spark, sf_dir, out=replay))
         agg = stream.groupBy(F.to_date("ts").alias("day"), "event_type").agg(
             F.count("*").alias("n_events")
         )
         return _run_to_memory(agg, "complete")
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -108,9 +166,8 @@ def streaming_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def streaming_hourly_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    replay = write_replay_dir(spark, sf_dir, n_files=8)
-    try:
-        stream = read_replay_stream(spark, replay)
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as replay:
+        stream = read_replay_stream(spark, write_replay_dir(spark, sf_dir, out=replay))
         agg = (
             stream.withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -129,8 +186,6 @@ def streaming_hourly_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return _run_to_memory(agg, "complete")
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -142,9 +197,8 @@ def streaming_hourly_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def streaming_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    replay = write_replay_dir(spark, sf_dir, n_files=8)
-    try:
-        stream = read_replay_stream(spark, replay)
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as replay:
+        stream = read_replay_stream(spark, write_replay_dir(spark, sf_dir, out=replay))
         agg = (
             stream.withWatermark("ts", "10 minutes")
             .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
@@ -156,8 +210,6 @@ def streaming_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return _run_to_memory(agg, "complete")
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -168,14 +220,13 @@ def streaming_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    replay = write_replay_dir(spark, sf_dir, n_files=8, overlap_every=5)
-    try:
-        stream = read_replay_stream(spark, replay)
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as replay:
+        stream = read_replay_stream(
+            spark, write_replay_dir(spark, sf_dir, overlap_every=5, out=replay)
+        )
         deduped = stream.dropDuplicates(["event_id"])
         agg = deduped.groupBy("event_type").agg(F.count("*").alias("n_events"))
         return _run_to_memory(agg, "complete")
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -248,14 +299,12 @@ def _session_state_fn(
         )
 
 
-def _write_flush_chunk(spark: SparkSession, replay_dir: str, sf_dir: str) -> None:
-    """One sentinel event per user, 31 min past the global max ts —
-    written last so it is the final replayed chunk."""
-    from google_cloud_ecommerce_spark.catalog import load_table
-
-    events = load_table(spark, sf_dir, "events")
+def _land_session_flush(spark: SparkSession, replay_dir: str, sf_dir: str) -> None:
+    """One sentinel event per user, 31 min past that user's last event —
+    landed after the replay so it is the final replayed chunk."""
     flush = (
-        events.groupBy("user_id")
+        load_table(spark, sf_dir, "events")
+        .groupBy("user_id")
         .agg(F.max(F.unix_micros("ts")).alias("max_us"))
         .select(
             (-F.col("user_id")).alias("event_id"),
@@ -264,21 +313,16 @@ def _write_flush_chunk(spark: SparkSession, replay_dir: str, sf_dir: str) -> Non
             F.lit(FLUSH_TYPE).alias("event_type"),
             F.lit(0.0).alias("value"),
             F.lit(None).cast("string").alias("props"),
+            F.lit(0).alias("file_id"),
         )
     )
-    import glob as _glob
-
-    tmp = os.path.join(replay_dir, "_stage_flush")
-    flush.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-    shutil.move(part, os.path.join(replay_dir, "chunk-zzzz-flush.parquet"))
-    shutil.rmtree(tmp)
+    land_chunks(flush, replay_dir, 1)
 
 
 def streaming_session_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    replay = write_replay_dir(spark, sf_dir, n_files=8)
-    try:
-        _write_flush_chunk(spark, replay, sf_dir)
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as replay:
+        write_replay_dir(spark, sf_dir, out=replay)
+        _land_session_flush(spark, replay, sf_dir)
         stream = read_replay_stream(spark, replay).select(
             "user_id", "event_id", F.unix_micros("ts").alias("us"), "event_type"
         )
@@ -290,8 +334,6 @@ def streaming_session_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
         return _run_to_memory(sessions, "append")
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -305,128 +347,94 @@ def streaming_session_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _view_purchase_join(stream: DataFrame, how: str, p_user: str = "user_id") -> DataFrame:
+    """Purchases joined to the same user's views of the prior hour, each
+    side watermarked 10 minutes; ``p_user`` names the purchase side's
+    user column (the full outer join keeps both sides' user ids)."""
+
+    def side(event_type: str, id_col: str, user_col: str, ts_col: str) -> DataFrame:
+        return (
+            stream.filter(F.col("event_type") == event_type)
+            .select(
+                F.col("event_id").alias(id_col),
+                F.col("user_id").alias(user_col),
+                F.col("ts").alias(ts_col),
+            )
+            .withWatermark(ts_col, "10 minutes")
+        )
+
+    return side("purchase", "purchase_event_id", p_user, "p_ts").join(
+        side("view", "view_event_id", "v_user_id", "v_ts"),
+        F.expr(f"{p_user} = v_user_id AND v_ts >= p_ts - INTERVAL 1 HOUR AND v_ts < p_ts"),
+        how,
+    )
+
+
+def _land_watermark_flush(
+    spark: SparkSession, replay_dir: str, sf_dir: str, event_types: tuple[str, ...]
+) -> None:
+    """TWO sentinel chunks, 2 h and 4 h past the global max ts, one row
+    per event type each (user_id -1, equal timestamps within a chunk,
+    so the pair is un-joinable under a strict v_ts < p_ts predicate).
+    They push every watermark past the last real row. Two because
+    emission lags the watermark by one batch: the wm advanced by
+    sentinel 1 only evicts-and-emits while a LATER batch is running,
+    and availableNow does not run a trailing no-data batch — sentinel 2
+    is that later batch. Callers filter the sentinels from the SINK
+    result: a stream-side filter is pushed below the watermark node,
+    the sentinel never reaches it, and the stalled watermark strands
+    the last rows in state."""
+    flush = (
+        load_table(spark, sf_dir, "events")
+        .agg(F.max(F.unix_micros("ts")).alias("max_us"))
+        .select("max_us", F.explode(F.array(F.lit(0), F.lit(1))).alias("file_id"))
+        .select(
+            (-1 - F.col("file_id")).cast("long").alias("event_id"),
+            F.expr("timestamp_micros(max_us + (file_id + 1) * 7200000000)").alias("ts"),
+            F.lit(-1).cast("long").alias("user_id"),
+            F.explode(F.array(*map(F.lit, event_types))).alias("event_type"),
+            F.lit(0.0).alias("value"),
+            F.lit(None).cast("string").alias("props"),
+            "file_id",
+        )
+    )
+    land_chunks(flush, replay_dir, 2)
+
+
 def streaming_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    replay = write_replay_dir(spark, sf_dir, n_files=8)
-    try:
-        stream = read_replay_stream(spark, replay)
-        views = (
-            stream.filter(F.col("event_type") == "view")
-            .select(
-                F.col("event_id").alias("view_event_id"),
-                F.col("user_id").alias("v_user_id"),
-                F.col("ts").alias("v_ts"),
-            )
-            .withWatermark("v_ts", "10 minutes")
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as replay:
+        stream = read_replay_stream(spark, write_replay_dir(spark, sf_dir, out=replay))
+        joined = _view_purchase_join(stream, "inner")
+        return _run_to_memory(
+            joined.select("purchase_event_id", "view_event_id", "user_id"), "append"
         )
-        purchases = (
-            stream.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("purchase_event_id"),
-                "user_id",
-                F.col("ts").alias("p_ts"),
-            )
-            .withWatermark("p_ts", "10 minutes")
-        )
-        joined = purchases.join(
-            views,
-            F.expr(
-                "user_id = v_user_id AND v_ts >= p_ts - INTERVAL 1 HOUR AND v_ts < p_ts"
-            ),
-        ).select("purchase_event_id", "view_event_id", "user_id")
-        return _run_to_memory(joined, "append")
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
 # Stream-stream LEFT OUTER join — purchase attribution where the
 # UNMATCHED purchases (no view in the prior hour) must also emit, with
 # a NULL view id. Outer rows can only be released when the watermark
-# PROVES no match can still arrive (wm > p_ts), so the replay appends a
-# sentinel chunk 2 h past the global max on BOTH sides: it advances
-# each side's watermark beyond every real purchase, and the engine's
-# no-data finalization batch then evicts-and-emits the null rows. The
-# sentinels themselves (user_id = -1, equal timestamps, so the
-# interval predicate can't self-match) are filtered from the output.
-# State size stays bounded by the 1 h interval + 10 min delay — the
-# eviction that makes the join feasible on an unbounded stream is the
-# same mechanism that releases the outer rows.
+# PROVES no match can still arrive (wm > p_ts), so the replay appends
+# sentinel chunks 2 h and 4 h past the global max on BOTH sides
+# (``_land_watermark_flush``): they advance each side's watermark
+# beyond every real purchase, and the later batch evicts-and-emits the
+# null rows. The sentinels themselves (user_id = -1, equal timestamps,
+# so the interval predicate can't self-match) are filtered from the
+# output. State size stays bounded by the 1 h interval + 10 min delay —
+# the eviction that makes the join feasible on an unbounded stream is
+# the same mechanism that releases the outer rows.
 # ---------------------------------------------------------------------------
 
 
 def streaming_purchase_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    replay = write_replay_dir(spark, sf_dir, n_files=8)
-    try:
-        _write_join_flush_chunk(spark, replay, sf_dir)
-        stream = read_replay_stream(spark, replay)
-        views = (
-            stream.filter(F.col("event_type") == "view")
-            .select(
-                F.col("event_id").alias("view_event_id"),
-                F.col("user_id").alias("v_user_id"),
-                F.col("ts").alias("v_ts"),
-            )
-            .withWatermark("v_ts", "10 minutes")
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as replay:
+        write_replay_dir(spark, sf_dir, out=replay)
+        _land_watermark_flush(spark, replay, sf_dir, ("view", "purchase"))
+        joined = _view_purchase_join(read_replay_stream(spark, replay), "left_outer")
+        sunk = _run_to_memory(
+            joined.select("purchase_event_id", "view_event_id", "user_id"), "append"
         )
-        purchases = (
-            stream.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("purchase_event_id"),
-                "user_id",
-                F.col("ts").alias("p_ts"),
-            )
-            .withWatermark("p_ts", "10 minutes")
-        )
-        joined = purchases.join(
-            views,
-            F.expr(
-                "user_id = v_user_id AND v_ts >= p_ts - INTERVAL 1 HOUR AND v_ts < p_ts"
-            ),
-            "left_outer",
-        ).select("purchase_event_id", "view_event_id", "user_id")
-        # Sentinels are filtered on the SINK result, not in the streaming
-        # plan: a stream-side filter on user_id gets pushed below the
-        # purchase watermark node, the sentinel then never reaches it,
-        # and the stalled watermark strands the last outer rows in state.
-        return _run_to_memory(joined, "append").filter(F.col("user_id") >= 0)
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
-
-
-def _write_join_flush_chunk(spark: SparkSession, replay_dir: str, sf_dir: str) -> None:
-    """TWO sentinel chunks (view + purchase each), 2 h and 4 h past the
-    global max ts, equal timestamps per chunk (un-joinable under the
-    strict v_ts < p_ts predicate). Two because outer-row emission lags
-    the watermark by one batch: the wm advanced by sentinel 1 only
-    evicts-and-emits while a LATER batch is running, and availableNow
-    does not run a trailing no-data batch — sentinel 2 is that later
-    batch."""
-    from google_cloud_ecommerce_spark.catalog import load_table
-
-    events = load_table(spark, sf_dir, "events")
-    import glob as _glob
-
-    for i, bump_us in enumerate((7_200_000_000, 14_400_000_000)):
-        flush = (
-            events.agg(F.max(F.unix_micros("ts")).alias("max_us"))
-            .select(
-                F.explode(F.array(F.lit("view"), F.lit("purchase"))).alias("event_type"),
-                "max_us",
-            )
-            .select(
-                F.lit(-1 - i).cast("long").alias("event_id"),
-                F.expr(f"timestamp_micros(max_us + {bump_us})").alias("ts"),
-                F.lit(-1).cast("long").alias("user_id"),
-                "event_type",
-                F.lit(0.0).alias("value"),
-                F.lit(None).cast("string").alias("props"),
-            )
-        )
-        tmp = os.path.join(replay_dir, "_stage_join_flush")
-        flush.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        shutil.move(part, os.path.join(replay_dir, f"chunk-zzzz{i}-flush.parquet"))
-        shutil.rmtree(tmp)
+        return sunk.filter(F.col("user_id") >= 0)
 
 
 # ---------------------------------------------------------------------------
@@ -442,9 +450,8 @@ def _write_join_flush_chunk(spark: SparkSession, replay_dir: str, sf_dir: str) -
 def streaming_band_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from google_cloud_ecommerce_spark.queries.joins import VALUE_BANDS
 
-    replay = write_replay_dir(spark, sf_dir, n_files=8)
-    try:
-        stream = read_replay_stream(spark, replay)
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as replay:
+        stream = read_replay_stream(spark, write_replay_dir(spark, sf_dir, out=replay))
         bands = spark.createDataFrame(
             [(n, lo, hi) for n, lo, hi in VALUE_BANDS],
             "band string, lo double, hi double",
@@ -461,8 +468,6 @@ def streaming_band_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return _run_to_memory(agg, "complete")
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
 
 
 QUERIES = {
@@ -571,54 +576,27 @@ ORACLE = {
 
 
 def streaming_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    replay = write_replay_dir(spark, sf_dir, n_files=8)
-    state_root = tempfile.mkdtemp(prefix="mv_state_")
-    checkpoint = tempfile.mkdtemp(prefix="mv_ckpt_")
-    latest: dict[str, str] = {}
-
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        s = batch_df.sparkSession
-        partial = batch_df.groupBy(
-            F.to_date("ts").alias("day"), "event_type"
-        ).agg(
+    def fold(batch_df: DataFrame, prev: dict | None) -> dict[str, DataFrame]:
+        partial = batch_df.groupBy(F.to_date("ts").alias("day"), "event_type").agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,4)")).alias("sv"),
         )
-        if "dir" in latest:
-            current = s.read.parquet(latest["dir"])
-            merged = (
-                current.unionByName(partial)
+        if prev is not None:
+            partial = (
+                prev["mv"].unionByName(partial)
                 .groupBy("day", "event_type")
                 .agg(F.sum("n_events").alias("n_events"), F.sum("sv").alias("sv"))
             )
-        else:
-            merged = partial
-        out = os.path.join(state_root, f"v{epoch_id}")
-        merged.write.mode("overwrite").parquet(out)
-        latest["dir"] = out
+        return {"mv": partial}
 
-    try:
-        q = (
-            read_replay_stream(spark, replay)
-            .writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+    def final(mv: DataFrame) -> DataFrame:
+        return mv.select(
+            "day", "event_type", "n_events", F.col("sv").cast("double").alias("sum_value")
         )
-        q.awaitTermination()
-        final = spark.read.parquet(latest["dir"]).select(
-            "day",
-            "event_type",
-            "n_events",
-            F.col("sv").cast("double").alias("sum_value"),
-        )
-        return _pin_result(final)
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
-        shutil.rmtree(checkpoint, ignore_errors=True)
+
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as replay:
+        stream = read_replay_stream(spark, write_replay_dir(spark, sf_dir, out=replay))
+        return _fold_epochs(stream, fold, final)
 
 
 QUERIES["streaming_incremental_mv"] = streaming_incremental_mv
@@ -638,37 +616,16 @@ ORACLE["streaming_incremental_mv"] = """
 # Append mode only finalizes a window once the watermark passes it, and
 # window emission lags the watermark by one batch, so the replay gets
 # the same TWO trailing flush chunks streaming_purchase_attribution_outer
-# needs (sentinel event_type, filtered from the SINK result — a
-# stream-side filter would be pushed below the watermark node).
+# needs (``_land_watermark_flush`` with the sentinel event_type, filtered
+# from the SINK result — a stream-side filter would be pushed below the
+# watermark node).
 # ---------------------------------------------------------------------------
 
 
 def streaming_two_level_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from google_cloud_ecommerce_spark.catalog import load_table
-
-    replay = write_replay_dir(spark, sf_dir, n_files=8)
-    try:
-        import glob as _glob
-
-        events = load_table(spark, sf_dir, "events")
-        # Flush chunks must land as FLAT chunk-*.parquet files (the file
-        # source does not descend into write-produced subdirectories) and
-        # after the real chunks in modification order.
-        for i, bump_us in enumerate((7_200_000_000, 14_400_000_000)):
-            flush = events.agg(F.max(F.unix_micros("ts")).alias("max_us")).select(
-                F.lit(-1 - i).cast("long").alias("event_id"),
-                F.expr(f"timestamp_micros(max_us + {bump_us})").alias("ts"),
-                F.lit(-1).cast("long").alias("user_id"),
-                F.lit("__flush__").alias("event_type"),
-                F.lit(0.0).alias("value"),
-                F.lit(None).cast("string").alias("props"),
-            )
-            tmp = os.path.join(replay, "_stage_tlw_flush")
-            flush.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            shutil.move(part, os.path.join(replay, f"chunk-zzzz{i}-flush.parquet"))
-            shutil.rmtree(tmp)
-
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as replay:
+        write_replay_dir(spark, sf_dir, out=replay)
+        _land_watermark_flush(spark, replay, sf_dir, (FLUSH_TYPE,))
         stream = read_replay_stream(spark, replay)
         lvl1 = (
             stream.withWatermark("ts", "10 minutes")
@@ -683,14 +640,12 @@ def streaming_two_level_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("n1").alias("n_events"), F.sum("sv").alias("sv"))
         )
         sunk = _run_to_memory(lvl2, "append")
-        return sunk.filter(F.col("event_type") != "__flush__").select(
+        return sunk.filter(F.col("event_type") != FLUSH_TYPE).select(
             F.date_format("w60.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
             "event_type",
             "n_events",
             F.col("sv").cast("double").alias("sum_value"),
         )
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
 
 
 QUERIES["streaming_two_level_window"] = streaming_two_level_window
@@ -708,50 +663,24 @@ ORACLE["streaming_two_level_window"] = """
 # as the left-outer job; now BOTH sides' unmatched rows emit with nulls
 # once the watermark passes them, so user_id has to coalesce across
 # sides. The two flush chunks (view + purchase, un-joinable equal
-# timestamps) advance the watermark for both states; their rows surface
-# as unmatched sentinels and are filtered from the SINK result
-# (user_id >= 0) — never in the streaming plan, where the filter would
-# be pushed below a watermark node and stall it.
+# timestamps, ``_land_watermark_flush``) advance the watermark for both
+# states; their rows surface as unmatched sentinels and are filtered
+# from the SINK result (user_id >= 0) — never in the streaming plan,
+# where the filter would be pushed below a watermark node and stall it.
 # ---------------------------------------------------------------------------
 
 
 def streaming_view_purchase_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    replay = write_replay_dir(spark, sf_dir, n_files=8)
-    try:
-        _write_join_flush_chunk(spark, replay, sf_dir)
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as replay:
+        write_replay_dir(spark, sf_dir, out=replay)
+        _land_watermark_flush(spark, replay, sf_dir, ("view", "purchase"))
         stream = read_replay_stream(spark, replay)
-        views = (
-            stream.filter(F.col("event_type") == "view")
-            .select(
-                F.col("event_id").alias("view_event_id"),
-                F.col("user_id").alias("v_user_id"),
-                F.col("ts").alias("v_ts"),
-            )
-            .withWatermark("v_ts", "10 minutes")
-        )
-        purchases = (
-            stream.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("purchase_event_id"),
-                F.col("user_id").alias("p_user_id"),
-                F.col("ts").alias("p_ts"),
-            )
-            .withWatermark("p_ts", "10 minutes")
-        )
-        joined = purchases.join(
-            views,
-            F.expr(
-                "p_user_id = v_user_id AND v_ts >= p_ts - INTERVAL 1 HOUR AND v_ts < p_ts"
-            ),
-            "full_outer",
-        ).select(
+        joined = _view_purchase_join(stream, "full_outer", p_user="p_user_id").select(
             "purchase_event_id",
             "view_event_id",
             F.coalesce(F.col("p_user_id"), F.col("v_user_id")).alias("user_id"),
         )
         return _run_to_memory(joined, "append").filter(F.col("user_id") >= 0)
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
 
 
 QUERIES["streaming_view_purchase_full_outer"] = streaming_view_purchase_full_outer
@@ -777,9 +706,8 @@ ORACLE["streaming_view_purchase_full_outer"] = """
 
 
 def streaming_update_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    replay = write_replay_dir(spark, sf_dir, n_files=8)
-    try:
-        stream = read_replay_stream(spark, replay)
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as replay:
+        stream = read_replay_stream(spark, write_replay_dir(spark, sf_dir, out=replay))
         agg = stream.groupBy("event_type").agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,4)")).alias("sv"),
@@ -796,8 +724,6 @@ def streaming_update_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("last.sv").cast("double").alias("sum_value"),
             )
         )
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
 
 
 QUERIES["streaming_update_mode_counts"] = streaming_update_mode_counts
@@ -819,34 +745,15 @@ ORACLE["streaming_update_mode_counts"] = """
 # dedup state) or already behind the watermark (dropped as late): both
 # paths converge on exactly-once, which is what makes the batch DISTINCT
 # the oracle. Two flush chunks push the watermark past the last real
-# day so append mode finalizes every window (same sentinel geometry as
-# streaming_two_level_window; filtered at the SINK, never in-plan).
+# day so append mode finalizes every window (``_land_watermark_flush``,
+# as in streaming_two_level_window; filtered at the SINK, never in-plan).
 # ---------------------------------------------------------------------------
 
 
 def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from google_cloud_ecommerce_spark.catalog import load_table
-
-    replay = write_replay_dir(spark, sf_dir, n_files=8, overlap_every=5)
-    try:
-        import glob as _glob
-
-        events = load_table(spark, sf_dir, "events")
-        for i, bump_us in enumerate((7_200_000_000, 14_400_000_000)):
-            flush = events.agg(F.max(F.unix_micros("ts")).alias("max_us")).select(
-                F.lit(-1 - i).cast("long").alias("event_id"),
-                F.expr(f"timestamp_micros(max_us + {bump_us})").alias("ts"),
-                F.lit(-1).cast("long").alias("user_id"),
-                F.lit("__flush__").alias("event_type"),
-                F.lit(0.0).alias("value"),
-                F.lit(None).cast("string").alias("props"),
-            )
-            tmp = os.path.join(replay, "_stage_ddw_flush")
-            flush.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            shutil.move(part, os.path.join(replay, f"chunk-zzzz{i}-flush.parquet"))
-            shutil.rmtree(tmp)
-
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as replay:
+        write_replay_dir(spark, sf_dir, overlap_every=5, out=replay)
+        _land_watermark_flush(spark, replay, sf_dir, (FLUSH_TYPE,))
         stream = read_replay_stream(spark, replay)
         agg = (
             stream.withWatermark("ts", "1 hour")
@@ -855,13 +762,11 @@ def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFr
             .agg(F.count("*").alias("n_events"))
         )
         sunk = _run_to_memory(agg, "append")
-        return sunk.filter(F.col("event_type") != "__flush__").select(
+        return sunk.filter(F.col("event_type") != FLUSH_TYPE).select(
             F.date_format("w.start", "yyyy-MM-dd").alias("day"),
             "event_type",
             "n_events",
         )
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
 
 
 QUERIES["streaming_dedup_within_watermark"] = streaming_dedup_within_watermark
@@ -886,8 +791,6 @@ ORACLE["streaming_dedup_within_watermark"] = """
 
 
 def streaming_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql.window import Window
 
     from google_cloud_ecommerce_spark.operators._common import dot_expr
@@ -898,12 +801,10 @@ def streaming_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _with_norm,
     )
 
-    qdir = tempfile.mkdtemp(prefix="spark_graft_qvecs_")
-    out_root = tempfile.mkdtemp(prefix="spark_graft_simout_")
-    out = os.path.join(out_root, "topk")
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_simckpt_")
-    try:
-        emb = _emb(spark, sf_dir)
+    emb = _emb(spark, sf_dir)
+    corpus = _with_norm(emb)
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as tmp:
+        qdir, out = os.path.join(tmp, "queries"), os.path.join(tmp, "topk")
         # one file per query vector -> one request per micro-batch.
         # ONE partitioned write (repartition on vec_id puts each query
         # in exactly one task, so each vec_id=... dir holds one file),
@@ -915,8 +816,6 @@ def streaming_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("vec_id")
             .parquet(qdir)
         )
-
-        corpus = _with_norm(emb)
 
         def score_batch(batch_df: DataFrame, epoch_id: int) -> None:
             q = _with_norm(batch_df).select(
@@ -949,19 +848,8 @@ def streaming_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(qdir)
         )
-        q = (
-            stream.writeStream.foreachBatch(score_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        final = spark.read.parquet(out)
-        return _pin_result(final)
-    finally:
-        shutil.rmtree(qdir, ignore_errors=True)
-        shutil.rmtree(out_root, ignore_errors=True)
-        shutil.rmtree(checkpoint, ignore_errors=True)
+        _drain(stream.writeStream.foreachBatch(score_batch))
+        return _pin_result(spark.read.parquet(out))
 
 
 QUERIES["streaming_similarity_topk"] = streaming_similarity_topk
@@ -986,47 +874,27 @@ ORACLE["streaming_similarity_topk"] = _streaming_similarity_sql()
 # (dropDuplicates state), and roll up per language. The oracle IS the
 # batch prep's SQL — stream == batch, duplicates and all, because
 # chunks arrive in doc_id order so first-seen == min-doc_id keeper.
+# Chunks are cut by doc_id RANK (write_replay_dir over documents), not
+# by id range, so sparse or offset ids lose no document.
 # ---------------------------------------------------------------------------
 
 
 def streaming_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob as _glob
-    import tempfile
-
-    from google_cloud_ecommerce_spark.catalog import load_table
     from google_cloud_ecommerce_spark.operators._common import tokens_expr
     from google_cloud_ecommerce_spark.operators.pipeline import CHUNK_STRIDE, MIN_TOKENS
 
-    replay = tempfile.mkdtemp(prefix="spark_graft_docs_")
-    docs = load_table(spark, sf_dir, "documents")
-    n_files = 6
-    n = docs.count()
-    per = -(-n // n_files)
-    for i in range(n_files):
-        chunk = docs.filter(
-            (F.col("doc_id") >= i * per) & (F.col("doc_id") < (i + 1) * per)
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as replay:
+        # every 5th doc of a chunk is redelivered in the next
+        write_replay_dir(
+            spark,
+            sf_dir,
+            n_files=6,
+            overlap_every=5,
+            out=replay,
+            table="documents",
+            order=("doc_id",),
         )
-        if i > 0:  # redeliver every 5th doc of the previous chunk
-            dup = docs.filter(
-                (F.col("doc_id") >= (i - 1) * per)
-                & (F.col("doc_id") < i * per)
-                & (F.col("doc_id") % 5 == 0)
-            )
-            chunk = chunk.unionByName(dup)
-        stage = os.path.join(replay, f"_stage_{i}")
-        chunk.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = _glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        shutil.move(part, os.path.join(replay, f"chunk-{i:04d}.parquet"))
-        shutil.rmtree(stage)
-
-    try:
-        stream = (
-            spark.readStream.schema(
-                "doc_id bigint, text string, lang string, source string, n_chars bigint"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(replay)
-        )
+        stream = read_replay_stream(spark, replay, ddl=DOCUMENTS_DDL)
         toks = stream.withColumn("toks", F.expr(tokens_expr("lower(text)")))
         # per-row forms of the batch gates (identical integer semantics)
         enriched = (
@@ -1062,8 +930,6 @@ def streaming_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_tokens").alias("n_tokens"),
         )
         return _run_to_memory(agg, "complete")
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
 
 
 QUERIES["streaming_corpus_prep"] = streaming_corpus_prep
@@ -1096,16 +962,9 @@ ORACLE["streaming_corpus_prep"] = _streaming_corpus_prep_sql()
 
 
 def streaming_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql.window import Window
 
     from google_cloud_ecommerce_spark.queries.scale import KMV_HASH_SPACE, KMV_K
-
-    replay = write_replay_dir(spark, sf_dir, n_files=8)
-    state_root = tempfile.mkdtemp(prefix="kmv_state_")
-    checkpoint = tempfile.mkdtemp(prefix="kmv_ckpt_")
-    latest: dict[str, str] = {}
 
     def _topk(df: DataFrame) -> DataFrame:
         w = Window.partitionBy("event_type").orderBy("h")
@@ -1115,8 +974,7 @@ def streaming_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("event_type", "h")
         )
 
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        s = batch_df.sparkSession
+    def fold(batch_df: DataFrame, prev: dict | None) -> dict[str, DataFrame]:
         part = _topk(
             batch_df.select("event_type", "user_id")
             .distinct()
@@ -1128,26 +986,11 @@ def streaming_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("event_type", "h")
         )
-        if "dir" in latest:
-            merged = _topk(
-                s.read.parquet(latest["dir"]).unionByName(part).distinct()
-            )
-        else:
-            merged = part
-        out = os.path.join(state_root, f"v{epoch_id}")
-        merged.write.mode("overwrite").parquet(out)
-        latest["dir"] = out
+        if prev is not None:
+            part = _topk(prev["sketch"].unionByName(part).distinct())
+        return {"sketch": part}
 
-    try:
-        q = (
-            read_replay_stream(spark, replay)
-            .writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        sketch = spark.read.parquet(latest["dir"])
+    def final(sketch: DataFrame) -> DataFrame:
         per_group = sketch.groupBy("event_type").agg(
             F.count("*").alias("k_kept"), F.max("h").alias("h_k")
         )
@@ -1157,14 +1000,13 @@ def streaming_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(float(KMV_K - 1))
             / (F.col("h_k").cast("double") / F.lit(KMV_HASH_SPACE))
         )
-        final = per_group.select(
+        return per_group.select(
             "event_type", "k_kept", "h_k", F.round(est, 4).alias("kmv_estimate")
         )
-        return _pin_result(final)
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
-        shutil.rmtree(checkpoint, ignore_errors=True)
+
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as replay:
+        stream = read_replay_stream(spark, write_replay_dir(spark, sf_dir, out=replay))
+        return _fold_epochs(stream, fold, final)
 
 
 QUERIES["streaming_kmv_sketch"] = streaming_kmv_sketch
@@ -1194,19 +1036,12 @@ ORACLE["streaming_kmv_sketch"] = _streaming_kmv_oracle()
 
 
 def streaming_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql.window import Window
 
     from google_cloud_ecommerce_spark.queries.stats import (
         SKETCH_K,
         SKETCH_QUANTILES,
     )
-
-    replay = write_replay_dir(spark, sf_dir, n_files=8)
-    state_root = tempfile.mkdtemp(prefix="qsketch_state_")
-    checkpoint = tempfile.mkdtemp(prefix="qsketch_ckpt_")
-    latest: dict[str, str] = {}
 
     def _bottomk(df: DataFrame) -> DataFrame:
         w = Window.partitionBy("event_type").orderBy("h", "event_id")
@@ -1216,57 +1051,28 @@ def streaming_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("event_type", "event_id", "h", "v")
         )
 
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        s = batch_df.sparkSession
-        out = os.path.join(state_root, f"v{epoch_id}")
-        # Retry idempotence: if the checkpoint commit failed after a
-        # successful write, the engine replays this epoch and
-        # latest["dir"] already points at OUR OWN output — merging
-        # against it would double-count this batch's n (the bottom-k
-        # sample is retry-safe via union+distinct, counts are not).
-        # Derive the parent from the PRE-batch state instead.
-        parent = latest.get("dir")
-        if parent == out:
-            prev = os.path.join(state_root, f"v{epoch_id - 1}")
-            parent = prev if os.path.isdir(prev) else None
-        part = _bottomk(
+    def fold(batch_df: DataFrame, prev: dict | None) -> dict[str, DataFrame]:
+        sample = _bottomk(
             batch_df.select(
                 "event_type", "event_id", F.col("value").cast("double").alias("v")
             ).withColumn("h", F.md5(F.col("event_id").cast("string")))
         )
-        cnt = batch_df.groupBy("event_type").agg(F.count("*").alias("n"))
-        if parent is not None:
-            part = _bottomk(
-                s.read.parquet(os.path.join(parent, "sample"))
-                .unionByName(part)
-                .distinct()
-            )
-            cnt = (
-                s.read.parquet(os.path.join(parent, "counts"))
-                .unionByName(cnt)
+        counts = batch_df.groupBy("event_type").agg(F.count("*").alias("n"))
+        if prev is not None:
+            sample = _bottomk(prev["sample"].unionByName(sample).distinct())
+            counts = (
+                prev["counts"].unionByName(counts)
                 .groupBy("event_type")
                 .agg(F.sum("n").alias("n"))
             )
-        part.write.mode("overwrite").parquet(os.path.join(out, "sample"))
-        cnt.write.mode("overwrite").parquet(os.path.join(out, "counts"))
-        latest["dir"] = out
+        return {"sample": sample, "counts": counts}
 
-    try:
-        q = (
-            read_replay_stream(spark, replay)
-            .writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        sample = spark.read.parquet(os.path.join(latest["dir"], "sample"))
-        counts = spark.read.parquet(os.path.join(latest["dir"], "counts"))
+    def final(sample: DataFrame, counts: DataFrame) -> DataFrame:
         agg = sample.groupBy("event_type").agg(
             F.expr("array_sort(collect_list(v))").alias("sv"),
             F.count("*").cast("long").alias("n_sampled"),
         )
-        final = agg.join(
+        return agg.join(
             F.broadcast(
                 counts.select(
                     "event_type", F.col("n").cast("long").alias("n_events")
@@ -1285,11 +1091,10 @@ def streaming_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for name, num, den in SKETCH_QUANTILES
             ],
         )
-        return _pin_result(final)
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
-        shutil.rmtree(checkpoint, ignore_errors=True)
+
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as replay:
+        stream = read_replay_stream(spark, write_replay_dir(spark, sf_dir, out=replay))
+        return _fold_epochs(stream, fold, final)
 
 
 QUERIES["streaming_quantile_sketch"] = streaming_quantile_sketch
@@ -1319,43 +1124,22 @@ ORACLE["streaming_quantile_sketch"] = _streaming_quantile_oracle()
 
 
 def streaming_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob as _glob
-    import tempfile
-
-    from google_cloud_ecommerce_spark.catalog import load_table
     from google_cloud_ecommerce_spark.operators.multimodal import (
         WAV_FEATURES_SCHEMA,
         wav_feature_batches,
     )
 
-    replay = tempfile.mkdtemp(prefix="spark_graft_media_")
     docs = load_table(spark, sf_dir, "documents")
-    n_files = 4
-    # chunk by hash-mod of doc_id, NOT by id range: range chunking
-    # assumes dense 0-based ids and silently drops docs beyond
-    # n_files*per on sparse corpora
-    for i in range(n_files):
-        chunk = docs.filter(F.pmod(F.col("doc_id"), F.lit(n_files)) == i)
-        stage = os.path.join(replay, f"_stage_{i}")
-        chunk.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = _glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        shutil.move(part, os.path.join(replay, f"chunk-{i:04d}.parquet"))
-        shutil.rmtree(stage)
-
-    try:
-        stream = (
-            spark.readStream.schema(
-                "doc_id bigint, text string, lang string, source string, n_chars bigint"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(replay)
-        )
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as replay:
+        # 4 chunks by doc_id mod 4, NOT by id range (range chunking
+        # assumes dense 0-based ids and silently drops the rest); decode
+        # is per row, so chunk order carries no meaning and needs no rank
+        land_chunks(docs.withColumn("file_id", F.pmod("doc_id", F.lit(4))), replay, 4)
+        stream = read_replay_stream(spark, replay, ddl=DOCUMENTS_DDL)
         feats = stream.select("doc_id", "n_chars").mapInPandas(
             wav_feature_batches, WAV_FEATURES_SCHEMA
         )
         return _run_to_memory(feats, "append")
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
 
 
 QUERIES["streaming_media_features"] = streaming_media_features
@@ -1414,11 +1198,10 @@ def _rate_limit_state_fn(
 
 
 def streaming_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    replay = write_replay_dir(spark, sf_dir, n_files=8)
-    try:
-        stream = read_replay_stream(spark, replay).select(
-            "user_id", "event_id", F.unix_micros("ts").alias("us"), "event_type"
-        )
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as replay:
+        stream = read_replay_stream(
+            spark, write_replay_dir(spark, sf_dir, out=replay)
+        ).select("user_id", "event_id", F.unix_micros("ts").alias("us"), "event_type")
         decided = stream.groupBy("user_id").applyInPandasWithState(
             _rate_limit_state_fn,
             outputStructType=_RL_OUTPUT_SCHEMA,
@@ -1436,8 +1219,6 @@ def streaming_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("rn").alias("max_burst"),
         )
         return _pin_result(final)
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
 
 
 QUERIES["streaming_rate_limit"] = streaming_rate_limit
@@ -1471,9 +1252,8 @@ HH_TOP_N = 20
 
 
 def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    replay = write_replay_dir(spark, sf_dir, n_files=8)
-    try:
-        stream = read_replay_stream(spark, replay)
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as replay:
+        stream = read_replay_stream(spark, write_replay_dir(spark, sf_dir, out=replay))
         agg = stream.groupBy("user_id").agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,4)")).alias("sv"),
@@ -1490,8 +1270,6 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         top = final.orderBy(F.desc("n_events"), F.asc("user_id")).limit(HH_TOP_N)
         return _pin_result(top)
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
 
 
 QUERIES["streaming_heavy_hitters"] = streaming_heavy_hitters
@@ -1518,15 +1296,13 @@ ORACLE["streaming_heavy_hitters"] = f"""
 
 
 def streaming_lakehouse_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as tmp:
+        out = os.path.join(tmp, "lake")
+        stream = read_replay_stream(
+            spark, write_replay_dir(spark, sf_dir, out=os.path.join(tmp, "replay"))
+        )
 
-    replay = write_replay_dir(spark, sf_dir, n_files=8)
-    out = tempfile.mkdtemp(prefix="spark_graft_lakehouse_")
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_lakehouse_ckpt_")
-    try:
-        stream = read_replay_stream(spark, replay)
-
-        def write_epoch(batch_df, epoch_id: int) -> None:
+        def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
             (
                 batch_df.withColumn("day", F.to_date("ts"))
                 .write.mode("overwrite")
@@ -1534,23 +1310,13 @@ def streaming_lakehouse_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .parquet(f"{out}/epoch={epoch_id}")
             )
 
-        q = (
-            stream.writeStream.foreachBatch(write_epoch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drain(stream.writeStream.foreachBatch(write_epoch))
         landed = spark.read.parquet(out)  # partition discovery: epoch, day
         final = landed.groupBy("day").agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
         )
         return _pin_result(final)
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(checkpoint, ignore_errors=True)
 
 
 QUERIES["streaming_lakehouse_ingest"] = streaming_lakehouse_ingest
@@ -1594,8 +1360,6 @@ ORACLE["streaming_lakehouse_ingest"] = """
 
 
 def streaming_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from google_cloud_ecommerce_spark.io import ensure_day_partitioned_events
     from google_cloud_ecommerce_spark.lakehouse import (
         table_commit_rewrite,
@@ -1605,27 +1369,21 @@ def streaming_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from google_cloud_ecommerce_spark.queries.scale import _apply_merge, _changelog_of
 
     src = ensure_day_partitioned_events(spark, sf_dir)
-    replay = write_replay_dir(spark, sf_dir, n_files=8, overlap_every=3)
-    out = tempfile.mkdtemp(prefix="spark_graft_smerge_")
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_smerge_ckpt_")
-    try:
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as tmp:
+        out = os.path.join(tmp, "table")
+        replay = write_replay_dir(
+            spark, sf_dir, overlap_every=3, out=os.path.join(tmp, "replay")
+        )
         table_create(spark.read.parquet(src), out)
-        stream = read_replay_stream(spark, replay)
 
-        def merge_epoch(batch_df, epoch_id: int) -> None:
+        def merge_epoch(batch_df: DataFrame, epoch_id: int) -> None:
             chg = _changelog_of(
                 batch_df.withColumn("day", F.to_date("ts"))
                 .withColumn("hour", F.hour("ts").cast("int"))
             )
             table_commit_rewrite(_apply_merge(table_read(spark, out), chg), out)
 
-        q = (
-            stream.writeStream.foreachBatch(merge_epoch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drain(read_replay_stream(spark, replay).writeStream.foreachBatch(merge_epoch))
         mutated = table_read(spark, out)
         final = mutated.groupBy("day").agg(
             F.count("*").alias("n_events"),
@@ -1634,10 +1392,6 @@ def streaming_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("event_type") == "backfill").cast("long")).alias("n_backfill"),
         )
         return _pin_result(final)
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(checkpoint, ignore_errors=True)
 
 
 # the batch MERGE oracle verbatim: stream + batch must converge on the
@@ -1664,8 +1418,6 @@ ORACLE["streaming_merge_upsert"] = MERGE_UPSERT_SQL
 
 
 def streaming_jdbc_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from google_cloud_ecommerce_spark.io import read_jdbc, write_jdbc
     from google_cloud_ecommerce_spark.queries.scale import (
         _DERBY_DRIVER,
@@ -1673,42 +1425,31 @@ def streaming_jdbc_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         _derby_url,
     )
 
-    import tempfile
-
     db = f"g{uuid.uuid4().hex[:12]}"
-    replay = write_replay_dir(spark, sf_dir, n_files=8)
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_jdbc_ckpt_")
+    first = {"v": True}
+
+    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
+        mode = "overwrite" if first["v"] else "append"
+        first["v"] = False
+        url = _derby_url(db, create=True) if mode == "overwrite" else _derby_url(db)
+        write_jdbc(batch_df, url, "events_sink", mode=mode, driver=_DERBY_DRIVER)
+
     try:
-        stream = read_replay_stream(spark, replay).select(
-            "event_id", "user_id", "event_type", "value"
-        )
-
-        first = {"v": True}
-
-        def write_epoch(batch_df, epoch_id: int) -> None:
-            mode = "overwrite" if first["v"] else "append"
-            first["v"] = False
-            url = _derby_url(db, create=True) if mode == "overwrite" else _derby_url(db)
-            write_jdbc(batch_df, url, "events_sink", mode=mode, driver=_DERBY_DRIVER)
-
-        q = (
-            stream.writeStream.foreachBatch(write_epoch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as replay:
+            stream = read_replay_stream(
+                spark, write_replay_dir(spark, sf_dir, out=replay)
+            ).select("event_id", "user_id", "event_type", "value")
+            _drain(stream.writeStream.foreachBatch(write_epoch))
         back = read_jdbc(spark, _derby_url(db), "events_sink", driver=_DERBY_DRIVER)
         final = back.groupBy("event_type").agg(
             F.count_distinct("event_id").alias("n_events"),
             F.count_distinct("user_id").alias("n_users"),
         )
-        pinned = _pin_result(final)
-        _derby_drop(spark, db)
-        return pinned
+        return _pin_result(final)
     finally:
-        shutil.rmtree(replay, ignore_errors=True)
-        shutil.rmtree(checkpoint, ignore_errors=True)
+        # also on a failed stream: the in-memory database would otherwise
+        # stay in the JVM for the rest of the session
+        _derby_drop(spark, db)
 
 
 QUERIES["streaming_jdbc_sink"] = streaming_jdbc_sink
@@ -1733,9 +1474,8 @@ ORACLE["streaming_jdbc_sink"] = """
 def streaming_gap_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from google_cloud_ecommerce_spark.streaming.replay import write_gap_replay_dir
 
-    replay = write_gap_replay_dir(spark, sf_dir, n_slices=12)
-    try:
-        stream = read_replay_stream(spark, replay, max_files_per_trigger=1)
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as replay:
+        stream = read_replay_stream(spark, write_gap_replay_dir(spark, sf_dir, out=replay))
         # no count_distinct: distinct aggregates are unsupported on
         # streams (state would be unbounded per group)
         agg = stream.groupBy(F.to_date("ts").alias("day")).agg(
@@ -1744,8 +1484,6 @@ def streaming_gap_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
         )
         return _run_to_memory(agg, "complete")
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
 
 
 QUERIES["streaming_gap_replay"] = streaming_gap_replay
@@ -1778,14 +1516,11 @@ ORACLE["streaming_gap_replay"] = """
 
 
 def streaming_version_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from google_cloud_ecommerce_spark.lakehouse import write_change_feed
     from google_cloud_ecommerce_spark.queries.scale import _build_cdc_table
 
     root = _build_cdc_table(spark, sf_dir)
-    feed = tempfile.mkdtemp(prefix="spark_graft_vfeed_")
-    try:
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as feed:
         assert write_change_feed(spark, root, feed, key_col="event_id") == [1, 2]
         schema = spark.read.parquet(feed).schema
         stream = (
@@ -1803,8 +1538,6 @@ def streaming_version_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sum_value"),
         )
         return _pin_result(_run_to_memory(agg, "complete"))
-    finally:
-        shutil.rmtree(feed, ignore_errors=True)
 
 
 from google_cloud_ecommerce_spark.queries.scale import (  # noqa: E402
@@ -1869,19 +1602,17 @@ ORACLE["streaming_version_feed"] = f"""
 
 
 def streaming_manifest_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from google_cloud_ecommerce_spark.lakehouse import (
         table_commit_append,
         table_create,
         table_read,
     )
 
-    replay = write_replay_dir(spark, sf_dir, n_files=8)
-    root = tempfile.mkdtemp(prefix="spark_graft_mingest_")
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_mingest_ckpt_")
-    try:
-        stream = read_replay_stream(spark, replay)
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as tmp:
+        root = os.path.join(tmp, "table")
+        stream = read_replay_stream(
+            spark, write_replay_dir(spark, sf_dir, out=os.path.join(tmp, "replay"))
+        )
         # v0 is an EMPTY table created before the stream starts, so
         # EVERY epoch (including 0) goes through the txn-guarded append
         # path — a restart that redelivers any epoch is a manifest-level
@@ -1893,26 +1624,16 @@ def streaming_manifest_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         table_create(empty, root)
 
-        def append_epoch(batch_df, epoch_id: int) -> None:
+        def append_epoch(batch_df: DataFrame, epoch_id: int) -> None:
             rows = batch_df.withColumn("day", F.to_date("ts"))
             table_commit_append(rows, root, txn=("mingest", int(epoch_id)))
 
-        q = (
-            stream.writeStream.foreachBatch(append_epoch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drain(stream.writeStream.foreachBatch(append_epoch))
         final = table_read(spark, root).groupBy("day").agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
         )
         return _pin_result(final)
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
-        shutil.rmtree(root, ignore_errors=True)
-        shutil.rmtree(checkpoint, ignore_errors=True)
 
 
 QUERIES["streaming_manifest_ingest"] = streaming_manifest_ingest

@@ -6,18 +6,28 @@ windows (the part complete-mode oracles can't see)."""
 from __future__ import annotations
 
 import glob
+import os
 import shutil
+import tempfile
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from google_cloud_ecommerce_spark.catalog import load_table
 from google_cloud_ecommerce_spark.queries.reference import daily_events
 from google_cloud_ecommerce_spark.streaming import jobs
 from google_cloud_ecommerce_spark.streaming.replay import (
+    land_chunks,
     read_replay_stream,
     write_replay_dir,
 )
+
+# (table, total order, key) of every replay the entries cut by rank
+REPLAYS = [
+    ("events", ("ts", "event_id"), "event_id"),
+    ("documents", ("doc_id",), "doc_id"),
+]
 
 
 def test_replay_dir_partitions_all_rows(spark, sf_smoke):
@@ -32,14 +42,17 @@ def test_replay_dir_partitions_all_rows(spark, sf_smoke):
 
 
 def test_overlap_injects_duplicates(spark, sf_smoke):
-    base = load_table(spark, sf_smoke, "events").count()
-    d = write_replay_dir(spark, sf_smoke, n_files=4, overlap_every=5)
-    try:
-        raw = spark.read.parquet(d)
-        assert raw.count() > base  # duplicates present on the wire
-        assert raw.select("event_id").distinct().count() == base
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    for table, order, key in REPLAYS:
+        base = load_table(spark, sf_smoke, table).count()
+        d = write_replay_dir(
+            spark, sf_smoke, n_files=4, overlap_every=5, table=table, order=order
+        )
+        try:
+            raw = spark.read.parquet(d)
+            assert raw.count() > base  # duplicates present on the wire
+            assert raw.select(key).distinct().count() == base
+        finally:
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def test_stream_equals_batch_daily_events(spark, sf_smoke):
@@ -264,55 +277,77 @@ def test_replay_dirs_raise_clearly_on_empty_events(spark, tmp_path):
         write_gap_replay_dir(spark, sf, n_slices=4)
 
 
-def _chunk_ids(d):
+def _chunks(d):
+    return sorted(glob.glob(f"{d}/chunk-*.parquet"))
+
+
+def _chunk_ids(d, key="event_id"):
     import pyarrow.parquet as pq
 
     return [
-        sorted(pq.read_table(f, columns=["event_id"]).column(0).to_pylist())
-        for f in sorted(glob.glob(f"{d}/chunk-*.parquet"))
+        sorted(pq.read_table(f, columns=[key]).column(0).to_pylist())
+        for f in _chunks(d)
     ]
 
 
 def test_replay_chunks_match_window_reference(spark, sf_smoke):
     """Row for row, every chunk holds what the window form deals it:
-    rn = row_number() OVER (ORDER BY ts, event_id) - 1, file_id =
-    rn * n_files / n, plus the overlap duplicates moved one chunk on."""
+    rn = row_number() OVER (ORDER BY <order>) - 1, file_id =
+    rn * n_files / n, plus the overlap duplicates moved one chunk on.
+    The file source replays in mtime order, so the chunk mtimes rise
+    in chunk order, and a chunk landed later (a flush sentinel) is
+    numbered and timed after all of them."""
     from pyspark.sql import Window
 
     n_files = 4
-    events = load_table(spark, sf_smoke, "events")
-    n = events.count()
-    numbered = events.select(
-        "event_id",
-        (F.row_number().over(Window.orderBy("ts", "event_id")) - 1).alias("rn"),
-    ).withColumn("file_id", (F.col("rn") * n_files / F.lit(n)).cast("int"))
-    rows = numbered.collect()
-    for overlap_every in (0, 5):
-        want = [[] for _ in range(n_files)]
-        for r in rows:
-            want[r.file_id].append(r.event_id)
-            if overlap_every and r.rn % overlap_every == 0 and r.file_id < n_files - 1:
-                want[r.file_id + 1].append(r.event_id)
-        d = write_replay_dir(spark, sf_smoke, n_files=n_files, overlap_every=overlap_every)
-        try:
-            assert _chunk_ids(d) == [sorted(w) for w in want]
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
+    for table, order, key in REPLAYS:
+        rows_in = load_table(spark, sf_smoke, table)
+        n = rows_in.count()
+        numbered = rows_in.select(
+            key,
+            (F.row_number().over(Window.orderBy(*order)) - 1).alias("rn"),
+        ).withColumn("file_id", (F.col("rn") * n_files / F.lit(n)).cast("int"))
+        rows = numbered.collect()
+        for overlap_every in (0, 5):
+            want = [[] for _ in range(n_files)]
+            for r in rows:
+                want[r.file_id].append(r[key])
+                if overlap_every and r.rn % overlap_every == 0 and r.file_id < n_files - 1:
+                    want[r.file_id + 1].append(r[key])
+            d = write_replay_dir(
+                spark, sf_smoke, n_files, overlap_every, table=table, order=order
+            )
+            try:
+                assert _chunk_ids(d, key) == [sorted(w) for w in want]
+                sentinel = rows_in.limit(1).withColumn("file_id", F.lit(0))
+                assert land_chunks(sentinel, d, 1) == 1
+                chunks = _chunks(d)
+                assert [os.path.basename(f) for f in chunks] == [
+                    f"chunk-{i:04d}.parquet" for i in range(n_files + 1)
+                ]
+                mtimes = [os.path.getmtime(f) for f in chunks]
+                assert mtimes == sorted(set(mtimes))
+            finally:
+                shutil.rmtree(d, ignore_errors=True)
 
 
 def test_replay_dir_runs_at_most_seven_jobs(spark, sf_smoke):
     """Range checkpoint (3 jobs), collected partition offsets (2) and
-    the one partitioned write (2): no separate count, no offsets join."""
-    load_table(spark, sf_smoke, "events")  # any first-touch mirror work
+    the one partitioned write (2): no separate count, no offsets join —
+    for every table a replay is cut from."""
     sc = spark.sparkContext
-    group = f"replay_{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, "write_replay_dir job count")
-    try:
-        d = write_replay_dir(spark, sf_smoke, n_files=4, overlap_every=5)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    shutil.rmtree(d, ignore_errors=True)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 7
+    for table, order, _key in REPLAYS:
+        load_table(spark, sf_smoke, table)  # any first-touch mirror work
+        group = f"replay_{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "write_replay_dir job count")
+        try:
+            d = write_replay_dir(
+                spark, sf_smoke, n_files=4, overlap_every=5, table=table, order=order
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        shutil.rmtree(d, ignore_errors=True)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 7, table
 
 
 def test_pin_result_leaves_no_result_dir(spark, sf_smoke):
@@ -325,3 +360,76 @@ def test_pin_result_leaves_no_result_dir(spark, sf_smoke):
     pinned = jobs._pin_result(src)
     assert set(glob.glob(pattern)) == before
     assert sorted(pinned.collect()) == sorted(src.collect())
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "streaming_daily_events",
+        "streaming_lakehouse_ingest",
+        "streaming_incremental_mv",
+        "streaming_two_level_window",
+        "streaming_corpus_prep",
+    ],
+)
+def test_entry_removes_its_scratch_dirs_and_result_outlives_them(spark, sf_smoke, name):
+    """The replay, checkpoint, state and sink dirs an entry makes are
+    gone when it returns, and its result reads none of them."""
+    root = tempfile.gettempdir()
+
+    def dirs():
+        return {e for e in os.listdir(root) if os.path.isdir(os.path.join(root, e))}
+
+    # dirs that live as long as the JVM or the table (the artifact root
+    # made by the first stream, table mirrors) are not the call's
+    for table in ("events", "documents"):
+        load_table(spark, sf_smoke, table)
+    jobs.streaming_daily_events(spark, sf_smoke)
+    before = dirs()
+    result = getattr(jobs, name)(spark, sf_smoke)
+    assert dirs() - before == set()
+    assert result.collect()
+
+
+def test_corpus_prep_keeps_offset_doc_ids(spark, sf_smoke, tmp_path):
+    """Replay chunks are cut by doc_id rank, not by id range: documents
+    whose ids do not start at 0 all reach the stream, so the result
+    still matches the batch prep SQL."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from google_cloud_ecommerce_spark.operators.pipeline import (
+        PRETRAINING_CORPUS_PREP_SQL,
+    )
+    from tests.oracle_parity import compare, duckdb_connect
+
+    docs = pq.read_table(os.path.join(sf_smoke, "documents.parquet"))
+    i = docs.schema.get_field_index("doc_id")
+    docs = docs.set_column(i, "doc_id", pc.add(docs.column(i), 10**6))
+    pq.write_table(docs, tmp_path / "documents.parquet")
+    con = duckdb_connect(str(tmp_path))
+    try:
+        result = jobs.streaming_corpus_prep(spark, str(tmp_path))
+        problems = compare(result, con, PRETRAINING_CORPUS_PREP_SQL)
+    finally:
+        con.close()
+    assert not problems, problems
+
+
+def test_jdbc_sink_drops_its_database_when_the_stream_fails(spark, sf_smoke, monkeypatch):
+    """A failed stream is stopped and still drops its in-memory Derby
+    database, which would otherwise live as long as the JVM."""
+    from google_cloud_ecommerce_spark import io
+    from google_cloud_ecommerce_spark.queries import scale
+
+    dropped = []
+    monkeypatch.setattr(scale, "_derby_drop", lambda _spark, db: dropped.append(db))
+
+    def failing_write(*args, **kwargs):
+        raise RuntimeError("sink unavailable")
+
+    monkeypatch.setattr(io, "write_jdbc", failing_write)
+    with pytest.raises(Exception, match="sink unavailable"):
+        jobs.streaming_jdbc_sink(spark, sf_smoke)
+    assert len(dropped) == 1
+    assert not spark.streams.active
