@@ -281,7 +281,7 @@ def _chunks(d):
     return sorted(glob.glob(f"{d}/chunk-*.parquet"))
 
 
-def _chunk_ids(d, key="event_id"):
+def _chunk_ids(d, key):
     import pyarrow.parquet as pq
 
     return [
