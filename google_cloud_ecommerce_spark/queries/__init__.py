@@ -102,24 +102,25 @@ def _modules():
 # retryable rebase): lakehouse_change_feed, streaming_version_feed,
 # lakehouse_pruned_read, lakehouse_append_ingest,
 # streaming_manifest_ingest;
-# 7 re-checks whose n-gram, repetition-gate or Gopher-count expressions
-# moved onto the shared document-feature helpers in operators/_common.py
-# (ngrams_expr, let_expr, the per-row repetition gate, the Gopher counts):
-# pretraining_corpus_prep, corpus_to_training_batches, gopher_gates,
-# curation_funnel_v2, dedup_ngram_jaccard, dedup_prefix_filter and
-# dedup_simhash (which already held an r06-last slot). The six that held
+# 8 re-checks whose n-gram, repetition-gate, Gopher-count or lambda-bound
+# expressions moved onto the shared document-feature helpers in
+# operators/_common.py (ngrams_expr, let_expr, the per-row repetition
+# gate, the Gopher counts): pretraining_corpus_prep,
+# corpus_to_training_batches, gopher_gates, curation_funnel_v2,
+# dedup_ngram_jaccard, dedup_prefix_filter, feature_hash_vectors and
+# dedup_simhash (which already held an r06-last slot). The seven that held
 # no slot took the two remaining non-streaming r05-last slots
-# (tokenizer_fertility, user_activity_bitmap) and the first four r06-last
+# (tokenizer_fertility, user_activity_bitmap) and the first five r06-last
 # slots (balanced_group_sample, corpus_mixture_sample,
-# corpus_quality_dashboard, corpus_stats), all green in CORRECTNESS_r12
-# and r13 and untouched by that change;
+# corpus_quality_dashboard, corpus_stats, dedup_embedding_cosine), all
+# green in CORRECTNESS_r12 and r13 and untouched by that change;
 # tpch_q1_pricing_summary as the cross-round canary;
 # then strictly oldest evidence: the ten streaming r05-last names
 # (streaming_band_enrichment onward), rewritten by the harness change;
-# then 7 of the first 15 of the 44 r06-last names alphabetically,
+# then 6 of the first 15 of the 44 r06-last names alphabetically,
 # skipping the three that held code-changed slots
 # (corpus_to_training_batches, hybrid_search_rrf, pretraining_corpus_prep),
-# the three that gave way to the rank re-checks above and the four that
+# the three that gave way to the rank re-checks above and the five that
 # gave way to the document-feature re-checks. Every name has an oracle;
 # tests/test_registry.py pins the slate and the no-wasted-slot rule.
 PRIORITY: tuple[str, ...] = (
@@ -153,13 +154,14 @@ PRIORITY: tuple[str, ...] = (
     "lakehouse_pruned_read",
     "lakehouse_append_ingest",
     "streaming_manifest_ingest",
-    # --- 7 re-checks: moved onto the shared document-feature helpers ---
+    # --- 8 re-checks: moved onto the shared document-feature helpers ---
     "pretraining_corpus_prep",
     "corpus_to_training_batches",
     "gopher_gates",
     "curation_funnel_v2",
     "dedup_ngram_jaccard",
     "dedup_prefix_filter",
+    "feature_hash_vectors",
     "dedup_simhash",
     # --- cross-round canary ---
     "tpch_q1_pricing_summary",
@@ -174,8 +176,7 @@ PRIORITY: tuple[str, ...] = (
     "streaming_similarity_topk",
     "streaming_two_level_window",
     "streaming_view_purchase_full_outer",
-    # --- 7 re-checks: next-oldest evidence (r06-last), alphabetical ---
-    "dedup_embedding_cosine",
+    # --- 6 re-checks: next-oldest evidence (r06-last), alphabetical ---
     "dedup_segments",
     "doc_fingerprint",
     "doc_tokens_udtf",

@@ -66,12 +66,12 @@ _FAMILY_ANCHORS = {
 # the last three r06-last slots. The five entries whose stream plumbing
 # moved into the shared harness (_drain, chunk landing, epoch fold) and
 # that held no slot took five of the seven non-streaming r05-last slots
-# (green in r12 and r13, untouched by that change). The six entries
-# whose n-gram, repetition-gate or Gopher-count expressions moved onto
-# the shared document-feature helpers (operators/_common.py) and that
-# held no slot took the two remaining non-streaming r05-last slots and
-# the first four r06-last slots; dedup_simhash, moved too, keeps the
-# slot it held. An undocumented re-check is still a wasted slot.
+# (green in r12 and r13, untouched by that change). The seven entries
+# whose n-gram, repetition-gate, Gopher-count or lambda-bound expressions
+# moved onto the shared document-feature helpers (operators/_common.py)
+# and that held no slot took the two remaining non-streaming r05-last
+# slots and the first five r06-last slots; dedup_simhash, moved too,
+# keeps the slot it held. An undocumented re-check is still a wasted slot.
 _RECHECK_SLATE = {
     # k-means / PQ trainers rewritten since their last CORRECTNESS row
     "similarity_pq_topk", "similarity_ivfpq_topk", "pq_encode",
@@ -89,11 +89,11 @@ _RECHECK_SLATE = {
     "lakehouse_change_feed", "streaming_version_feed",
     "lakehouse_pruned_read", "lakehouse_append_ingest",
     "streaming_manifest_ingest",
-    # n-gram / repetition-gate / Gopher-count expressions moved onto the
-    # shared document-feature helpers
+    # n-gram / repetition-gate / Gopher-count / lambda-bound expressions
+    # moved onto the shared document-feature helpers
     "pretraining_corpus_prep", "corpus_to_training_batches",
     "gopher_gates", "curation_funnel_v2", "dedup_ngram_jaccard",
-    "dedup_prefix_filter", "dedup_simhash",
+    "dedup_prefix_filter", "feature_hash_vectors", "dedup_simhash",
     # cross-round canary
     "tpch_q1_pricing_summary",
     # oldest evidence: last driver row is r05 (the deferred tail)
@@ -102,10 +102,10 @@ _RECHECK_SLATE = {
     "streaming_media_features", "streaming_purchase_attribution_outer",
     "streaming_rate_limit", "streaming_similarity_topk",
     "streaming_two_level_window", "streaming_view_purchase_full_outer",
-    # next-oldest evidence: last driver row is r06 (7 of the first 15,
-    # alphabetical; the other eight gave way to the rank and
+    # next-oldest evidence: last driver row is r06 (6 of the first 15,
+    # alphabetical; the other nine gave way to the rank and
     # document-feature re-checks)
-    "dedup_embedding_cosine", "dedup_segments", "doc_fingerprint",
+    "dedup_segments", "doc_fingerprint",
     "doc_tokens_udtf", "embedding_dim_stats", "expanded_keyword_search",
     "length_bucket_batches",
 }
