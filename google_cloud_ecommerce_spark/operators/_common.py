@@ -17,9 +17,34 @@ ANSI-SQL oracle engine, bit-for-bit:
 These helpers return SQL expression *strings* (used via F.expr) because
 the nested higher-order functions are far more readable in SQL form,
 and Spark compiles them to the same codegen'd plan as Column-API calls.
+
+Document features (the Spark side; each oracle keeps its own SQL, the
+independent twin):
+
+  - ``ngrams_expr(toks, k)``: sliding k-grams of a token array as
+    ``zip_with`` over k slices of it, empty below k tokens.
+  - ``let_expr(value, var, body)``: binds ``value`` once per row for a
+    body that reads it from many lambda elements.
+  - ``repetition_expr(toks)``: the repetition gate's (n_bigrams,
+    max_rep) per row, a run-length fold over the sorted bigrams.
+  - ``gopher_counts`` / ``gopher_rules`` / ``gopher_keep``: the Gopher
+    quality-rule counts over a token array, the five rules over those
+    counts and the keep predicate (all five hold).
+
+Why lambda bodies read only lambda variables: a body runs once per
+array element. When a body reads a column (a token array indexed by
+the lambda variable), Catalyst may inline that column's whole
+expression into the body, so the tokenizer runs once per element,
+O(n^2) a document; streaming_corpus_prep spent 30-45 s a call at
+sf0.01 this way. Outer values belong in argument position (the slices
+above, the ``array()`` of ``let_expr``), which runs once per row.
+tests/test_plans.py lints every registry plan for outer work inside
+lambda bodies.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 import numpy as np
 
@@ -106,3 +131,99 @@ def sql_double_array(values: list[float]) -> str:
 
 def spark_double_array(values: list[float]) -> str:
     return "array(" + ", ".join(f"CAST({v!r} AS DOUBLE)" for v in values) + ")"
+
+
+# Tiny per-language stopword lists (heuristic language ID in text.py;
+# the Gopher stopword rule reads the English one).
+STOPWORDS = {
+    "de": ["der", "die", "das", "und", "nicht", "ist"],
+    "en": ["the", "a", "and", "of", "to", "is"],
+    "es": ["el", "la", "los", "y", "que", "es"],
+    "fr": ["le", "les", "et", "que", "des", "est"],
+    "zh": ["de", "shi", "bu", "le", "zai", "he"],
+}
+
+
+def ngrams_expr(toks: str, k: int, fields: tuple[str, ...] = ()) -> str:
+    """Sliding k-grams of the token array ``toks``, in order: each the
+    ' '-joined k consecutive tokens, or with ``fields`` (one name per
+    position) a struct of them. Empty when size(toks) < k. ``toks``
+    appears only in slice arguments, so no lambda body reads it."""
+    n = f"greatest(size({toks}) - {k - 1}, 0)"
+    slices = [f"slice({toks}, {j}, {n})" for j in range(1, k + 1)]
+    if fields:
+        cols = ", ".join(f"{f}: STRING" for f in fields)
+        return f"CAST(arrays_zip({', '.join(slices)}) AS ARRAY<STRUCT<{cols}>>)"
+    return reduce(
+        lambda grams, s: f"zip_with({grams}, {s}, (g, t) -> concat(g, ' ', t))",
+        slices,
+    )
+
+
+def let_expr(value: str, var: str, body: str) -> str:
+    """``body`` with ``var`` bound to ``value``, evaluated once per row."""
+    return f"transform(array({value}), {var} -> {body})[0]"
+
+
+def repetition_expr(toks: str) -> str:
+    """struct<n_bigrams, max_rep> (BIGINT) of a token array: its bigram
+    count and the count of its most repeated bigram, both 0 below two
+    tokens. max_rep is the longest run in the sorted bigrams."""
+    run = (
+        "(a, x) -> IF(x = a.prev, "
+        "named_struct('prev', x, 'run', a.run + 1, 'top', greatest(a.top, a.run + 1)), "
+        "named_struct('prev', x, 'run', 1L, 'top', greatest(a.top, 1L)))"
+    )
+    zero = "named_struct('prev', CAST(NULL AS STRING), 'run', 0L, 'top', 0L)"
+    return let_expr(
+        f"array_sort({ngrams_expr(toks, 2)})",
+        "bs",
+        f"named_struct('n_bigrams', CAST(size(bs) AS BIGINT), "
+        f"'max_rep', aggregate(bs, {zero}, {run}, a -> a.top))",
+    )
+
+
+# Gopher quality rules (Rae et al. 2021, appendix A).
+GOPHER_MIN_WORDS = 50
+GOPHER_MAX_WORDS = 100_000
+GOPHER_MIN_MEAN_LEN = 3.0
+GOPHER_MAX_MEAN_LEN = 10.0
+GOPHER_MIN_ALPHA_FRAC = 0.8
+GOPHER_MAX_SYMBOL_RATIO = 0.1
+GOPHER_MIN_STOPWORDS = 2
+
+
+def gopher_counts() -> dict[str, str]:
+    """The integer counts the Gopher rules read, over a ``toks`` column."""
+    en = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
+    return {
+        "n_words": "CAST(size(toks) AS BIGINT)",
+        "n_chars": "aggregate(toks, 0L, (acc, t) -> acc + length(t))",
+        "n_alpha_words": "CAST(size(filter(toks, t -> t rlike '[a-z]')) AS BIGINT)",
+        "n_symbol_words": (
+            "CAST(size(filter(toks, t -> instr(t, '#') > 0 OR instr(t, '...') > 0))"
+            " AS BIGINT)"
+        ),
+        "n_distinct_stop": (
+            f"CAST(size(array_distinct(filter(toks, t -> t IN ({en})))) AS BIGINT)"
+        ),
+    }
+
+
+def gopher_rules() -> list[str]:
+    """The five Gopher rules over the gopher_counts columns, in order:
+    word count, mean word length, alphabetic share, symbol ratio,
+    stopwords. Each ratio divides two integers as DOUBLE."""
+    return [
+        f"n_words >= {GOPHER_MIN_WORDS} AND n_words <= {GOPHER_MAX_WORDS}",
+        f"n_chars / n_words >= {GOPHER_MIN_MEAN_LEN!r}D "
+        f"AND n_chars / n_words <= {GOPHER_MAX_MEAN_LEN!r}D",
+        f"n_alpha_words / n_words >= {GOPHER_MIN_ALPHA_FRAC!r}D",
+        f"n_symbol_words / n_words <= {GOPHER_MAX_SYMBOL_RATIO!r}D",
+        f"n_distinct_stop >= {GOPHER_MIN_STOPWORDS}",
+    ]
+
+
+def gopher_keep() -> str:
+    """The Gopher keep predicate: all five rules hold."""
+    return " AND ".join(f"({r})" for r in gopher_rules())

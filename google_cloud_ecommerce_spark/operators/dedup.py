@@ -42,6 +42,8 @@ from google_cloud_ecommerce_spark.operators._common import (
     N_MINHASH,
     dot_expr,
     dot_sql,
+    let_expr,
+    ngrams_expr,
     token_hash_expr,
     token_hash_sql,
     tokens_expr,
@@ -89,16 +91,17 @@ DEDUP_EXACT_SQL = """
 # MinHash + LSH banding
 # ---------------------------------------------------------------------------
 
-_MINHASH_SPARK = (
-    "transform(array({pairs}), p -> "
-    "array_min(transform(hs, h -> (p[0] * h + p[1]) % {p})))"
-)
-
-
 def _minhash_sig_expr() -> str:
-    """array<bigint> of 16 minhashes over the distinct-token hash set."""
+    """array<bigint> of 16 minhashes over the distinct-token hash set
+    ``hs``, bound once per row (a column read inside the per-coefficient
+    lambda may be inlined there and re-tokenized 16 times)."""
     pairs = ", ".join(f"array({a}L, {b}L)" for a, b in zip(MINHASH_A, MINHASH_B))
-    return _MINHASH_SPARK.format(pairs=pairs, p=MERSENNE31)
+    return let_expr(
+        "hs",
+        "s",
+        f"transform(array({pairs}), p -> "
+        f"array_min(transform(s, h -> (p[0] * h + p[1]) % {MERSENNE31})))",
+    )
 
 
 def _minhash_sig_sql() -> str:
@@ -296,13 +299,17 @@ def _dedup_minhash_sql() -> str:
 # ---------------------------------------------------------------------------
 
 
-def _simhash_expr() -> str:
-    """60-bit simhash over distinct token hashes — Spark side."""
-    return (
+def _simhash_expr(hs: str) -> str:
+    """60-bit simhash over the distinct token hashes ``hs`` — Spark side.
+    ``hs`` is bound once per row: read inside the per-bit lambda, its
+    tokenize + hash would otherwise run 60 times a document."""
+    return let_expr(
+        hs,
+        "hs",
         "aggregate(sequence(0, 59), 0L, (acc, j) -> acc + "
         "IF(aggregate(hs, 0L, (a, h) -> a + "
         "(CASE WHEN (shiftright(h, j) & 1) = 1 THEN 1L ELSE -1L END)) > 0, "
-        "shiftleft(1L, j), 0L))"
+        "shiftleft(1L, j), 0L))",
     )
 
 
@@ -319,15 +326,9 @@ def _simhash_sql() -> str:
 
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc 60-bit simhash fingerprint (the dedup key artifact)."""
-    return (
-        _docs(spark, sf_dir)
-        .select(
-            "doc_id",
-            F.expr(
-                f"transform(array_distinct({tokens_expr('text')}), t -> {token_hash_expr('t')})"
-            ).alias("hs"),
-        )
-        .select("doc_id", F.expr(_simhash_expr()).alias("simhash"))
+    hs = f"transform(array_distinct({tokens_expr('text')}), t -> {token_hash_expr('t')})"
+    return _docs(spark, sf_dir).select(
+        "doc_id", F.expr(_simhash_expr(hs)).alias("simhash")
     )
 
 
@@ -404,10 +405,7 @@ def _dedup_simhash_pairs_sql() -> str:
 # N-gram (3-word shingle) Jaccard
 # ---------------------------------------------------------------------------
 
-_SHINGLE_SPARK = (
-    "array_distinct(transform(sequence(1, greatest(size(toks) - 2, 0)), i -> "
-    "concat(element_at(toks, i), ' ', element_at(toks, i + 1), ' ', element_at(toks, i + 2))))"
-)
+_SHINGLE_SPARK = f"array_distinct({ngrams_expr('toks', 3)})"
 _SHINGLE_SQL = (
     "list_distinct(list_transform(range(1, greatest(len(toks) - 2, 0) + 1), i -> "
     "toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2]))"
@@ -2094,9 +2092,9 @@ ORACLE["lsh_band_sweep"] = _lsh_band_sweep_sql()
 # dedup_segments, which hashes disjoint fixed blocks (block-aligned
 # duplication only).
 #
-# Scale shape: one tokenize+slide explode (the let-binding wrapper
-# binds the token array once per doc — contamination_check's trap
-# notes apply), spans travel as xxhash64 int64 fingerprints through
+# Scale shape: one tokenize+slide explode (_common.ngrams_expr reads
+# the token array only in argument position, once per doc), spans
+# travel as xxhash64 int64 fingerprints through
 # the groupBy and the self-join (never strings); the per-span
 # distinct-doc count is an int64-keyed hash aggregate, so work scales
 # with corpus token count, not pairs. The oracle computes the same
@@ -2105,14 +2103,6 @@ ORACLE["lsh_band_sweep"] = _lsh_band_sweep_sql()
 # ---------------------------------------------------------------------------
 
 SPAN_K = 8  # tokens per sliding window
-
-
-def _span_slide_spark() -> str:
-    parts = ", ".join(f"element_at(toks, i + {j})" for j in range(SPAN_K))
-    return (
-        f"transform(sequence(1, size(toks) - {SPAN_K - 1}), "
-        f"i -> xxhash64(concat_ws(' ', {parts})))"
-    )
 
 
 def _span_slide_sql() -> str:
@@ -2261,10 +2251,9 @@ ORACLE["repeated_span_dedup"] = _repeated_span_dedup_sql()
 
 
 def _pos_span_spark() -> str:
-    parts = ", ".join(f"element_at(toks, i + {j})" for j in range(SPAN_K))
     return (
-        f"transform(sequence(1, size(toks) - {SPAN_K - 1}), "
-        f"i -> struct(i AS pos, xxhash64(concat_ws(' ', {parts})) AS h))"
+        f"transform({ngrams_expr('toks', SPAN_K)}, "
+        f"(s, i) -> named_struct('pos', i + 1, 'h', xxhash64(s)))"
     )
 
 

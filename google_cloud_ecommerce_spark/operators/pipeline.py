@@ -35,6 +35,11 @@ from pyspark.sql import functions as F
 
 from google_cloud_ecommerce_spark.catalog import load_table
 from google_cloud_ecommerce_spark.operators._common import (
+    gopher_counts,
+    gopher_keep,
+    let_expr,
+    ngrams_expr,
+    repetition_expr,
     token_hash_expr,
     token_hash_sql,
     tokens_expr,
@@ -169,14 +174,6 @@ from google_cloud_ecommerce_spark.operators.guards import (  # noqa: E402
 )
 
 
-def _shingle_spark() -> str:
-    parts = ", ".join(f"element_at(toks, i + {j})" for j in range(SHINGLE_K))
-    return (
-        f"transform(sequence(1, size(toks) - {SHINGLE_K - 1}), "
-        f"i -> concat_ws(' ', {parts}))"
-    )
-
-
 def _shingle_sql() -> str:
     parts = " || ' ' || ".join(f"toks[i + {j}]" for j in range(SHINGLE_K))
     return f"list_transform(range(1, len(toks) - {SHINGLE_K - 2}), i -> {parts})"
@@ -224,16 +221,16 @@ def contamination_check(
     #     everything evaluates twice per row (the rule skips generator
     #     inputs that are expressions, so explode(<expr>) stays clean);
     #   - size(<full pipeline>) INSIDE the per-element lambda re-runs
-    #     the pipeline once per shingle (quadratic per doc). The
-    #     1-element transform() wrapper is a let-binding: arr is bound
-    #     once per doc, and the inner lambda only references it.
+    #     the pipeline once per shingle (quadratic per doc). let_expr
+    #     binds arr once per doc, and the inner lambda only reads it.
     toks = docs.select(
         "doc_id", F.expr(tokens_expr("lower(text)")).alias("toks")
     ).filter(F.expr(f"size(toks) >= {SHINGLE_K}"))
-    sh_expr = f"array_distinct({_shingle_spark()})"
-    pair_gen = (
-        f"transform(array({sh_expr}), arr -> transform(arr, "
-        f"s -> named_struct('shingle', s, 'n_shingles', size(arr))))[0]"
+    sh_expr = f"array_distinct({ngrams_expr('toks', SHINGLE_K)})"
+    pair_gen = let_expr(
+        sh_expr,
+        "arr",
+        "transform(arr, s -> named_struct('shingle', s, 'n_shingles', size(arr)))",
     )
     # Shingles travel as xxhash64 fingerprints, never strings: the join
     # key, shuffle rows, and the count_distinct Expand all carry 8-byte
@@ -337,62 +334,40 @@ ORACLE = {
 # Gates are INTEGER comparisons only (n_tokens >= 20; type-token ratio
 # >= 0.2 as n_distinct*5 >= n_tokens; top-bigram share <= 0.2 as
 # max_rep*5 <= n_bigrams) — no float thresholds, so both engines keep
-# or drop exactly the same documents. Dedup keeps the min doc_id per
-# md5(text). Chunk counts come from arithmetic, not an explode:
-# (n_chars-1) DIV stride + 1.
+# or drop exactly the same documents. They are computed per row
+# (quality_gated), so the batch preps and the stream share them and
+# nothing is exploded, aggregated or joined back. Dedup keeps the min
+# doc_id per md5(text). Chunk counts come from arithmetic, not an
+# explode: (n_chars-1) DIV stride + 1.
 # ---------------------------------------------------------------------------
 
 MIN_TOKENS = 20
 
 
-# scan-audit: composition by design: each reused registry operator (gates,
-# dedup, quality) computes an independent per-doc signal; at production SF the
-# per-doc signal table is materialized once by the pipeline writer
-def pretraining_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    toks = docs.select(
-        "doc_id",
-        "lang",
-        "text",
-        "n_chars",
-        F.expr(tokens_expr("lower(text)")).alias("toks"),
-    )
-    base = toks.select(
-        "doc_id",
-        "lang",
-        "text",
-        "n_chars",
-        F.expr("size(toks)").cast("long").alias("n_tokens"),
-        F.expr("size(array_distinct(toks))").cast("long").alias("n_distinct"),
-        F.col("toks"),
-    )
-    rep = (
-        base.filter("n_tokens >= 2")
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(toks) - 1), "
-                    "i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))"
-                )
-            ).alias("bigram"),
+def quality_gated(docs: DataFrame) -> DataFrame:
+    """Rows of a documents frame (batch or stream) that pass the prep
+    quality gates, with the columns they read: toks, n_tokens,
+    n_distinct and the repetition gate's rep.n_bigrams / rep.max_rep."""
+    return (
+        docs.withColumn("toks", F.expr(tokens_expr("lower(text)")))
+        .withColumns(
+            {
+                "n_tokens": F.expr("CAST(size(toks) AS BIGINT)"),
+                "n_distinct": F.expr("CAST(size(array_distinct(toks)) AS BIGINT)"),
+                "rep": F.expr(repetition_expr("toks")),
+            }
         )
-        .groupBy("doc_id", "bigram")
-        .agg(F.count("*").alias("c"))
-        .groupBy("doc_id")
-        .agg(F.sum("c").alias("n_bigrams"), F.max("c").alias("max_rep"))
-    )
-    gated = (
-        base.join(rep, "doc_id")
         .filter(
-            (F.col("n_tokens") >= MIN_TOKENS)
-            & (F.col("n_distinct") * 5 >= F.col("n_tokens"))
-            & (F.col("max_rep") * 5 <= F.col("n_bigrams"))
+            f"n_tokens >= {MIN_TOKENS} AND n_distinct * 5 >= n_tokens "
+            "AND rep.max_rep * 5 <= rep.n_bigrams"
         )
-        # digest computed here so text never shuffles (guide §2.3)
-        .select(
-            "doc_id", "lang", F.md5("text").alias("digest"), "n_chars", "n_tokens"
-        )
+    )
+
+
+def pretraining_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # digest computed here so text never shuffles (guide §2.3)
+    gated = quality_gated(_docs(spark, sf_dir)).select(
+        "doc_id", "lang", F.md5("text").alias("digest"), "n_chars", "n_tokens"
     )
     # keeper via a min() window over the digest instead of aggregate +
     # join-back, which re-planned the whole gated chain a second time
@@ -717,53 +692,14 @@ ORACLE["balanced_group_sample"] = _balanced_group_sample_sql()
 # ---------------------------------------------------------------------------
 
 
-# scan-audit: composition by design: reuses the quality + dedup operators'
-# scans for independent per-doc signals
 def corpus_to_training_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    base = docs.select(
-        "doc_id",
-        "lang",
-        "text",
-        F.expr(tokens_expr("lower(text)")).alias("toks"),
-    ).select(
-        "doc_id",
-        "lang",
-        "text",
-        F.expr("size(toks)").cast("long").alias("n_tokens"),
-        F.expr("size(array_distinct(toks))").cast("long").alias("n_distinct"),
-        "toks",
-    )
-    rep = (
-        base.filter("n_tokens >= 2")
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(toks) - 1), "
-                    "i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))"
-                )
-            ).alias("bigram"),
-        )
-        .groupBy("doc_id", "bigram")
-        .agg(F.count("*").alias("c"))
-        .groupBy("doc_id")
-        .agg(F.sum("c").alias("n_bigrams"), F.max("c").alias("max_rep"))
-    )
-    gated = (
-        base.join(rep, "doc_id")
-        .filter(
-            (F.col("n_tokens") >= MIN_TOKENS)
-            & (F.col("n_distinct") * 5 >= F.col("n_tokens"))
-            & (F.col("max_rep") * 5 <= F.col("n_bigrams"))
-        )
-        # digest computed here so text never shuffles (guide §2.3)
-        .select("doc_id", "lang", F.md5("text").alias("digest"), "n_tokens")
+    # digest computed here so text never shuffles (guide §2.3)
+    gated = quality_gated(_docs(spark, sf_dir)).select(
+        "doc_id", "lang", F.md5("text").alias("digest"), "n_tokens"
     )
     # Round-12 (guide §2.4, the funnel's keeper-window pattern): the
     # md5-keeper was an aggregate + join-back, which re-planned the whole
-    # gated chain (tokenize + bigram explode + two aggregates) a second
-    # time. A min() window over the digest evaluates gated ONCE; the
+    # gated chain a second time. A min() window over the digest evaluates gated ONCE; the
     # split expression depends only on doc_id, so the row set and every
     # output value are unchanged. Interleaved A/B at sf0.1: min
     # 2.14 -> 1.59 s, identical rows.
@@ -864,9 +800,16 @@ def feature_hash_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.expr("map_from_entries(collect_list(struct(b, c)))").alias("m"))
         .select(
             "doc_id",
+            # m is bound once per doc: read in the lambda body, the
+            # map_from_entries was rebuilt for each of the 64 slots
+            # (sf0.1, min of 5: 0.69 -> 0.49 s, identical rows)
             F.expr(
-                f"transform(sequence(0, {FEATURE_DIM - 1}), "
-                "i -> coalesce(element_at(m, CAST(i AS BIGINT)), 0L))"
+                let_expr(
+                    "m",
+                    "mm",
+                    f"transform(sequence(0, {FEATURE_DIM - 1}), "
+                    "i -> coalesce(element_at(mm, CAST(i AS BIGINT)), 0L))",
+                )
             ).alias("features"),
         )
         .select(
@@ -1293,17 +1236,9 @@ def curation_funnel_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from google_cloud_ecommerce_spark.operators._common import spark_double_array
     from google_cloud_ecommerce_spark.operators.dedup import dedup_span_excision
     from google_cloud_ecommerce_spark.operators.text import (
-        GOPHER_MAX_MEAN_LEN,
-        GOPHER_MAX_SYMBOL_RATIO,
-        GOPHER_MAX_WORDS,
-        GOPHER_MIN_ALPHA_FRAC,
-        GOPHER_MIN_MEAN_LEN,
-        GOPHER_MIN_STOPWORDS,
-        GOPHER_MIN_WORDS,
         QC_BIAS,
         QC_DIM,
         QC_WEIGHTS,
-        STOPWORDS,
         char_entropy_gate,
     )
 
@@ -1324,8 +1259,6 @@ def curation_funnel_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # empirical loop wins). Net: 6 corpus passes -> 3. The oracle SQL is
     # UNCHANGED (still composes the gate oracles); parity re-proven at
     # sf0.001/0.01/0.1.
-    en = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
-    toks = tokens_expr("lower(text)")
     w_arr = spark_double_array(QC_WEIGHTS)
     qc_fold = (
         f"aggregate(toks, CAST(0.0 AS DOUBLE), "
@@ -1341,62 +1274,28 @@ def curation_funnel_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumns(
             {
                 "h": F.md5("text"),
-                "toks": F.expr(toks),
+                "toks": F.expr(tokens_expr("lower(text)")),
             }
         )
+        .withColumns({n: F.expr(e) for n, e in gopher_counts().items()})
         .withColumns(
             {
-                "n_tokens": F.expr("CAST(size(toks) AS BIGINT)"),
-                "n_words": F.expr("CAST(size(toks) AS BIGINT)"),
-                "n_chars": F.expr(
-                    "aggregate(toks, 0L, (acc, t) -> acc + length(t))"
-                ),
-                "n_alpha_words": F.expr(
-                    "CAST(size(filter(toks, t -> t rlike '[a-z]')) AS BIGINT)"
-                ),
-                "n_symbol_words": F.expr(
-                    "CAST(size(filter(toks, t -> instr(t, '#') > 0 "
-                    "OR instr(t, '...') > 0)) AS BIGINT)"
-                ),
-                "n_distinct_stop": F.expr(
-                    f"CAST(size(array_distinct(filter(toks, t -> t IN ({en})))) "
-                    "AS BIGINT)"
-                ),
+                "f_gop": F.expr(f"IF({gopher_keep()}, 1, 0)"),
+                "f_qc": F.when(
+                    (F.col("n_words") >= 1)
+                    & (
+                        (F.lit(QC_BIAS) + F.expr(qc_fold) / F.col("n_words"))
+                        >= F.lit(0.0)
+                    ),
+                    F.lit(1),
+                ).otherwise(F.lit(0)),
             }
-        )
-        .withColumn(
-            "f_gop",
-            F.when(
-                (F.col("n_words") >= GOPHER_MIN_WORDS)
-                & (F.col("n_words") <= GOPHER_MAX_WORDS)
-                & ((F.col("n_chars") / F.col("n_words")) >= GOPHER_MIN_MEAN_LEN)
-                & ((F.col("n_chars") / F.col("n_words")) <= GOPHER_MAX_MEAN_LEN)
-                & (
-                    (F.col("n_alpha_words") / F.col("n_words"))
-                    >= GOPHER_MIN_ALPHA_FRAC
-                )
-                & (
-                    (F.col("n_symbol_words") / F.col("n_words"))
-                    <= GOPHER_MAX_SYMBOL_RATIO
-                )
-                & (F.col("n_distinct_stop") >= GOPHER_MIN_STOPWORDS),
-                F.lit(1),
-            ).otherwise(F.lit(0)),
-        )
-        .withColumn(
-            "f_qc",
-            F.when(
-                (F.col("n_tokens") >= 1)
-                & (
-                    (F.lit(QC_BIAS) + F.expr(qc_fold) / F.col("n_tokens"))
-                    >= F.lit(0.0)
-                ),
-                F.lit(1),
-            ).otherwise(F.lit(0)),
         )
         # project text/arrays away BEFORE the keeper window's exchange —
         # only narrow flag rows shuffle (guide §2.3)
-        .select("doc_id", "source", "h", "n_tokens", "f_gop", "f_qc")
+        .select(
+            "doc_id", "source", "h", F.col("n_words").alias("n_tokens"), "f_gop", "f_qc"
+        )
     )
     keep_w = Window.partitionBy("h")
     spine = spine.withColumn(
@@ -1841,7 +1740,9 @@ def eval_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "split",
-            F.explode(F.array_distinct(F.expr(_shingle_spark()))).alias("shingle"),
+            F.explode(F.array_distinct(F.expr(ngrams_expr("toks", SHINGLE_K)))).alias(
+                "shingle"
+            ),
         )
         .select("doc_id", "split", F.expr(token_hash_expr("shingle")).alias("gh"))
     )

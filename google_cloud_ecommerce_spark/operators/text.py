@@ -18,7 +18,21 @@ from google_cloud_ecommerce_spark.catalog import load_table
 from google_cloud_ecommerce_spark.iterative import iterate
 from google_cloud_ecommerce_spark.operators._common import (
     FOLD_BASE,
+    GOPHER_MAX_MEAN_LEN,
+    GOPHER_MAX_SYMBOL_RATIO,
+    GOPHER_MAX_WORDS,
+    GOPHER_MIN_ALPHA_FRAC,
+    GOPHER_MIN_MEAN_LEN,
+    GOPHER_MIN_STOPWORDS,
+    GOPHER_MIN_WORDS,
     MERSENNE31,
+    STOPWORDS,
+    gopher_counts,
+    gopher_keep,
+    gopher_rules,
+    let_expr,
+    ngrams_expr,
+    repetition_expr,
     token_hash_expr,
     token_hash_sql,
     tokens_expr,
@@ -35,16 +49,9 @@ from google_cloud_ecommerce_spark.operators.ranking import (
     range_partition_prefix_sum,
 )
 
-# Tiny per-language stopword lists (heuristic language ID). Chain order
-# below (alphabetical, first-wins on ties) is part of the operator's
-# contract so results are deterministic.
-STOPWORDS = {
-    "de": ["der", "die", "das", "und", "nicht", "ist"],
-    "en": ["the", "a", "and", "of", "to", "is"],
-    "es": ["el", "la", "los", "y", "que", "es"],
-    "fr": ["le", "les", "et", "que", "des", "est"],
-    "zh": ["de", "shi", "bu", "le", "zai", "he"],
-}
+# Language-ID chain order over the stopword lists (alphabetical,
+# first-wins on ties) is part of the operator's contract so results
+# are deterministic.
 LANGS = sorted(STOPWORDS)
 
 BPE_ISH_PATTERN = "[a-z]+|[0-9]+|[^a-z0-9 ]"
@@ -397,8 +404,8 @@ ORACLE["keyword_search"] = _keyword_search_sql()
 # ---------------------------------------------------------------------------
 # Bigram frequencies: adjacent-token pair counts, the n-gram step a
 # language-model data pipeline runs after tokenization. Pairs are built
-# positionally inside the token ARRAY (transform over an index
-# sequence), so no self-join and no second explode — one explode, one
+# positionally inside the token ARRAY (_common.ngrams_expr), so no
+# self-join and no second explode — one explode, one
 # hash aggregate, one top-k. (count DESC, bigram ASC) is a total order,
 # so the LIMIT cut is deterministic in both engines.
 # ---------------------------------------------------------------------------
@@ -410,14 +417,8 @@ def bigram_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = _docs(spark, sf_dir).select(
         "doc_id", F.expr(tokens_expr("lower(text)")).alias("toks")
     )
-    bigrams = toks.filter("size(toks) >= 2").select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(toks) - 1), "
-                "i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))"
-            )
-        ).alias("bigram"),
+    bigrams = toks.select(
+        "doc_id", F.explode(F.expr(ngrams_expr("toks", 2))).alias("bigram")
     )
     return (
         bigrams.groupBy("bigram")
@@ -454,9 +455,9 @@ ORACLE["bigram_frequencies"] = _bigram_frequencies_sql()
 
 # ---------------------------------------------------------------------------
 # text_repetition — boilerplate/spam signal: the share of a document's
-# word bigrams taken by its single most-repeated bigram. Two-level
-# aggregate on (doc_id, bigram) — map-side partials shrink the shuffle;
-# nothing quadratic. The 0.2 flag threshold is the conventional
+# word bigrams taken by its single most-repeated bigram. Per row, no
+# shuffle: the shared repetition gate (_common.repetition_expr) plus the
+# distinct-bigram count. The 0.2 flag threshold is the conventional
 # "repetitive document" gate in pretraining quality filters.
 # ---------------------------------------------------------------------------
 
@@ -464,41 +465,23 @@ REPETITION_THRESHOLD = 0.2
 
 
 def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = _docs(spark, sf_dir).select(
-        "doc_id", F.expr(tokens_expr("lower(text)")).alias("toks")
-    )
-    bigrams = toks.filter("size(toks) >= 2").select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(toks) - 1), "
-                "i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))"
-            )
-        ).alias("bigram"),
-    )
-    per_bigram = bigrams.groupBy("doc_id", "bigram").agg(F.count("*").alias("c"))
-    return (
-        per_bigram.groupBy("doc_id")
-        .agg(
-            F.sum("c").alias("n_bigrams"),
-            F.count("*").alias("n_distinct"),
-            F.max("c").alias("max_rep"),
-        )
+    counts = (
+        _docs(spark, sf_dir)
+        .select("doc_id", F.expr(tokens_expr("lower(text)")).alias("toks"))
+        .filter("size(toks) >= 2")
         .select(
             "doc_id",
-            "n_bigrams",
-            "n_distinct",
-            "max_rep",
-            (F.col("max_rep").cast("double") / F.col("n_bigrams")).alias(
-                "repetition_score"
-            ),
-            (
-                F.col("max_rep").cast("double") / F.col("n_bigrams")
-                > F.lit(REPETITION_THRESHOLD)
-            )
-            .cast("long")
-            .alias("is_repetitive"),
+            F.expr(repetition_expr("toks")).alias("rep"),
+            F.expr(f"CAST(size(array_distinct({ngrams_expr('toks', 2)})) AS BIGINT)")
+            .alias("n_distinct"),
         )
+        .select("doc_id", "rep.n_bigrams", "n_distinct", "rep.max_rep")
+    )
+    share = F.col("max_rep").cast("double") / F.col("n_bigrams")
+    return counts.select(
+        "*",
+        share.alias("repetition_score"),
+        (share > F.lit(REPETITION_THRESHOLD)).cast("long").alias("is_repetitive"),
     )
 
 
@@ -1294,16 +1277,9 @@ def lm_bigram_score(
     toks = _docs(spark, sf_dir).select(
         "doc_id", F.expr(tokens_expr("lower(text)")).alias("toks")
     )
-    bigrams = toks.filter("size(toks) >= 2").select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(toks) - 1), "
-                "i -> struct(element_at(toks, i) AS prev, "
-                "element_at(toks, i + 1) AS w))"
-            )
-        ).alias("bg"),
-    ).select("doc_id", F.col("bg.prev").alias("prev"), F.col("bg.w").alias("w"))
+    bigrams = toks.select(
+        "doc_id", F.inline(F.expr(ngrams_expr("toks", 2, ("prev", "w"))))
+    )
     c2 = bigrams.groupBy("prev", "w").agg(F.count("*").alias("c2"))
     c1 = c2.groupBy("prev").agg(F.sum("c2").alias("c1"))
     model = c2.join(c1, "prev").select(
@@ -1405,16 +1381,9 @@ def kn_bigram_score(
     toks = _docs(spark, sf_dir).select(
         "doc_id", F.expr(tokens_expr("lower(text)")).alias("toks")
     )
-    bigrams = toks.filter("size(toks) >= 2").select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(toks) - 1), "
-                "i -> struct(element_at(toks, i) AS prev, "
-                "element_at(toks, i + 1) AS w))"
-            )
-        ).alias("bg"),
-    ).select("doc_id", F.col("bg.prev").alias("prev"), F.col("bg.w").alias("w"))
+    bigrams = toks.select(
+        "doc_id", F.inline(F.expr(ngrams_expr("toks", 2, ("prev", "w"))))
+    )
     c2 = (
         bigrams.groupBy("prev", "w")
         .agg(F.count("*").alias("c2"))
@@ -1519,54 +1488,21 @@ ORACLE["kn_bigram_score"] = KN_BIGRAM_SCORE_SQL
 # deterministic, shuffle-free, whole-stage codegen; keep = all pass.
 # ---------------------------------------------------------------------------
 
-GOPHER_MIN_WORDS = 50
-GOPHER_MAX_WORDS = 100_000
-GOPHER_MIN_MEAN_LEN = 3.0
-GOPHER_MAX_MEAN_LEN = 10.0
-GOPHER_MIN_ALPHA_FRAC = 0.8
-GOPHER_MAX_SYMBOL_RATIO = 0.1
-GOPHER_MIN_STOPWORDS = 2
-
 
 def gopher_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    en = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
-    toks = _docs(spark, sf_dir).select(
+    # integer counts first (_common.gopher_counts, shared with the
+    # curation funnel); every ratio divides two exact integers
+    c = _docs(spark, sf_dir).select(
         "doc_id", F.expr(tokens_expr("lower(text)")).alias("toks")
-    )
-    # integer counts first; every ratio divides two exact integers
-    c = toks.select(
-        "doc_id",
-        F.expr("CAST(size(toks) AS BIGINT)").alias("n_words"),
-        F.expr("aggregate(toks, 0L, (acc, t) -> acc + length(t))").alias("n_chars"),
-        F.expr(
-            "CAST(size(filter(toks, t -> t rlike '[a-z]')) AS BIGINT)"
-        ).alias("n_alpha_words"),
-        F.expr(
-            "CAST(size(filter(toks, t -> instr(t, '#') > 0 OR instr(t, '...') > 0)) AS BIGINT)"
-        ).alias("n_symbol_words"),
-        F.expr(
-            f"CAST(size(array_distinct(filter(toks, t -> t IN ({en})))) AS BIGINT)"
-        ).alias("n_distinct_stop"),
-    )
-    r1 = (F.col("n_words") >= GOPHER_MIN_WORDS) & (
-        F.col("n_words") <= GOPHER_MAX_WORDS
-    )
-    mean_len = F.col("n_chars") / F.col("n_words")
-    r2 = (mean_len >= GOPHER_MIN_MEAN_LEN) & (mean_len <= GOPHER_MAX_MEAN_LEN)
-    r3 = (F.col("n_alpha_words") / F.col("n_words")) >= GOPHER_MIN_ALPHA_FRAC
-    r4 = (F.col("n_symbol_words") / F.col("n_words")) <= GOPHER_MAX_SYMBOL_RATIO
-    r5 = F.col("n_distinct_stop") >= GOPHER_MIN_STOPWORDS
-    flags = [x.cast("long") for x in (r1, r2, r3, r4, r5)]
+    ).select("doc_id", *[F.expr(e).alias(n) for n, e in gopher_counts().items()])
+    flags = [F.expr(r).cast("long") for r in gopher_rules()]
+    names = ("word_count", "mean_word_len", "alpha_frac", "symbol_ratio", "stopwords")
     return c.select(
         "doc_id",
         "n_words",
-        flags[0].alias("pass_word_count"),
-        flags[1].alias("pass_mean_word_len"),
-        flags[2].alias("pass_alpha_frac"),
-        flags[3].alias("pass_symbol_ratio"),
-        flags[4].alias("pass_stopwords"),
+        *[f.alias(f"pass_{n}") for f, n in zip(flags, names)],
         sum(flags[1:], flags[0]).alias("n_rules_passed"),
-        (r1 & r2 & r3 & r4 & r5).cast("long").alias("keep"),
+        F.expr(gopher_keep()).cast("long").alias("keep"),
     )
 
 
@@ -1850,19 +1786,12 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = _docs(spark, sf_dir).select(
         "doc_id", F.expr(tokens_expr("lower(text)")).alias("toks")
     )
-    grams = (
-        toks.filter(f"size(toks) >= {NGRAM_N}")
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"array_distinct(transform(sequence(1, size(toks) - {NGRAM_N - 1}), "
-                    f"i -> concat_ws(' ', slice(toks, i, {NGRAM_N}))))"
-                )
-            ).alias("gram"),
-        )
-        .select("doc_id", F.expr(token_hash_expr("gram")).alias("gh"))
-    )
+    grams = toks.select(
+        "doc_id",
+        F.explode(F.expr(f"array_distinct({ngrams_expr('toks', NGRAM_N)})")).alias(
+            "gram"
+        ),
+    ).select("doc_id", F.expr(token_hash_expr("gram")).alias("gh"))
     gram_docs = grams.groupBy("gh").agg(F.count("*").alias("n_docs"))
     return (
         grams.join(gram_docs, "gh")
@@ -2871,18 +2800,12 @@ WINNOW_W = 4  # grams per winnowing window
 
 def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     k, w = WINNOW_K, WINNOW_W
-    gram = "concat_ws(' ', " + ", ".join(
-        f"element_at(toks, i + {j})" for j in range(k)
-    ) + ")"
-    kh = (
-        f"transform(sequence(1, size(toks) - {k - 1}), "
-        f"i -> {token_hash_expr(gram)})"
-    )
-    gen = (
-        f"transform(array({kh}), kh -> named_struct("
-        f"'n_grams', CAST(size(kh) AS BIGINT), "
+    gen = let_expr(
+        f"transform({ngrams_expr('toks', k)}, g -> {token_hash_expr('g')})",
+        "kh",
+        f"named_struct('n_grams', CAST(size(kh) AS BIGINT), "
         f"'fps', array_distinct(transform(sequence(1, size(kh) - {w - 1}), "
-        f"p -> array_min(slice(kh, p, {w}))))))[0]"
+        f"p -> array_min(slice(kh, p, {w})))))",
     )
     per_fp = (
         _docs(spark, sf_dir)
@@ -2970,18 +2893,15 @@ NOVELTY_K = 4  # tokens per shingle
 
 
 def ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    k = NOVELTY_K
-    parts = ", ".join(f"element_at(toks, i + {j})" for j in range(k))
     grams = (
         _docs(spark, sf_dir)
         .select("doc_id", F.expr(tokens_expr("lower(text)")).alias("toks"))
-        .filter(F.expr(f"size(toks) >= {k}"))
         .select(
             "doc_id",
             F.explode(
                 F.expr(
-                    f"array_distinct(transform(sequence(1, size(toks) - {k - 1}), "
-                    f"i -> xxhash64(concat_ws(' ', {parts}))))"
+                    f"array_distinct(transform({ngrams_expr('toks', NOVELTY_K)}, "
+                    f"g -> xxhash64(g)))"
                 )
             ).alias("fp"),
         )

@@ -867,10 +867,9 @@ ORACLE["streaming_similarity_topk"] = _streaming_similarity_sql()
 # ---------------------------------------------------------------------------
 # Streaming corpus prep — the LLM-data pipeline's gate+dedup stage as
 # a stream: documents arrive in doc_id-ordered chunks WITH duplicate
-# redeliveries (at-least-once), pass the same integer-exact quality
-# gates as the batch pretraining_corpus_prep (the repetition gate is
-# recomputed as a PER-ROW array expression, so the streaming plan needs
-# no pre-aggregation), get exactly-once'd by content digest
+# redeliveries (at-least-once), pass the batch pretraining_corpus_prep's
+# own per-row quality gates (pipeline.quality_gated: no pre-aggregation
+# in the streaming plan), get exactly-once'd by content digest
 # (dropDuplicates state), and roll up per language. The oracle IS the
 # batch prep's SQL — stream == batch, duplicates and all, because
 # chunks arrive in doc_id order so first-seen == min-doc_id keeper.
@@ -880,8 +879,10 @@ ORACLE["streaming_similarity_topk"] = _streaming_similarity_sql()
 
 
 def streaming_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from google_cloud_ecommerce_spark.operators._common import tokens_expr
-    from google_cloud_ecommerce_spark.operators.pipeline import CHUNK_STRIDE, MIN_TOKENS
+    from google_cloud_ecommerce_spark.operators.pipeline import (
+        CHUNK_STRIDE,
+        quality_gated,
+    )
 
     with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as replay:
         # every 5th doc of a chunk is redelivered in the next
@@ -895,34 +896,8 @@ def streaming_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
             order=("doc_id",),
         )
         stream = read_replay_stream(spark, replay, ddl=DOCUMENTS_DDL)
-        toks = stream.withColumn("toks", F.expr(tokens_expr("lower(text)")))
-        # per-row forms of the batch gates (identical integer semantics)
-        enriched = (
-            toks.withColumn("n_tokens", F.expr("size(toks)").cast("long"))
-            .withColumn("n_distinct", F.expr("size(array_distinct(toks))").cast("long"))
-            .withColumn(
-                "bigrams",
-                F.expr(
-                    "CASE WHEN size(toks) >= 2 THEN transform(sequence(1, size(toks) - 1), "
-                    "i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1))) "
-                    "ELSE array() END"
-                ),
-            )
-            .withColumn("n_bigrams", F.expr("size(bigrams)").cast("long"))
-            .withColumn(
-                "max_rep",
-                F.expr(
-                    "CASE WHEN size(bigrams) = 0 THEN 0 ELSE "
-                    "array_max(transform(array_distinct(bigrams), "
-                    "b -> size(filter(bigrams, x -> x = b)))) END"
-                ).cast("long"),
-            )
-        )
-        gated = enriched.filter(
-            (F.col("n_tokens") >= MIN_TOKENS)
-            & (F.col("n_distinct") * 5 >= F.col("n_tokens"))
-            & (F.col("max_rep") * 5 <= F.col("n_bigrams"))
-        ).withColumn("digest", F.md5("text"))
+        # the batch preps' per-row gates, one definition
+        gated = quality_gated(stream).withColumn("digest", F.md5("text"))
         deduped = gated.dropDuplicates(["digest"])
         agg = deduped.groupBy("lang").agg(
             F.count("*").alias("n_docs"),

@@ -872,3 +872,26 @@ def test_semdedup_rows_independent_of_salt(spark, sf_smoke):
     finally:
         spark.conf.set(key, saved)
     assert rows["1"] == rows["32"]
+
+
+def test_shingle_dedup_matches_oracle_on_short_docs(spark, tmp_path):
+    """Documents of 0, 1 and 2 tokens have no 3-token shingle. The
+    oracle's range() gives them none; the Spark side once built its
+    shingles over sequence(1, 0) = [1, 0] and raised
+    INVALID_ARRAY_INDEX_IN_ELEMENT_AT on them."""
+    from tests.oracle_parity import compare, duckdb_connect
+
+    base = "the quick brown fox jumps over the lazy dog near the old river bank today"
+    texts = ["", "a", "a b", base, base, base.replace("today", "tonight"),
+             "completely different words about spark shuffles and codegen"]
+    docs = spark.createDataFrame(
+        [(i, t, "en", f"s{i % 2}", len(t)) for i, t in enumerate(texts)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    docs.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    con = duckdb_connect(str(tmp_path))
+    for name in ("dedup_ngram_jaccard", "dedup_prefix_filter"):
+        df = dedup.QUERIES[name](spark, str(tmp_path))
+        assert df.count() > 0, f"{name}: the planted near-duplicates found no pair"
+        problems = compare(df, con, dedup.ORACLE[name])
+        assert not problems, f"{name}: {problems}"

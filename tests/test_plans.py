@@ -78,12 +78,107 @@ def _batch_query_names():
     return [n for n in sorted(all_queries()) if not n.startswith("streaming_")]
 
 
-@pytest.mark.parametrize("qname", _batch_query_names())
-def test_no_cartesian_product_anywhere(spark, sf_smoke, qname):
+# Expressions that read a column without computing anything.
+_COLUMN_READS = {"AttributeReference", "BoundReference", "OuterReference"}
+
+
+def _lambda_body_hits(df) -> list[str]:
+    """Outer computation inside lambda bodies of the optimized plan.
+
+    A lambda body runs once per array element. A subtree of the body
+    that reads no lambda variable, is not foldable, is not a plain
+    column read and has at least 3 nodes computes the same value for
+    every element: it is evaluated once per element instead of once per
+    row. Catalyst puts such subtrees there when it inlines a column
+    (say a token array) into the lambda that reads it. Returns the
+    largest such subtrees."""
+
+    def children(node) -> list:
+        kids = node.children()
+        return [kids.apply(i) for i in range(kids.size())]
+
+    def scan(e, in_body: bool):
+        """-> (nodes, reads a lambda variable, hits) of subtree e."""
+        kind = e.getClass().getSimpleName()
+        if kind == "LambdaFunction":
+            n, _, hits = scan(e.function(), True)
+            return n + e.arguments().size() + 1, True, hits
+        n, reads_var, hits = 1, kind == "NamedLambdaVariable", []
+        for c in children(e):
+            cn, cv, ch = scan(c, in_body)
+            n, reads_var, hits = n + cn, reads_var or cv, hits + ch
+        if (
+            in_body
+            and not reads_var
+            and n >= 3
+            and kind not in _COLUMN_READS
+            and not e.foldable()
+        ):
+            return n, False, [e.toString()[:120]]
+        return n, reads_var, hits
+
+    out: list[str] = []
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        stack.extend(children(node))
+        subs = node.subqueries()
+        stack.extend(subs.apply(i) for i in range(subs.size()))
+        exprs = node.expressions()
+        for i in range(exprs.size()):
+            e = exprs.apply(i)
+            if "lambdafunction" in e.toString():
+                out += scan(e, False)[2]
+    return out
+
+
+@pytest.fixture(scope="module")
+def registry_plan(spark, sf_smoke):
+    """qname -> (formatted plan, lambda-body hits) of a batch registry
+    entry, built once per name and shared by the registry-wide lints."""
     from google_cloud_ecommerce_spark.queries import all_queries
 
-    plan = plan_of(all_queries()[qname](spark, sf_smoke))
+    plans: dict[str, tuple[str, list[str]]] = {}
+
+    def get(qname: str) -> tuple[str, list[str]]:
+        if qname not in plans:
+            df = all_queries()[qname](spark, sf_smoke)
+            plans[qname] = (plan_of(df), _lambda_body_hits(df))
+        return plans[qname]
+
+    return get
+
+
+@pytest.mark.parametrize("qname", _batch_query_names())
+def test_no_cartesian_product_anywhere(registry_plan, qname):
+    plan, _ = registry_plan(qname)
     assert "CartesianProduct" not in plan, f"{qname} plans a cartesian product"
+
+
+@pytest.mark.parametrize("qname", _batch_query_names())
+def test_no_outer_computation_in_lambda_bodies(registry_plan, qname):
+    """Registry-wide lint: no lambda body recomputes, once per array
+    element, a value that does not depend on the element (see
+    _lambda_body_hits). The fix is to read only lambda variables in the
+    body: bind the value once with _common.let_expr, or build n-grams
+    with _common.ngrams_expr. A hit left in place must carry a
+    ``lambda-lint:`` tag on its query function with its measured cost."""
+    from google_cloud_ecommerce_spark.queries import all_queries
+    from tests.tools.scan_audit import has_audit_tag
+
+    _, hits = registry_plan(qname)
+    if hits and not has_audit_tag(all_queries()[qname], "lambda-lint:"):
+        pytest.fail(f"{qname} evaluates outer work per lambda element: {hits}")
+
+
+def test_streaming_corpus_gates_read_only_lambda_variables(spark, sf_smoke):
+    """The per-row gate columns that streaming_corpus_prep applies to
+    each micro-batch pass the same lint over a batch frame."""
+    from google_cloud_ecommerce_spark.catalog import load_table
+    from google_cloud_ecommerce_spark.operators.pipeline import quality_gated
+
+    gated = quality_gated(load_table(spark, sf_smoke, "documents"))
+    assert not _lambda_body_hits(gated)
 
 
 def _split_top_level_args(s: str) -> list[str]:
@@ -121,16 +216,14 @@ def _unpartitioned_window_specs(plan: str) -> list[str]:
 
 
 @pytest.mark.parametrize("qname", _batch_query_names())
-def test_no_unpartitioned_window_anywhere(spark, sf_smoke, qname):
+def test_no_unpartitioned_window_anywhere(registry_plan, qname):
     """Registry-wide lint (round 4): ZERO single-partition WindowExec.
     An unpartitioned window sorts its whole input in one task — the
     plan shape that caps an operator at single-executor memory at
     100 TB. Global ntile/rank use the range-partition +
     broadcast-prefix-offset construction (operators/ranking.py);
     running totals over tiny rollups use triangular broadcast joins."""
-    from google_cloud_ecommerce_spark.queries import all_queries
-
-    plan = plan_of(all_queries()[qname](spark, sf_smoke))
+    plan, _ = registry_plan(qname)
     specs = _unpartitioned_window_specs(plan)
     assert not specs, f"{qname} plans unpartitioned window(s) ordered by: {specs}"
 

@@ -27,10 +27,11 @@ import sys
 TAG = "scan-audit:"
 
 
-def has_audit_tag(fn) -> bool:
+def has_audit_tag(fn, tag: str = TAG) -> bool:
     """True if the callable's source, or the CONTIGUOUS comment block
     directly above its def (decorators and at most one blank line
-    allowed in between), contains the scan-audit tag. A fixed-line
+    allowed in between), contains the tag (default: the scan-audit
+    tag; tests/test_plans.py checks ``lambda-lint:``). A fixed-line
     lookback would credit a NEIGHBORING function's tag to an untagged
     one in densely packed modules — the contiguity rule makes the
     'every flag is justified' claim attributable per function."""
@@ -45,7 +46,7 @@ def has_audit_tag(fn) -> bool:
         body = inspect.getsource(fn)
     except OSError:
         body = ""
-    if TAG in body:
+    if tag in body:
         return True
     i, blanks_left = first - 1, 1
     while i >= 0:
@@ -58,7 +59,7 @@ def has_audit_tag(fn) -> bool:
             blanks_left -= 1
             i -= 1
         elif ln.startswith("#"):
-            if TAG in ln:
+            if tag in ln:
                 return True
             i -= 1
         else:
