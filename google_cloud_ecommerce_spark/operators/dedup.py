@@ -299,12 +299,12 @@ def _dedup_minhash_sql() -> str:
 # ---------------------------------------------------------------------------
 
 
-def _simhash_expr(hs: str) -> str:
+def _simhash_expr() -> str:
     """60-bit simhash over the distinct token hashes ``hs`` — Spark side.
     ``hs`` is bound once per row: read inside the per-bit lambda, its
     tokenize + hash would otherwise run 60 times a document."""
     return let_expr(
-        hs,
+        f"transform(array_distinct({tokens_expr('text')}), t -> {token_hash_expr('t')})",
         "hs",
         "aggregate(sequence(0, 59), 0L, (acc, j) -> acc + "
         "IF(aggregate(hs, 0L, (a, h) -> a + "
@@ -326,9 +326,8 @@ def _simhash_sql() -> str:
 
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc 60-bit simhash fingerprint (the dedup key artifact)."""
-    hs = f"transform(array_distinct({tokens_expr('text')}), t -> {token_hash_expr('t')})"
     return _docs(spark, sf_dir).select(
-        "doc_id", F.expr(_simhash_expr(hs)).alias("simhash")
+        "doc_id", F.expr(_simhash_expr()).alias("simhash")
     )
 
 
@@ -2094,10 +2093,10 @@ ORACLE["lsh_band_sweep"] = _lsh_band_sweep_sql()
 #
 # Scale shape: one tokenize+slide explode (_common.ngrams_expr reads
 # the token array only in argument position, once per doc), spans
-# travel as xxhash64 int64 fingerprints through
-# the groupBy and the self-join (never strings); the per-span
-# distinct-doc count is an int64-keyed hash aggregate, so work scales
-# with corpus token count, not pairs. The oracle computes the same
+# travel as xxhash64 int64 fingerprints through the groupBy and the
+# self-join (never strings); the per-span distinct-doc count is an
+# int64-keyed hash aggregate, so work scales with corpus token count,
+# not pairs. The oracle computes the same
 # counts over span STRINGS — identical up to 64-bit collisions
 # (~1e-7 at 1e6 distinct spans).
 # ---------------------------------------------------------------------------

@@ -405,9 +405,9 @@ ORACLE["keyword_search"] = _keyword_search_sql()
 # Bigram frequencies: adjacent-token pair counts, the n-gram step a
 # language-model data pipeline runs after tokenization. Pairs are built
 # positionally inside the token ARRAY (_common.ngrams_expr), so no
-# self-join and no second explode — one explode, one
-# hash aggregate, one top-k. (count DESC, bigram ASC) is a total order,
-# so the LIMIT cut is deterministic in both engines.
+# self-join and no second explode — one explode, one hash aggregate,
+# one top-k. (count DESC, bigram ASC) is a total order, so the LIMIT
+# cut is deterministic in both engines.
 # ---------------------------------------------------------------------------
 
 BIGRAM_TOP_K = 50

@@ -72,7 +72,7 @@ def _transition_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # lambda-lint: r0 (one integer division) is recomputed for each of <= 10
 # nodes of the single graph row; binding it once measured 0.72 vs 0.72 s
-# (sf0.1, min of 5)
+# (sf0.1 on 4 vCPUs, min of 5)
 def pagerank_categories(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-round weighted PageRank over the category transition graph.
 

@@ -695,7 +695,8 @@ def _bloom_positions_sql(key: str) -> str:
 # scan-audit: build side, probe side, and exact-truth side are three roles of
 # the table by design (the report measures the filter against ground truth)
 # lambda-lint: the word map m is rebuilt for each of the 8 words, over one
-# row per event type; binding it once measured 0.34 vs 0.35 s (sf0.1, min of 5)
+# row per event type; binding it once measured 0.34 vs 0.35 s (sf0.1 on
+# 4 vCPUs, min of 5)
 def bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     members = ev.select("event_type", "user_id").distinct()

@@ -888,7 +888,9 @@ def test_shingle_dedup_matches_oracle_on_short_docs(spark, tmp_path):
         [(i, t, "en", f"s{i % 2}", len(t)) for i, t in enumerate(texts)],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    docs.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    docs.coalesce(1).write.mode("overwrite").parquet(
+        str(tmp_path / "documents.parquet")
+    )
     con = duckdb_connect(str(tmp_path))
     for name in ("dedup_ngram_jaccard", "dedup_prefix_filter"):
         df = dedup.QUERIES[name](spark, str(tmp_path))
