@@ -114,14 +114,22 @@ def _modules():
 # slots (balanced_group_sample, corpus_mixture_sample,
 # corpus_quality_dashboard, corpus_stats, dedup_embedding_cosine), all
 # green in CORRECTNESS_r12 and r13 and untouched by that change;
+# 3 re-checks whose exact-rerank tail now runs through the shared
+# _rank_topk and whose query set comes from the one _query_vecs builder:
+# similarity_ivf_topk, similarity_index_topk, similarity_ivf_index_topk
+# (last driver rows r09, r09, r06). They took the first three of the
+# six remaining r06-last slots (dedup_segments, doc_fingerprint,
+# doc_tokens_udtf), green in CORRECTNESS_r13 and untouched by that
+# change;
 # tpch_q1_pricing_summary as the cross-round canary;
 # then strictly oldest evidence: the ten streaming r05-last names
 # (streaming_band_enrichment onward), rewritten by the harness change;
-# then 6 of the first 15 of the 44 r06-last names alphabetically,
+# then 3 of the first 15 of the 44 r06-last names alphabetically,
 # skipping the three that held code-changed slots
 # (corpus_to_training_batches, hybrid_search_rrf, pretraining_corpus_prep),
-# the three that gave way to the rank re-checks above and the five that
-# gave way to the document-feature re-checks. Every name has an oracle;
+# the three that gave way to the rank re-checks above, the five that
+# gave way to the document-feature re-checks and the three that gave way
+# to the rank-tail re-checks. Every name has an oracle;
 # tests/test_registry.py pins the slate and the no-wasted-slot rule.
 PRIORITY: tuple[str, ...] = (
     # --- 5 re-checks: Lloyd trainers rewritten since the last check ---
@@ -163,6 +171,10 @@ PRIORITY: tuple[str, ...] = (
     "dedup_prefix_filter",
     "feature_hash_vectors",
     "dedup_simhash",
+    # --- 3 re-checks: rank tail moved onto the shared _rank_topk ---
+    "similarity_ivf_topk",
+    "similarity_index_topk",
+    "similarity_ivf_index_topk",
     # --- cross-round canary ---
     "tpch_q1_pricing_summary",
     # --- 10 re-checks: oldest evidence (r05-last, the deferred tail) ---
@@ -176,10 +188,7 @@ PRIORITY: tuple[str, ...] = (
     "streaming_similarity_topk",
     "streaming_two_level_window",
     "streaming_view_purchase_full_outer",
-    # --- 6 re-checks: next-oldest evidence (r06-last), alphabetical ---
-    "dedup_segments",
-    "doc_fingerprint",
-    "doc_tokens_udtf",
+    # --- 3 re-checks: next-oldest evidence (r06-last), alphabetical ---
     "embedding_dim_stats",
     "expanded_keyword_search",
     "length_bucket_batches",

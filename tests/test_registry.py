@@ -71,7 +71,10 @@ _FAMILY_ANCHORS = {
 # moved onto the shared document-feature helpers (operators/_common.py)
 # and that held no slot took the two remaining non-streaming r05-last
 # slots and the first five r06-last slots; dedup_simhash, moved too,
-# keeps the slot it held. An undocumented re-check is still a wasted slot.
+# keeps the slot it held. The three IVF/LSH top-k entries whose
+# exact-rerank tail moved onto the shared _rank_topk (and whose query
+# set comes from the one _query_vecs builder) took the next three
+# r06-last slots. An undocumented re-check is still a wasted slot.
 _RECHECK_SLATE = {
     # k-means / PQ trainers rewritten since their last CORRECTNESS row
     "similarity_pq_topk", "similarity_ivfpq_topk", "pq_encode",
@@ -94,6 +97,9 @@ _RECHECK_SLATE = {
     "pretraining_corpus_prep", "corpus_to_training_batches",
     "gopher_gates", "curation_funnel_v2", "dedup_ngram_jaccard",
     "dedup_prefix_filter", "feature_hash_vectors", "dedup_simhash",
+    # exact-rerank tail moved onto the shared _rank_topk
+    "similarity_ivf_topk", "similarity_index_topk",
+    "similarity_ivf_index_topk",
     # cross-round canary
     "tpch_q1_pricing_summary",
     # oldest evidence: last driver row is r05 (the deferred tail)
@@ -102,11 +108,10 @@ _RECHECK_SLATE = {
     "streaming_media_features", "streaming_purchase_attribution_outer",
     "streaming_rate_limit", "streaming_similarity_topk",
     "streaming_two_level_window", "streaming_view_purchase_full_outer",
-    # next-oldest evidence: last driver row is r06 (6 of the first 15,
-    # alphabetical; the other nine gave way to the rank and
-    # document-feature re-checks)
-    "dedup_segments", "doc_fingerprint",
-    "doc_tokens_udtf", "embedding_dim_stats", "expanded_keyword_search",
+    # next-oldest evidence: last driver row is r06 (3 of the first 15,
+    # alphabetical; the other twelve gave way to the rank,
+    # document-feature and rank-tail re-checks)
+    "embedding_dim_stats", "expanded_keyword_search",
     "length_bucket_batches",
 }
 
