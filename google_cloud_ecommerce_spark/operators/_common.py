@@ -213,13 +213,16 @@ def gopher_counts() -> dict[str, str]:
 def gopher_rules() -> list[str]:
     """The five Gopher rules over the gopher_counts columns, in order:
     word count, mean word length, alphabetic share, symbol ratio,
-    stopwords. Each ratio divides two integers as DOUBLE."""
+    stopwords. Each ratio divides two integers as DOUBLE; a document
+    with no words gets NULL ratios, so its three ratio rules are NULL,
+    as DuckDB's division by zero makes them in the oracle."""
+    per_word = "NULLIF(n_words, 0)"
     return [
         f"n_words >= {GOPHER_MIN_WORDS} AND n_words <= {GOPHER_MAX_WORDS}",
-        f"n_chars / n_words >= {GOPHER_MIN_MEAN_LEN!r}D "
-        f"AND n_chars / n_words <= {GOPHER_MAX_MEAN_LEN!r}D",
-        f"n_alpha_words / n_words >= {GOPHER_MIN_ALPHA_FRAC!r}D",
-        f"n_symbol_words / n_words <= {GOPHER_MAX_SYMBOL_RATIO!r}D",
+        f"n_chars / {per_word} >= {GOPHER_MIN_MEAN_LEN!r}D "
+        f"AND n_chars / {per_word} <= {GOPHER_MAX_MEAN_LEN!r}D",
+        f"n_alpha_words / {per_word} >= {GOPHER_MIN_ALPHA_FRAC!r}D",
+        f"n_symbol_words / {per_word} <= {GOPHER_MAX_SYMBOL_RATIO!r}D",
         f"n_distinct_stop >= {GOPHER_MIN_STOPWORDS}",
     ]
 

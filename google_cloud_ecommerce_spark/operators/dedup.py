@@ -1254,18 +1254,12 @@ def _semdedup_n_sub_case(needed: str) -> str:
 
 
 def semdedup_clusters(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    k: int | None = None,
-    iters: int | None = None,
-    cluster_cap: int = SEMDEDUP_CLUSTER_CAP,
+    spark: SparkSession, sf_dir: str, *, cluster_cap: int = SEMDEDUP_CLUSTER_CAP
 ) -> DataFrame:
-    """SemDeDup with the fixture defaults the registry oracle unrolls
-    (k=4 clusters, 2 rounds, 256-row cluster cap). The 100 TB settings
-    are k ~ 11k clusters (the SemDeDup paper's LAION scale), iters ~
-    10, and a cluster_cap sized so cap^2 pairs fit one task's budget —
-    k is the primary knob; the cap is the skew safety net."""
+    """SemDeDup over the KMEANS_K clusters of KMEANS_ITERS Lloyd rounds
+    that the registry oracle unrolls. cluster_cap (256 rows for the
+    oracle) is the skew safety net, sized at scale so cap^2 pairs fit
+    one task's budget."""
     from google_cloud_ecommerce_spark.operators.similarity import (
         KMEANS_ITERS,
         KMEANS_K,
@@ -1273,12 +1267,12 @@ def semdedup_clusters(
         _kmeans_train,
     )
 
-    k = KMEANS_K if k is None else k
-    iters = KMEANS_ITERS if iters is None else iters
     assigned = (
         # one-row centroid state per Lloyd round (see _kmeans_train): one
         # corpus aggregate + one broadcast per round, no regroup exchange
-        _kmeans_train(_emb(spark, sf_dir).select("vec_id", "v"), k, iters)
+        _kmeans_train(
+            _emb(spark, sf_dir).select("vec_id", "v"), KMEANS_K, KMEANS_ITERS
+        )
         .select("vec_id", "v", F.col("c_id").alias("cluster_id"))
         .withColumn("norm", F.expr(f"sqrt({dot_expr('v', 'v')})"))
         # pin: both join sides read this; without it the assignment
@@ -1329,7 +1323,7 @@ def semdedup_clusters(
     #      space; c_n is computed identically on both join sides).
     salt_n = 8
     shuffle_p = _shuffle_partitions(spark)
-    salt_base = max(1, min(salt_n, -(-shuffle_p // max(int(k), 1))))
+    salt_base = max(1, min(salt_n, -(-shuffle_p // KMEANS_K)))
     # selectExpr, ONE py4j call: a 64-element F.col("v")[i] list
     # comprehension costs ~190 driver round-trips per build (~0.6 s
     # measured under load) — the string form builds the same projection
@@ -1689,7 +1683,7 @@ ORACLE["cross_source_dedup_matrix"] = _cross_source_dedup_matrix_sql()
 # config at scale, measure what fraction of TRUE >= threshold pairs the
 # band join actually surfaces. Ground truth is the ALL-PAIRS exact
 # Jaccard restricted to the sample (quadratic in the sample only —
-# the sample fraction is the knob that keeps |sample|^2 bounded);
+# the 1/RECALL_SAMPLE_MOD sample fraction keeps |sample|^2 bounded);
 # caught pairs are those sharing at least one full band key. Output is
 # one row: sample size, true pairs, caught pairs, and recall — plus
 # the candidate count, the precision denominator a tuner reads to
@@ -1705,10 +1699,8 @@ RECALL_SAMPLE_MOD = 5
 
 # scan-audit: ground-truth all-pairs (sampled), band side, and verify side are
 # distinct roles of the corpus by design
-def dedup_recall_report(
-    spark: SparkSession, sf_dir: str, *, sample_mod: int = RECALL_SAMPLE_MOD
-) -> DataFrame:
-    docs = _docs(spark, sf_dir).filter(F.col("doc_id") % sample_mod == 0)
+def dedup_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = _docs(spark, sf_dir).filter(F.col("doc_id") % RECALL_SAMPLE_MOD == 0)
     toks = docs.select(
         "doc_id", F.expr(f"array_distinct({tokens_expr('text')})").alias("toks")
     )
@@ -1956,10 +1948,8 @@ ORACLE["cdc_chunk_dedup"] = _cdc_chunk_dedup_sql()
 # ---------------------------------------------------------------------------
 
 
-def lsh_band_sweep(
-    spark: SparkSession, sf_dir: str, *, sample_mod: int = RECALL_SAMPLE_MOD
-) -> DataFrame:
-    docs = _docs(spark, sf_dir).filter(F.col("doc_id") % sample_mod == 0)
+def lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = _docs(spark, sf_dir).filter(F.col("doc_id") % RECALL_SAMPLE_MOD == 0)
     toks = docs.select(
         "doc_id", F.expr(f"array_distinct({tokens_expr('text')})").alias("toks")
     )
@@ -2174,9 +2164,10 @@ def ensure_span_index(spark: SparkSession, sf_dir: str) -> str:
     return str(out)
 
 
-# scan-audit: two scans of the narrow span_index parquet by design (the
-# per-span doc-count aggregate and the per-doc rollup join) — the parquet
-# IS the pin; re-deriving either side would re-run the corpus explode
+# scan-audit: reads the narrow span_index parquet twice by design (the
+# per-span doc-count aggregate and the per-doc rollup join) and the documents
+# table not at all — the parquet IS the pin; re-deriving either side would
+# re-run the corpus explode. The audit counts no index read, so never flags it
 def repeated_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the narrow (doc, span, occurrences) aggregate off the materialized
     # span index — the per-span doc counts and the per-doc rollup both
@@ -2256,9 +2247,10 @@ def _pos_span_spark() -> str:
     )
 
 
-# scan-audit: three scans of the narrow span_index parquet by design (per-span
-# doc counts, coverage expansion, per-doc base) — the parquet IS the pin;
-# re-deriving any side would re-run the corpus explode
+# scan-audit: reads the narrow span_index parquet three times by design
+# (per-span doc counts, coverage expansion, per-doc base) and the documents
+# table not at all — the parquet IS the pin; re-deriving any side would re-run
+# the corpus explode. The audit counts no index read, so never flags it
 def dedup_span_excision(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the (doc, n_tokens, pos, h) position table comes from the
     # materialized span index (shared with repeated_span_dedup and the

@@ -2180,9 +2180,7 @@ def _aes_key_sql() -> str:
     )
 
 
-def weighted_sample_topk(
-    spark: SparkSession, sf_dir: str, *, k: int = WEIGHTED_SAMPLE_K
-) -> DataFrame:
+def weighted_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = (
         _docs(spark, sf_dir)
         .select("doc_id", "n_chars")
@@ -2191,7 +2189,7 @@ def weighted_sample_topk(
     return (
         docs.withColumn("sample_key", F.expr(_aes_key_expr()))
         .orderBy(F.desc("sample_key"), F.asc("doc_id"))
-        .limit(int(k))
+        .limit(WEIGHTED_SAMPLE_K)
         .select("doc_id", F.col("n_chars").alias("weight"), "sample_key")
     )
 
@@ -2227,9 +2225,7 @@ ORACLE["weighted_sample_topk"] = WEIGHTED_SAMPLE_TOPK_SQL
 STRATIFIED_SAMPLE_K = 50
 
 
-def stratified_sample_topk(
-    spark: SparkSession, sf_dir: str, *, k: int = STRATIFIED_SAMPLE_K
-) -> DataFrame:
+def stratified_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = (
         _docs(spark, sf_dir)
         .select("doc_id", "source", "n_chars")
@@ -2241,7 +2237,7 @@ def stratified_sample_topk(
     return (
         docs.withColumn("sample_key", F.expr(_aes_key_expr()))
         .withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= int(k))
+        .filter(F.col("rk") <= STRATIFIED_SAMPLE_K)
         .select(
             "source", "doc_id", F.col("n_chars").alias("weight"),
             "sample_key", "rk",

@@ -44,6 +44,7 @@ from google_cloud_ecommerce_spark.operators.similarity import (
     N_QUERY_VECS,
     TOP_K,
     _emb,
+    _query_vecs,
     _with_norm,
 )
 from google_cloud_ecommerce_spark.operators.text import (
@@ -52,21 +53,6 @@ from google_cloud_ecommerce_spark.operators.text import (
     _docs,
 )
 
-
-def _require_oracle_default(**pairs: tuple[int, int]) -> None:
-    """Reject knob overrides that diverge from the module constants the
-    registry oracles were generated against (ADVICE r5: a silent
-    override breaks Spark/DuckDB parity, and an ndcg top_k above NDCG_K
-    indexes past the precomputed weight arrays). The knobs stay in the
-    signatures as documentation of the scale parameters; re-tuning them
-    means regenerating the paired SQL, so a mismatch is an error."""
-    bad = {k: v for k, v in pairs.items() if v[0] != v[1]}
-    if bad:
-        detail = ", ".join(f"{k}={v[0]} (oracle: {v[1]})" for k, v in bad.items())
-        raise ValueError(
-            f"override diverges from the oracle constants: {detail}; "
-            "regenerate the paired SQL oracle before re-tuning"
-        )
 
 # ---------------------------------------------------------------------------
 # hybrid_search_rrf — reciprocal-rank fusion (Cormack et al., SIGIR
@@ -84,17 +70,9 @@ RRF_TOP_K = 10
 N_RRF_QUERIES = len(BM25_TERMS)  # 4: query i = (BM25_TERMS[i], vec_id i)
 
 
-def hybrid_search_rrf(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    pool: int = RRF_POOL,
-    top_k: int = RRF_TOP_K,
-) -> DataFrame:
-    """Defaults are the fixture literals the registry oracle is inlined
-    against; at scale `pool` bounds both per-ranker windows and the
-    fusion join stays queries x pool rows."""
-    _require_oracle_default(pool=(pool, RRF_POOL), top_k=(top_k, RRF_TOP_K))
+def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RRF_POOL bounds both per-ranker windows, so the fusion join stays
+    queries x RRF_POOL rows at any corpus size."""
     # --- sparse side: per-term BM25 over one corpus scan ------------------
     # One tokenize pass: per-term tfs and the doc length are reduced to a
     # NARROW (doc_id, dl, tf_0..tf_3) table and lazily pinned — the
@@ -135,7 +113,7 @@ def hybrid_search_rrf(
         .select("doc_id", F.col("e.q_id").cast("int").alias("q_id"), "e.score", "e.tf")
         .filter(F.col("tf") > 0)
         .withColumn("lex_rank", F.row_number().over(lex_w).cast("long"))
-        .filter(F.col("lex_rank") <= pool)
+        .filter(F.col("lex_rank") <= RRF_POOL)
         .select("q_id", "doc_id", "lex_rank")
     )
     # --- dense side: exact cosine, query vectors broadcast ----------------
@@ -152,7 +130,7 @@ def hybrid_search_rrf(
             "cos", F.expr(dot_expr("qv", "v")) / (F.col("qnorm") * F.col("norm"))
         )
         .withColumn("sem_rank", F.row_number().over(sem_w).cast("long"))
-        .filter(F.col("sem_rank") <= pool)
+        .filter(F.col("sem_rank") <= RRF_POOL)
         .select("q_id", F.col("vec_id").alias("doc_id"), "sem_rank")
     )
     # --- fusion ------------------------------------------------------------
@@ -187,7 +165,7 @@ def hybrid_search_rrf(
     out_w = Window.partitionBy("q_id").orderBy(F.desc("rrf_score"), F.asc("doc_id"))
     return (
         fused.withColumn("rank", F.row_number().over(out_w).cast("long"))
-        .filter(F.col("rank") <= top_k)
+        .filter(F.col("rank") <= RRF_TOP_K)
         .select(
             "q_id",
             "doc_id",
@@ -281,30 +259,16 @@ RAG_TOP_K = TOP_K
 RAG_TOKEN_BUDGET = 300
 
 
-def rag_context_pack(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    top_k: int = RAG_TOP_K,
-    token_budget: int = RAG_TOKEN_BUDGET,
-) -> DataFrame:
-    _require_oracle_default(
-        top_k=(top_k, RAG_TOP_K), token_budget=(token_budget, RAG_TOKEN_BUDGET)
-    )
+def rag_context_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _with_norm(_emb(spark, sf_dir))
-    queries = corpus.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-    )
     rank_w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     top = (
-        corpus.join(F.broadcast(queries), F.col("vec_id") != F.col("q_id"))
+        corpus.join(F.broadcast(_query_vecs(corpus)), F.col("vec_id") != F.col("q_id"))
         .withColumn(
             "cos", F.expr(dot_expr("qv", "v")) / (F.col("qnorm") * F.col("norm"))
         )
         .withColumn("rank", F.row_number().over(rank_w).cast("long"))
-        .filter(F.col("rank") <= top_k)
+        .filter(F.col("rank") <= RAG_TOP_K)
         .select("q_id", F.col("vec_id").alias("doc_id"), "rank", "cos")
     )
     doc_tokens = _docs(spark, sf_dir).select(
@@ -319,7 +283,7 @@ def rag_context_pack(
     return (
         top.join(doc_tokens, "doc_id")
         .withColumn("cum_tokens", F.sum("n_tokens").over(cum_w))
-        .filter(F.col("cum_tokens") <= token_budget)
+        .filter(F.col("cum_tokens") <= RAG_TOKEN_BUDGET)
         .select(
             "q_id",
             "rank",
@@ -408,35 +372,17 @@ MMR_POOL = 20
 MMR_K = 5
 
 
-def mmr_diversified_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    pool: int = MMR_POOL,
-    k: int = MMR_K,
-    n_query_vecs: int = N_QUERY_VECS,
-) -> DataFrame:
-    _require_oracle_default(
-        pool=(pool, MMR_POOL),
-        k=(k, MMR_K),
-        n_query_vecs=(n_query_vecs, N_QUERY_VECS),
-    )
+def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     lam, oml = float(MMR_LAMBDA), float(1.0 - MMR_LAMBDA)
-    k = int(k)
     corpus = _with_norm(_emb(spark, sf_dir))
-    queries = corpus.filter(F.col("vec_id") < n_query_vecs).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-    )
     rank_w = Window.partitionBy("q_id").orderBy(F.desc("rel"), F.asc("vec_id"))
     pool_df = (
-        corpus.join(F.broadcast(queries), F.col("vec_id") != F.col("q_id"))
+        corpus.join(F.broadcast(_query_vecs(corpus)), F.col("vec_id") != F.col("q_id"))
         .withColumn(
             "rel", F.expr(dot_expr("qv", "v")) / (F.col("qnorm") * F.col("norm"))
         )
         .withColumn("rk", F.row_number().over(rank_w))
-        .filter(F.col("rk") <= pool)
+        .filter(F.col("rk") <= MMR_POOL)
         .select("q_id", "vec_id", "rel", "v", "norm")
         .localCheckpoint(eager=False)
     )
@@ -469,7 +415,7 @@ def mmr_diversified_topk(
         }
         selected: list[int] = []
         out = []
-        for rnd in range(1, min(k, len(rel_of)) + 1):
+        for rnd in range(1, min(MMR_K, len(rel_of)) + 1):
             best = None  # (score, doc)
             for d, rel in rel_of.items():
                 d = int(d)
@@ -603,25 +549,11 @@ for _w in _NDCG_W:
 
 # scan-audit: queries, corpus, and relevance labels are three roles of the
 # embeddings table by design; both small sides broadcast
-def retrieval_ndcg_report(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    top_k: int = NDCG_K,
-    n_query_vecs: int = N_QUERY_VECS,
-) -> DataFrame:
-    _require_oracle_default(
-        top_k=(top_k, NDCG_K), n_query_vecs=(n_query_vecs, N_QUERY_VECS)
-    )
+def retrieval_ndcg_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from google_cloud_ecommerce_spark.operators._common import spark_double_array
 
     corpus = _with_norm(_emb(spark, sf_dir))
-    queries = corpus.filter(F.col("vec_id") < n_query_vecs).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-        F.col("label").alias("q_label"),
-    )
+    queries = _query_vecs(corpus, F.col("label").alias("q_label"))
     w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     top = (
         corpus.join(F.broadcast(queries), F.col("vec_id") != F.col("q_id"))
@@ -629,7 +561,7 @@ def retrieval_ndcg_report(
             "cos", F.expr(dot_expr("qv", "v")) / (F.col("qnorm") * F.col("norm"))
         )
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
+        .filter(F.col("rank") <= NDCG_K)
         .select(
             "q_id",
             "q_label",
@@ -664,7 +596,7 @@ def retrieval_ndcg_report(
             "idcg",
             F.expr(
                 f"element_at({p_arr}, "
-                f"CAST(greatest(1, least(n_possible, {int(top_k)})) AS INT))"
+                f"CAST(greatest(1, least(n_possible, {NDCG_K})) AS INT))"
             ),
         )
         .select(
@@ -755,16 +687,7 @@ EXP_TOP_K = 10
 EXP_MIN_CODF = 2
 
 
-def expanded_keyword_search(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    n_partners: int = EXP_PARTNERS,
-    top_k: int = EXP_TOP_K,
-) -> DataFrame:
-    _require_oracle_default(
-        n_partners=(n_partners, EXP_PARTNERS), top_k=(top_k, EXP_TOP_K)
-    )
+def expanded_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = _docs(spark, sf_dir).select(
         "doc_id", F.explode(F.expr(tokens_expr("lower(text)"))).alias("tok")
     )
@@ -810,7 +733,7 @@ def expanded_keyword_search(
     pw = Window.partitionBy("q_term").orderBy(F.desc("lift"), F.asc("tok"))
     partners = (
         lift.withColumn("prank", F.row_number().over(pw))
-        .filter(F.col("prank") <= n_partners)
+        .filter(F.col("prank") <= EXP_PARTNERS)
         .select("q_term", "tok", F.expr("CAST(0.5 AS DECIMAL(3,1))").alias("w"))
     )
     selves = spark.createDataFrame(
@@ -825,7 +748,7 @@ def expanded_keyword_search(
     sw = Window.partitionBy("q_term").orderBy(F.desc("score_dec"), F.asc("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(sw).cast("long"))
-        .filter(F.col("rank") <= top_k)
+        .filter(F.col("rank") <= EXP_TOP_K)
         .select(
             "q_term",
             "doc_id",

@@ -52,19 +52,33 @@ def _with_norm(df: DataFrame) -> DataFrame:
     return df.withColumn("norm", F.expr(f"sqrt({dot_expr('v', 'v')})"))
 
 
-def _rank_topk(scored: DataFrame, top_k: int) -> DataFrame:
-    """Shared exact-rerank tail (topk / lsh / multiprobe): score each
-    (query, candidate) pair by raw double cosine, rank per query with
-    ties to the lower neighbor id, round ONLY the output column — one
-    definition so tie-breaking and rounding can never silently diverge
-    between the exact and approximate operators."""
+def _query_vecs(frame: DataFrame, *extra: Column) -> DataFrame:
+    """The query set every top-k entry probes with: the N_QUERY_VECS
+    rows of a normed frame as (q_id, qv, qnorm), plus ``extra`` columns
+    read off the same rows (the query's bucket, cell, label, ...)."""
+    return frame.filter(F.col("vec_id") < N_QUERY_VECS).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("v").alias("qv"),
+        F.col("norm").alias("qnorm"),
+        *extra,
+    )
+
+
+def _rank_topk(scored: DataFrame) -> DataFrame:
+    """Shared exact-rerank tail of the (q_id, neighbor_id, rank, cosine)
+    top-k entries — exact, LSH, multiprobe, binary, IVF and both index
+    probes: score each (query, candidate) pair by raw double cosine,
+    keep the TOP_K best per query with ties to the lower neighbor id,
+    round ONLY the output column — one definition so tie-breaking and
+    rounding can never silently diverge between the exact and
+    approximate operators."""
     scored = scored.withColumn(
         "cos", F.expr(f"{dot_expr('qv', 'v')}") / (F.col("qnorm") * F.col("norm"))
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= top_k)
+        .filter(F.col("rank") <= TOP_K)
         .select(
             "q_id",
             F.col("vec_id").alias("neighbor_id"),
@@ -91,29 +105,21 @@ def _rank_tail_sql() -> str:
 # ---------------------------------------------------------------------------
 
 
-def similarity_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    top_k: int = TOP_K,
-    n_query_vecs: int = N_QUERY_VECS,
-) -> DataFrame:
+def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k neighbors for each query vector (vec_id <
-    n_query_vecs). Defaults are the fixture literals the registry
-    oracle is inlined against; at 100 TB the same plan holds for any
-    top_k (the per-query window is bounded by the candidate set) and
-    any broadcastable query batch (thousands of query vectors — beyond
+    N_QUERY_VECS). At 100 TB the same plan holds for any top-k (the
+    per-query window is bounded by the candidate set) and any
+    broadcastable query batch (thousands of query vectors — beyond
     that, chunk the query set).
 
     Ranking uses the raw double cosine (ties broken by neighbor id);
     only the output column is rounded.
     """
     corpus = _with_norm(_emb(spark, sf_dir))
-    queries = corpus.filter(F.col("vec_id") < n_query_vecs).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), F.col("norm").alias("qnorm")
+    scored = corpus.join(
+        F.broadcast(_query_vecs(corpus)), F.col("vec_id") != F.col("q_id")
     )
-    scored = corpus.join(F.broadcast(queries), F.col("vec_id") != F.col("q_id"))
-    return _rank_topk(scored, top_k)
+    return _rank_topk(scored)
 
 
 def _similarity_topk_sql() -> str:
@@ -168,13 +174,7 @@ def similarity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def similarity_lsh_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    top_k: int = TOP_K,
-    n_query_vecs: int = N_QUERY_VECS,
-) -> DataFrame:
+def similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's bucket.
 
     Same output shape as similarity_topk; recall < 1 by construction
@@ -185,17 +185,11 @@ def similarity_lsh_topk(
     at 100 TB you widen it so mean bucket occupancy stays scan-sized).
     """
     emb = _with_norm(_emb(spark, sf_dir)).withColumn("bucket", F.expr(_bucket_expr()))
-    queries = emb.filter(F.col("vec_id") < n_query_vecs).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-        F.col("bucket").alias("qbucket"),
-    )
     scored = emb.join(
-        F.broadcast(queries),
+        F.broadcast(_query_vecs(emb, F.col("bucket").alias("qbucket"))),
         (F.col("bucket") == F.col("qbucket")) & (F.col("vec_id") != F.col("q_id")),
     )
-    return _rank_topk(scored, top_k)
+    return _rank_topk(scored)
 
 
 def _similarity_buckets_sql() -> str:
@@ -286,41 +280,22 @@ def _assigned(spark: SparkSession, sf_dir: str, n_probe: int = N_PROBE) -> DataF
 # scan-audit: kmeans training rounds re-scan by design (iterative); per-round
 # pinning documented as a losing A/B (round 6)
 def similarity_ivf_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    top_k: int = TOP_K,
-    n_query_vecs: int = N_QUERY_VECS,
-    n_probe: int = N_PROBE,
+    spark: SparkSession, sf_dir: str, *, n_probe: int = N_PROBE
 ) -> DataFrame:
     """IVF top-k: each query probes its n_probe nearest cells; exact
-    cosine rerank inside the candidate set. Defaults are the fixture
-    literals the registry oracle is inlined against; n_probe is the
+    cosine rerank inside the candidate set. n_probe is the
     recall/latency dial (probing every cell makes the result exactly
-    the brute-force top-k — asserted by tests/test_recall.py). At
-    100 TB the centroid count grows with the corpus (cells stay
-    scan-sized) and n_probe stays O(10)."""
+    the brute-force top-k — asserted by tests/test_recall.py); the
+    registry oracle inlines N_PROBE. At 100 TB the centroid count grows
+    with the corpus (cells stay scan-sized) and n_probe stays O(10)."""
     assigned = _assigned(spark, sf_dir, n_probe=n_probe)
     corpus = assigned.filter(F.col("c_rank") == 1).select("vec_id", "v", "norm", "c_id")
-    probes = assigned.filter(F.col("vec_id") < n_query_vecs).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-        F.col("c_id").alias("probe_cell"),
+    probes = _query_vecs(assigned, F.col("c_id").alias("probe_cell"))
+    scored = corpus.join(
+        F.broadcast(probes),
+        (F.col("c_id") == F.col("probe_cell")) & (F.col("vec_id") != F.col("q_id")),
     )
-    scored = (
-        corpus.join(
-            F.broadcast(probes),
-            (F.col("c_id") == F.col("probe_cell")) & (F.col("vec_id") != F.col("q_id")),
-        )
-        .withColumn("cos", F.expr(f"{dot_expr('qv', 'v')}") / (F.col("qnorm") * F.col("norm")))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= top_k)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"), "rank", F.round("cos", 4).alias("cosine"))
-    )
+    return _rank_topk(scored)
 
 
 def _similarity_ivf_topk_sql() -> str:
@@ -472,12 +447,8 @@ def similarity_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(docs_meta, F.col("vec_id") == F.col("doc_id"))
         .drop("doc_id")
     )
-    queries = corpus.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-        F.col("lang").alias("q_lang"),
-        F.col("source").alias("q_source"),
+    queries = _query_vecs(
+        corpus, F.col("lang").alias("q_lang"), F.col("source").alias("q_source")
     )
     scored = (
         corpus.join(
@@ -617,9 +588,7 @@ def _marker_content(fp: str, layout: str) -> str:
     return f"{fp}|{_layout_recipe(layout)}"
 
 
-def build_similarity_index(
-    spark: SparkSession, sf_dir: str, *, force: bool = False
-) -> dict[str, str]:
+def build_similarity_index(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     """Materialize the ANN layouts; returns {layout: path}.
 
     Lazy: skipped when the layout already exists for the current source
@@ -634,7 +603,7 @@ def build_similarity_index(
 
     lsh_dir = _index_dir(sf_dir, "lsh")
     lsh_marker = lsh_dir / "_SOURCE"
-    if force or not lsh_marker.exists() or lsh_marker.read_text() != _marker_content(fp, "lsh"):
+    if not lsh_marker.exists() or lsh_marker.read_text() != _marker_content(fp, "lsh"):
         corpus = (
             _with_norm(_emb(spark, sf_dir))
             .withColumn("bucket", F.expr(_bucket_expr()))
@@ -646,7 +615,7 @@ def build_similarity_index(
 
     ivf_dir = _index_dir(sf_dir, "ivf")
     ivf_marker = ivf_dir / "_SOURCE"
-    if force or not ivf_marker.exists() or ivf_marker.read_text() != _marker_content(fp, "ivf"):
+    if not ivf_marker.exists() or ivf_marker.read_text() != _marker_content(fp, "ivf"):
         assigned = _assigned(spark, sf_dir)
         corpus = (
             assigned.filter(F.col("c_rank") == 1)
@@ -658,7 +627,7 @@ def build_similarity_index(
 
     pq_dir = _index_dir(sf_dir, "pq")
     pq_marker = pq_dir / "_SOURCE"
-    if force or not pq_marker.exists() or pq_marker.read_text() != _marker_content(fp, "pq"):
+    if not pq_marker.exists() or pq_marker.read_text() != _marker_content(fp, "pq"):
         trained, final = _pq_train(_pq_subvecs(_emb(spark, sf_dir).select("vec_id", "v")))
         _pq_codes(final).write.mode("overwrite").parquet(str(pq_dir / "codes"))
         _pq_codebook_frame(trained).write.mode("overwrite").parquet(
@@ -671,7 +640,7 @@ def build_similarity_index(
     # the probe prunes to N_PROBE cells, then scans M-byte codes.
     ivfpq_dir = _index_dir(sf_dir, "ivfpq")
     ivfpq_marker = ivfpq_dir / "_SOURCE"
-    if force or not ivfpq_marker.exists() or ivfpq_marker.read_text() != _marker_content(fp, "ivfpq"):
+    if not ivfpq_marker.exists() or ivfpq_marker.read_text() != _marker_content(fp, "ivfpq"):
         assigned = _assigned(spark, sf_dir).filter(F.col("c_rank") == 1)
         cents = (
             _emb(spark, sf_dir)
@@ -703,34 +672,15 @@ def similarity_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plan — the corpus scan is pruned to the query buckets by
     dynamic partition pruning instead of recomputing every bucket.
     """
-    path = build_similarity_index(spark, sf_dir)["lsh"]
-    idx = spark.read.parquet(path)
-    queries = (
-        _with_norm(_emb(spark, sf_dir))
-        .filter(F.col("vec_id") < N_QUERY_VECS)
-        .withColumn("qbucket", F.expr(_bucket_expr()))
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("v").alias("qv"),
-            F.col("norm").alias("qnorm"),
-            "qbucket",
-        )
+    idx = spark.read.parquet(build_similarity_index(spark, sf_dir)["lsh"])
+    queries = _query_vecs(
+        _with_norm(_emb(spark, sf_dir)), F.expr(_bucket_expr()).alias("qbucket")
     )
     scored = idx.join(
         F.broadcast(queries),
         (F.col("bucket") == F.col("qbucket")) & (F.col("vec_id") != F.col("q_id")),
-    ).withColumn("cos", F.expr(dot_expr("qv", "v")) / (F.col("qnorm") * F.col("norm")))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rank",
-            F.round("cos", 4).alias("cosine"),
-        )
     )
+    return _rank_topk(scored)
 
 
 # scan-audit: the flagged embeddings scans are the PROBE-ASSIGNMENT side —
@@ -743,33 +693,13 @@ def similarity_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     16 broadcast centroids; the corpus scan prunes to the probed cells.
     Same results (and oracle) as similarity_ivf_topk.
     """
-    path = build_similarity_index(spark, sf_dir)["ivf"]
-    idx = spark.read.parquet(path)
-    probes = (
-        _assigned(spark, sf_dir)
-        .filter(F.col("vec_id") < N_QUERY_VECS)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("v").alias("qv"),
-            F.col("norm").alias("qnorm"),
-            F.col("c_id").alias("probe_cell"),
-        )
-    )
+    idx = spark.read.parquet(build_similarity_index(spark, sf_dir)["ivf"])
+    probes = _query_vecs(_assigned(spark, sf_dir), F.col("c_id").alias("probe_cell"))
     scored = idx.join(
         F.broadcast(probes),
         (F.col("cell") == F.col("probe_cell")) & (F.col("vec_id") != F.col("q_id")),
-    ).withColumn("cos", F.expr(dot_expr("qv", "v")) / (F.col("qnorm") * F.col("norm")))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rank",
-            F.round("cos", 4).alias("cosine"),
-        )
     )
+    return _rank_topk(scored)
 
 
 QUERIES["similarity_index_topk"] = similarity_index_topk
@@ -1452,43 +1382,43 @@ ORACLE["pq_encode"] = _pq_encode_sql()
 # ---------------------------------------------------------------------------
 
 
-# scan-audit: PQ codebook training (kmeans rounds per subvector) re-scans the
-# corpus per unrolled round by design; iterate() pins every 8th round at
-# production round counts
-def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    paths = build_similarity_index(spark, sf_dir)
-    codes = spark.read.parquet(str(_Path(paths["pq"]) / "codes"))
-    codebook = spark.read.parquet(str(_Path(paths["pq"]) / "codebook"))
-    qsub = _pq_subvecs(
-        _emb(spark, sf_dir).filter(F.col("vec_id") < N_QUERY_VECS).select("vec_id", "v")
-    ).select(F.col("vec_id").alias("q_id"), "m", F.col("v").alias("qsv"))
-    # r12 (guide §2.4/§3.1): ONE broadcast of a per-query
-    # (m, c_id) -> d lookup MAP crossed with the codes scan replaces
-    # the old 4 chained per-subspace broadcast joins (each re-planned
-    # the lut subtree). The lut covers every (m, c_id) codeword per
-    # query, so every lookup hits — the old inner joins produced
-    # exactly codes x queries too — and adc sums d0..d3 in the same
-    # fixed order. Interleaved A/B at sf0.1: min 3.84 -> 1.24 s
-    # (noisy epoch, both arms equally polluted), rows identical.
-    # (crossJoin of a broadcast aggregate frame: N_QUERY_VECS rows.)
-    lut_map = (
+def _adc_lut(qsub: DataFrame, codebook: DataFrame) -> DataFrame:
+    """The broadcast ADC lookup of the PQ and IVF-PQ probes: per query
+    row of ``qsub`` (its columns other than the subspace m and the
+    subvector qsv — q_id, plus probe_cell for IVF-PQ), one
+    (m, c_id) -> squared distance map ``dm`` over every codeword.
+
+    r12 (guide §2.4/§3.1): ONE broadcast map joined to the codes scan
+    replaced 4 chained per-subspace broadcast joins, each of which
+    re-planned the lut subtree. The map covers every (m, c_id)
+    codeword, so every lookup hits — row set identical to the inner
+    joins. Interleaved A/B at sf0.1: PQ min 3.84 -> 1.24 s, IVF-PQ
+    1.50 -> 0.96 s, rows identical."""
+    keys = [c for c in qsub.columns if c not in ("m", "qsv")]
+    return F.broadcast(
         qsub.join(F.broadcast(codebook), "m")
         .withColumn("d", F.expr(_sqdist_expr("qsv", "cv")))
-        .groupBy("q_id")
+        .groupBy(*keys)
         .agg(
             F.expr(
                 "map_from_entries(collect_list(struct(struct(m, c_id), d)))"
             ).alias("dm")
         )
     )
+
+
+def _adc_topk(pairs: DataFrame) -> DataFrame:
+    """Shared ADC rank tail over (code row, lookup map) pairs: adc sums
+    the M looked-up distances in fixed subspace order, ranks ascending
+    by the raw double with ties to the lower neighbor id, and rounds
+    only the output column."""
     adc = " + ".join(
         f"element_at(dm, named_struct('m', CAST({i} AS INT), "
         f"'c_id', CAST(code_{i} AS BIGINT)))"
         for i in range(PQ_M)
     )
     scored = (
-        codes.crossJoin(F.broadcast(lut_map))
-        .withColumn("adc", F.expr(adc))
+        pairs.withColumn("adc", F.expr(adc))
         .filter(F.col("vec_id") != F.col("q_id"))
         .select("q_id", "vec_id", "adc")
     )
@@ -1503,6 +1433,15 @@ def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("adc", 4).alias("adc_sq_dist"),
         )
     )
+
+
+def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pq_dir = _Path(build_similarity_index(spark, sf_dir)["pq"])
+    qsub = _pq_subvecs(
+        _emb(spark, sf_dir).filter(F.col("vec_id") < N_QUERY_VECS).select("vec_id", "v")
+    ).select(F.col("vec_id").alias("q_id"), "m", F.col("v").alias("qsv"))
+    lut = _adc_lut(qsub, spark.read.parquet(str(pq_dir / "codebook")))
+    return _adc_topk(spark.read.parquet(str(pq_dir / "codes")).crossJoin(lut))
 
 
 def _similarity_pq_topk_sql() -> str:
@@ -1562,23 +1501,13 @@ ORACLE["similarity_pq_topk"] = _similarity_pq_topk_sql()
 # re-scan by design (iterative); the PROBE side reads only DPP-pruned code
 # partitions (plan-asserted)
 def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    paths = build_similarity_index(spark, sf_dir)
-    idx = spark.read.parquet(str(_Path(paths["ivfpq"]) / "codes"))
-    codebook = spark.read.parquet(str(_Path(paths["ivfpq"]) / "codebook"))
+    ivfpq_dir = _Path(build_similarity_index(spark, sf_dir)["ivfpq"])
     cents = (
         _emb(spark, sf_dir)
         .filter((F.col("vec_id") >= CENTROID_LO) & (F.col("vec_id") < CENTROID_HI))
         .select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
     )
-    probes = (
-        _assigned(spark, sf_dir)
-        .filter(F.col("vec_id") < N_QUERY_VECS)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("v").alias("qv"),
-            F.col("c_id").alias("probe_cell"),
-        )
-    )
+    probes = _query_vecs(_assigned(spark, sf_dir), F.col("c_id").alias("probe_cell"))
     qresid = probes.join(
         F.broadcast(cents), probes["probe_cell"] == cents["c_id"]
     ).select("q_id", "probe_cell", F.expr("zip_with(qv, cv, (a, b) -> a - b)").alias("rq"))
@@ -1592,47 +1521,12 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("s"),
     ).select("q_id", "probe_cell", F.col("s.m").alias("m"), F.col("s.sv").alias("qsv"))
-    # r12 (guide §2.4/§3.1): ONE broadcast of a per-(q, probe_cell)
-    # (m, c_id) -> d lookup MAP replaces the old 4 chained per-subspace
-    # broadcast joins — each of which re-planned the whole
-    # probe-assignment subtree (plan: 54 scans -> 24; DPP on the codes
-    # scan unchanged, plan-tested). The lut covers every (m, c_id)
-    # codeword per probe, so every map lookup hits — row set identical
-    # to the 4 inner joins — and adc sums d0..d3 in the same fixed
-    # order. Interleaved A/B at sf0.1: min 1.50 -> 0.96 s, rows
-    # identical.
-    lut_map = (
-        qsub.join(F.broadcast(codebook), "m")
-        .withColumn("d", F.expr(_sqdist_expr("qsv", "cv")))
-        .groupBy("q_id", "probe_cell")
-        .agg(
-            F.expr(
-                "map_from_entries(collect_list(struct(struct(m, c_id), d)))"
-            ).alias("dm")
-        )
-    )
-    adc = " + ".join(
-        f"element_at(dm, named_struct('m', CAST({i} AS INT), "
-        f"'c_id', CAST(code_{i} AS BIGINT)))"
-        for i in range(PQ_M)
-    )
-    scored = (
-        idx.join(F.broadcast(lut_map), F.col("cell") == F.col("probe_cell"))
-        .withColumn("adc", F.expr(adc))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", "adc")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.asc("adc"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rank",
-            F.round("adc", 4).alias("adc_sq_dist"),
-        )
-    )
+    # the per-probe lookup map also stopped the 4 chained joins from
+    # re-planning the probe-assignment subtree (plan: 54 scans -> 24; DPP
+    # on the codes scan unchanged, plan-tested)
+    lut = _adc_lut(qsub, spark.read.parquet(str(ivfpq_dir / "codebook")))
+    codes = spark.read.parquet(str(ivfpq_dir / "codes"))
+    return _adc_topk(codes.join(lut, F.col("cell") == F.col("probe_cell")))
 
 
 def _similarity_ivfpq_topk_sql() -> str:
@@ -1773,7 +1667,7 @@ ORACLE["random_projection"] = _random_projection_sql()
 #
 # Scale shape: both sides are the already-scale-shaped operators (the
 # exact side broadcast-joins the query batch, the LSH side probes one
-# bucket); the comparison itself is a join between two k x n_query_vecs
+# bucket); the comparison itself is a join between two TOP_K x N_QUERY_VECS
 # row sets — trivially small at any corpus size, so the report adds
 # nothing to the dominant cost. Left join (not inner) so a bucket with
 # zero overlap still yields a row with recall 0.
@@ -1952,9 +1846,7 @@ ORACLE["embedding_outliers"] = _embedding_outliers_sql()
 MRL_TRUNC_DIM = 16
 
 
-def _mrl_ranked(
-    emb: DataFrame, dims: tuple, top_k: int, n_query_vecs: int
-) -> DataFrame:
+def _mrl_ranked(emb: DataFrame, dims: tuple) -> DataFrame:
     """Pair table (q_id, neighbor vec_id) with row_number ranks under
     the full cosine (``r_full``) and under each prefix-truncated cosine
     (``r_<d>``), from one pair pass."""
@@ -1964,16 +1856,8 @@ def _mrl_ranked(
         ).alias(f"nrm_{d}")
         for d in dims
     ]
-    src = emb.select(
-        "vec_id", "v", F.expr(f"sqrt({dot_expr('v', 'v')})").alias("nrm"),
-        *norm_cols,
-    )
-    probes = src.filter(F.col("vec_id") < n_query_vecs).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-        *[F.col(f"nrm_{d}").alias(f"qnrm_{d}") for d in dims],
-    )
+    src = _with_norm(emb).select("vec_id", "v", "norm", *norm_cols)
+    probes = _query_vecs(src, *[F.col(f"nrm_{d}").alias(f"qnrm_{d}") for d in dims])
     fold = "aggregate({0}, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
     scored = (
         src.join(F.broadcast(probes), F.col("vec_id") != F.col("q_id"))
@@ -1981,7 +1865,7 @@ def _mrl_ranked(
         .select(
             "q_id",
             "vec_id",
-            (F.expr(fold.format("prods")) / (F.col("qnrm") * F.col("nrm"))).alias(
+            (F.expr(fold.format("prods")) / (F.col("qnorm") * F.col("norm"))).alias(
                 "cos_full"
             ),
             *[
@@ -2007,21 +1891,16 @@ def _mrl_ranked(
 
 
 def matryoshka_recall(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    trunc_dim: int = MRL_TRUNC_DIM,
-    top_k: int = TOP_K,
-    n_query_vecs: int = N_QUERY_VECS,
+    spark: SparkSession, sf_dir: str, *, trunc_dim: int = MRL_TRUNC_DIM
 ) -> DataFrame:
     emb = _emb(spark, sf_dir).select("vec_id", "v")
     d = int(trunc_dim)
-    ranked = _mrl_ranked(emb, (d,), top_k, n_query_vecs)
-    both = (F.col("r_full") <= top_k) & (F.col(f"r_{d}") <= top_k)
+    ranked = _mrl_ranked(emb, (d,))
+    both = (F.col("r_full") <= TOP_K) & (F.col(f"r_{d}") <= TOP_K)
     return ranked.groupBy("q_id").agg(
         F.sum(both.cast("long")).alias("n_overlap"),
         F.round(
-            F.sum(both.cast("long")) / F.lit(float(top_k)), 4
+            F.sum(both.cast("long")) / F.lit(float(TOP_K)), 4
         ).alias("recall"),
     )
 
@@ -2084,20 +1963,15 @@ MRL_SWEEP_DIMS = (8, 16, 32)
 
 
 def matryoshka_dim_sweep(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    dims: tuple = MRL_SWEEP_DIMS,
-    top_k: int = TOP_K,
-    n_query_vecs: int = N_QUERY_VECS,
+    spark: SparkSession, sf_dir: str, *, dims: tuple = MRL_SWEEP_DIMS
 ) -> DataFrame:
     emb = _emb(spark, sf_dir).select("vec_id", "v")
-    ranked = _mrl_ranked(emb, dims, top_k, n_query_vecs)
-    in_full = F.col("r_full") <= top_k
+    ranked = _mrl_ranked(emb, dims)
+    in_full = F.col("r_full") <= TOP_K
     agg = ranked.agg(
         *[
             F.sum(
-                (in_full & (F.col(f"r_{int(d)}") <= top_k)).cast("long")
+                (in_full & (F.col(f"r_{int(d)}") <= TOP_K)).cast("long")
             ).alias(f"ov_{int(d)}")
             for d in dims
         ],
@@ -2115,7 +1989,7 @@ def matryoshka_dim_sweep(
         "trunc_dim",
         "n_overlap",
         F.round(
-            F.col("n_overlap") / (F.col("n_q") * F.lit(float(top_k))), 4
+            F.col("n_overlap") / (F.col("n_q") * F.lit(float(TOP_K))), 4
         ).alias("mean_recall"),
     )
 
@@ -2408,21 +2282,10 @@ MAXSIM_CHUNK = 4  # vectors per "document"
 MAXSIM_TOP_K = 10
 
 
-def maxsim_retrieval(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    top_k: int = MAXSIM_TOP_K,
-    n_query_vecs: int = N_QUERY_VECS,
-) -> DataFrame:
+def maxsim_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _with_norm(_emb(spark, sf_dir))
-    queries = corpus.filter(F.col("vec_id") < n_query_vecs).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-    )
     scored = (
-        corpus.join(F.broadcast(queries))
+        corpus.join(F.broadcast(_query_vecs(corpus)))
         .withColumn(
             "cos", F.expr(dot_expr("qv", "v")) / (F.col("qnorm") * F.col("norm"))
         )
@@ -2432,7 +2295,7 @@ def maxsim_retrieval(
     w = Window.partitionBy("q_id").orderBy(F.desc("maxsim"), F.asc("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= top_k)
+        .filter(F.col("rank") <= MAXSIM_TOP_K)
         .select(
             "q_id", "doc_id", "rank", "n_chunks", F.round("maxsim", 4).alias("maxsim")
         )
@@ -2487,20 +2350,9 @@ ORACLE["maxsim_retrieval"] = _maxsim_retrieval_sql()
 HNM_TOP_K = 5
 
 
-def hard_negative_mining(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    top_k: int = HNM_TOP_K,
-    n_query_vecs: int = N_QUERY_VECS,
-) -> DataFrame:
+def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _with_norm(_emb(spark, sf_dir))
-    queries = corpus.filter(F.col("vec_id") < n_query_vecs).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-        F.col("label").alias("q_label"),
-    )
+    queries = _query_vecs(corpus, F.col("label").alias("q_label"))
     scored = (
         corpus.join(F.broadcast(queries), F.col("label") != F.col("q_label"))
         .withColumn(
@@ -2510,7 +2362,7 @@ def hard_negative_mining(
     w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= top_k)
+        .filter(F.col("rank") <= HNM_TOP_K)
         .select(
             "q_id",
             "q_label",
@@ -2579,15 +2431,9 @@ def _sq_codes(df: DataFrame) -> DataFrame:
     )
 
 
-def similarity_sq_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    top_k: int = SQ_TOP_K,
-    n_query_vecs: int = N_QUERY_VECS,
-) -> DataFrame:
+def similarity_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes = _sq_codes(_emb(spark, sf_dir))
-    queries = codes.filter(F.col("vec_id") < n_query_vecs).select(
+    queries = codes.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("q_id"),
         F.col("q").alias("qq"),
         F.col("scale").alias("qscale"),
@@ -2608,7 +2454,7 @@ def similarity_sq_topk(
     w = Window.partitionBy("q_id").orderBy(F.desc("approx_cos"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= top_k)
+        .filter(F.col("rank") <= SQ_TOP_K)
         .select(
             "q_id",
             F.col("vec_id").alias("neighbor_id"),
@@ -2704,12 +2550,7 @@ def _margin_structs_sql() -> str:
 
 
 def similarity_multiprobe_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    top_k: int = TOP_K,
-    n_query_vecs: int = N_QUERY_VECS,
-    n_extra_probes: int = N_EXTRA_PROBES,
+    spark: SparkSession, sf_dir: str, *, n_extra_probes: int = N_EXTRA_PROBES
 ) -> DataFrame:
     """Approximate top-k with margin-ordered multi-probe expansion.
 
@@ -2726,20 +2567,12 @@ def similarity_multiprobe_topk(
         f"concat(array(bucket), transform(slice({_margin_structs_expr()}, 1, "
         f"{int(n_extra_probes)}), s -> bucket ^ shiftleft(1L, s.p)))"
     )
-    queries = (
-        emb.filter(F.col("vec_id") < n_query_vecs)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("v").alias("qv"),
-            F.col("norm").alias("qnorm"),
-            F.explode(F.expr(probes_expr)).alias("qbucket"),
-        )
-    )
+    queries = _query_vecs(emb, F.explode(F.expr(probes_expr)).alias("qbucket"))
     scored = emb.join(
         F.broadcast(queries),
         (F.col("bucket") == F.col("qbucket")) & (F.col("vec_id") != F.col("q_id")),
     )
-    return _rank_topk(scored, top_k)
+    return _rank_topk(scored)
 
 
 def _similarity_multiprobe_topk_sql() -> str:
@@ -2819,12 +2652,7 @@ def _sign_pack_sql(col: str) -> str:
 
 
 def similarity_binary_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    top_k: int = TOP_K,
-    n_query_vecs: int = N_QUERY_VECS,
-    n_candidates: int = BQ_CANDIDATES,
+    spark: SparkSession, sf_dir: str, *, n_candidates: int = BQ_CANDIDATES
 ) -> DataFrame:
     # the sign-word table is NARROW (vec_id + one int64) and feeds two
     # roles (Hamming stream + query-word broadcast build); the lazy pin
@@ -2837,7 +2665,7 @@ def similarity_binary_topk(
         .select("vec_id", F.expr(_sign_pack_expr("v")).alias("w"))
         .localCheckpoint(eager=False)
     )
-    qwords = words.filter(F.col("vec_id") < n_query_vecs).select(
+    qwords = words.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("q_id"), F.col("w").alias("qw")
     )
     ham = words.join(
@@ -2850,15 +2678,10 @@ def similarity_binary_topk(
         .select("q_id", "vec_id")
     )
     corpus = _with_norm(_emb(spark, sf_dir))
-    queries = corpus.filter(F.col("vec_id") < n_query_vecs).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-    )
     scored = corpus.join(F.broadcast(cand), "vec_id").join(
-        F.broadcast(queries), "q_id"
+        F.broadcast(_query_vecs(corpus)), "q_id"
     )
-    return _rank_topk(scored, top_k)
+    return _rank_topk(scored)
 
 
 def _similarity_binary_topk_sql() -> str:

@@ -10,6 +10,9 @@ whole-stage codegen at any scale.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -28,7 +31,6 @@ from google_cloud_ecommerce_spark.operators._common import (
     MERSENNE31,
     STOPWORDS,
     gopher_counts,
-    gopher_keep,
     gopher_rules,
     let_expr,
     ngrams_expr,
@@ -777,9 +779,6 @@ def _bpe_one_round(state, rnd):
     return merged, bests + (best,)
 
 
-# scan-audit: unrolled iterative BPE training rounds — each merge round
-# re-plans the word-count subtree by design (lineage-bounded via iterate();
-# at production round counts checkpoint_every=8 pins bound the re-scans)
 def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # composite state (vocab, per-round bests): the lineage guard pins
     # only the growing vocab — at production round counts (~30k merges)
@@ -879,10 +878,10 @@ ORACLE["bpe_merges"] = _bpe_merges_sql()
 # ---------------------------------------------------------------------------
 
 
-# scan-audit: the merge rounds re-plan the word-count subtree per round by
-# design (unrolled iterative training, see bpe_merges); the CORPUS is touched
-# twice — word counts + the final doc-words join (banner above). Round-8 A/B
-# of a pinned word-split table recorded at the pin site below.
+# scan-audit: reads the documents table twice by design — once inside the
+# pinned word-count table (_bpe_vocab, which every merge round re-reads from
+# its pinned blocks) and once for the final doc-words join (banner above).
+# The audit sees only the second: a pinned table plans as an RDD scan
 def bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from google_cloud_ecommerce_spark.iterative import iterate
 
@@ -1502,7 +1501,9 @@ def gopher_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_words",
         *[f.alias(f"pass_{n}") for f, n in zip(flags, names)],
         sum(flags[1:], flags[0]).alias("n_rules_passed"),
-        F.expr(gopher_keep()).cast("long").alias("keep"),
+        # the product, not gopher_keep(): a NULL rule makes keep NULL, as
+        # in the oracle, where AND would let a failed word count win
+        reduce(operator.mul, flags).alias("keep"),
     )
 
 
@@ -1607,9 +1608,7 @@ def _py_token_bucket(tok: str) -> int:
     return h % TEXT_INDEX_BUCKETS
 
 
-def build_text_index(
-    spark: SparkSession, sf_dir: str, *, force: bool = False
-) -> str:
+def build_text_index(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the posting-list layout; lazy on a source fingerprint."""
     idx_dir = _TEXT_INDEX_ROOT / _os.path.basename(_os.path.normpath(sf_dir))
     marker = idx_dir / "_SOURCE"
@@ -1617,7 +1616,7 @@ def build_text_index(
     # so constant changes force a rebuild even with unchanged source
     # data (same staleness hazard as the ANN index markers)
     fp = f"{_text_source_fingerprint(sf_dir)}|tidx:b{TEXT_INDEX_BUCKETS}:md5mod:v1"
-    if force or not marker.exists() or marker.read_text() != fp:
+    if not marker.exists() or marker.read_text() != fp:
         postings = (
             _docs(spark, sf_dir)
             .select("doc_id", F.explode(F.expr(tokens_expr("text"))).alias("token"))

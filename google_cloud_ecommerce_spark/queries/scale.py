@@ -897,11 +897,11 @@ def _cube_fingerprint(sf_dir: str) -> str:
     return f"{st.st_mtime_ns}:{st.st_size}"
 
 
-def build_events_cube(spark: SparkSession, sf_dir: str, *, force: bool = False) -> str:
+def build_events_cube(spark: SparkSession, sf_dir: str) -> str:
     cube_dir = _CUBE_ROOT / _cube_os.path.basename(_cube_os.path.normpath(sf_dir))
     marker = cube_dir / "_SOURCE"
     fp = _cube_fingerprint(sf_dir)
-    if force or not marker.exists() or marker.read_text() != fp:
+    if not marker.exists() or marker.read_text() != fp:
         ev = load_table(spark, sf_dir, "events")
         cube = ev.groupBy(
             F.to_date("ts").alias("day"),

@@ -878,7 +878,10 @@ def test_shingle_dedup_matches_oracle_on_short_docs(spark, tmp_path):
     """Documents of 0, 1 and 2 tokens have no 3-token shingle. The
     oracle's range() gives them none; the Spark side once built its
     shingles over sequence(1, 0) = [1, 0] and raised
-    INVALID_ARRAY_INDEX_IN_ELEMENT_AT on them."""
+    INVALID_ARRAY_INDEX_IN_ELEMENT_AT on them. The empty document has no
+    words either: the Gopher ratios once divided by its zero word count
+    and raised DIVIDE_BY_ZERO in gopher_gates and curation_funnel_v2."""
+    from google_cloud_ecommerce_spark.operators import pipeline
     from tests.oracle_parity import compare, duckdb_connect
 
     base = "the quick brown fox jumps over the lazy dog near the old river bank today"
@@ -896,4 +899,7 @@ def test_shingle_dedup_matches_oracle_on_short_docs(spark, tmp_path):
         df = dedup.QUERIES[name](spark, str(tmp_path))
         assert df.count() > 0, f"{name}: the planted near-duplicates found no pair"
         problems = compare(df, con, dedup.ORACLE[name])
+        assert not problems, f"{name}: {problems}"
+    for mod, name in ((text, "gopher_gates"), (pipeline, "curation_funnel_v2")):
+        problems = compare(mod.QUERIES[name](spark, str(tmp_path)), con, mod.ORACLE[name])
         assert not problems, f"{name}: {problems}"

@@ -189,6 +189,39 @@ def test_no_duplicate_priority_entries():
     assert len(PRIORITY) == len(set(PRIORITY))
 
 
+def _keywords_passed_under_tests() -> set[tuple[str, str]]:
+    """(callee name, keyword) of every call in a file under tests/."""
+    import ast
+    from pathlib import Path
+
+    passed: set[tuple[str, str]] = set()
+    for path in Path(__file__).resolve().parent.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                f = node.func
+                callee = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                passed.update((callee, kw.arg) for kw in node.keywords if kw.arg)
+    return passed
+
+
+def test_every_registry_knob_is_swept_by_a_test():
+    """A keyword-only parameter on a registry entry is a knob, and a knob
+    exists only where a test sweeps it: the oracle inlines one value, so
+    a knob no test passes is a module constant that can only break
+    parity. Every such parameter must be passed by keyword somewhere
+    under tests/ (matched on the function's name; no Spark needed)."""
+    import inspect
+
+    passed = _keywords_passed_under_tests()
+    unswept = sorted(
+        f"{name}.{p.name}"
+        for name, fn in all_queries().items()
+        for p in inspect.signature(fn).parameters.values()
+        if p.kind is p.KEYWORD_ONLY and (fn.__name__, p.name) not in passed
+    )
+    assert not unswept, f"keyword-only parameters no test passes: {unswept}"
+
+
 def test_oracle_dtypes_survive_driver_canonicalizer():
     """DuckDB-side lint: no oracle may emit HUGEINT, non-scalar
     (LIST/STRUCT/MAP), tz-aware timestamp, or NaN/Inf doubles — every

@@ -21,8 +21,11 @@ def _write_docs(spark, tmp_path, rows):
 
 def test_skipgram_pairs_window_and_weights(spark, tmp_path):
     """'a b c a b' with window 2: known pair multiset; sum_w counts
-    distance-1 pairs at 1.0 and distance-2 pairs at 0.5 exactly."""
-    from google_cloud_ecommerce_spark.operators.text import skipgram_pairs
+    distance-1 pairs at 1.0 and distance-2 pairs at 0.5 exactly. The
+    window dial bounds the pair distance: window 1 keeps the 8 ordered
+    adjacent pairs, window 3 adds the distance-3 repeats a1<->a4 and
+    b2<->b5; skipgram_pmi scores the same pairs."""
+    from google_cloud_ecommerce_spark.operators.text import skipgram_pairs, skipgram_pmi
 
     sf = _write_docs(spark, tmp_path, [(1, "a b c a b", "en", "s", 9)])
     out = {
@@ -38,6 +41,16 @@ def test_skipgram_pairs_window_and_weights(spark, tmp_path):
     assert ("a", "a") not in out and ("b", "b") not in out
     # total ordered-pair count = 2+3+4+3+2 over the five positions
     assert sum(v[0] for v in out.values()) == 14
+
+    def counts(window):
+        rows = skipgram_pairs(spark, sf, window=window, min_count=1).collect()
+        return {(r.center, r.context): r.n_pairs for r in rows}
+
+    w1, w3 = counts(1), counts(3)
+    assert sum(w1.values()) == 8 and w1[("a", "b")] == 2 and w1[("a", "c")] == 1
+    assert sum(w3.values()) == 18 and w3[("a", "a")] == w3[("b", "b")] == 2
+    pmi = skipgram_pmi(spark, sf, window=1, min_count=1).collect()
+    assert sum(r.n_pairs for r in pmi) == 8
 
 
 def test_skipgram_min_count_filters(spark, tmp_path):

@@ -15,6 +15,12 @@ block directly above it) — the audit reconciles flags against tags and
 exits nonzero on any untagged flag, so "all flags are justified" is a
 mechanically checkable claim, not prose (VERDICT r7 #4).
 
+Entries that carry a tag but are not flagged are listed too, as
+information only (they never fail the audit): the audit counts catalog
+table FileScans, so a tag that justifies re-reads of an index parquet
+or of a pinned (localCheckpoint) table lands here, and so does a stale
+tag whose re-scans are gone.
+
 Usage: python tests/tools/scan_audit.py [sf_dir] [threshold]
 """
 
@@ -101,7 +107,7 @@ def main() -> int:
     from google_cloud_ecommerce_spark.session import get_spark
 
     spark = get_spark()
-    flagged = []
+    flagged, tagged_only = [], []
     for name, fn in all_queries().items():
         if name.startswith("streaming_"):
             continue  # building them runs a replay; plan shape is batch-tested
@@ -116,10 +122,14 @@ def main() -> int:
             flagged.append((name, hot, tagged))
             mark = "" if tagged else "  UNTAGGED"
             print(f"{name:<40} {hot}{mark}", flush=True)
+        elif has_audit_tag(fn):
+            tagged_only.append(name)
+            print(f"INFO {name:<35} {counts}  tagged, not flagged", flush=True)
     untagged = [name for name, _, tagged in flagged if not tagged]
     print(
         f"# flagged: {len(flagged)} (threshold {threshold}, {sf_dir}); "
-        f"tagged: {len(flagged) - len(untagged)}, untagged: {len(untagged)}"
+        f"tagged: {len(flagged) - len(untagged)}, untagged: {len(untagged)}; "
+        f"tagged but not flagged (information only): {len(tagged_only)}"
     )
     if untagged:
         print(f"# UNTAGGED flags need a '{TAG}' justification: {untagged}")
