@@ -76,11 +76,9 @@ def _modules():
 # They took slots 1-5 from curation_funnel_v2, corpus_to_training_batches,
 # pretraining_corpus_prep, embedding_outliers and skipgram_pairs, whose
 # round-12 code changes are green in CORRECTNESS_r12 and r13;
-# 7 re-checks whose code changed in round-12 optimization commits —
-# skipgram_pmi (zip_with slices), schema_evolution_read (overlapped
-# fixture writes), hybrid_search_rrf + corpus_drift (full-outer joins
-# fused to union/conditional aggregates), pagerank_categories
-# (single-row integer rounds), vocab_prune_coverage (fused totals),
+# 3 re-checks whose code changed in round-12 optimization commits and
+# again since CORRECTNESS_r13 — hybrid_search_rrf (full-outer joins fused
+# to union/conditional aggregates), vocab_prune_coverage (fused totals),
 # semdedup_clusters (pair stage SHUFFLE_HASH; its k-means now runs on
 # _kmeans_train too);
 # 3 re-checks whose global rank now comes from partition offsets
@@ -121,15 +119,26 @@ def _modules():
 # six remaining r06-last slots (dedup_segments, doc_fingerprint,
 # doc_tokens_udtf), green in CORRECTNESS_r13 and untouched by that
 # change;
+# 5 re-checks whose persisted layout (location, _SOURCE marker, rebuild
+# rule) moved into the one io.persisted_layout helper: text_index_search,
+# events_cube_rollup (its marker now carries a recipe),
+# repeated_span_dedup, dedup_span_excision, bucketed_join_revenue (last
+# driver rows r06, r10, r11, r11, r08). They took embedding_dim_stats,
+# the one oldest-evidence slot green in CORRECTNESS_r13 and untouched
+# since (the ten streaming names were rewritten by the harness change
+# and expanded_keyword_search / length_bucket_batches changed since r13),
+# and four round-12 re-checks green in r12 and r13 and untouched since:
+# skipgram_pmi, schema_evolution_read, corpus_drift, pagerank_categories;
 # tpch_q1_pricing_summary as the cross-round canary;
 # then strictly oldest evidence: the ten streaming r05-last names
 # (streaming_band_enrichment onward), rewritten by the harness change;
-# then 3 of the first 15 of the 44 r06-last names alphabetically,
+# then 2 of the first 15 of the 44 r06-last names alphabetically,
 # skipping the three that held code-changed slots
 # (corpus_to_training_batches, hybrid_search_rrf, pretraining_corpus_prep),
 # the three that gave way to the rank re-checks above, the five that
 # gave way to the document-feature re-checks and the three that gave way
-# to the rank-tail re-checks. Every name has an oracle;
+# to the rank-tail re-checks, and embedding_dim_stats, which gave way to
+# the persisted-layout re-checks. Every name has an oracle;
 # tests/test_registry.py pins the slate and the no-wasted-slot rule.
 PRIORITY: tuple[str, ...] = (
     # --- 5 re-checks: Lloyd trainers rewritten since the last check ---
@@ -138,12 +147,8 @@ PRIORITY: tuple[str, ...] = (
     "pq_encode",
     "pq_distortion_report",
     "kmeans_assign",
-    # --- 7 re-checks: code changed in round-12 commits ---
-    "skipgram_pmi",
-    "schema_evolution_read",
+    # --- 3 re-checks: code changed in round-12 commits ---
     "hybrid_search_rrf",
-    "corpus_drift",
-    "pagerank_categories",
     "vocab_prune_coverage",
     "semdedup_clusters",
     # --- 3 re-checks: global rank now from collected partition offsets ---
@@ -175,6 +180,12 @@ PRIORITY: tuple[str, ...] = (
     "similarity_ivf_topk",
     "similarity_index_topk",
     "similarity_ivf_index_topk",
+    # --- 5 re-checks: layout decision moved into io.persisted_layout ---
+    "text_index_search",
+    "events_cube_rollup",
+    "repeated_span_dedup",
+    "dedup_span_excision",
+    "bucketed_join_revenue",
     # --- cross-round canary ---
     "tpch_q1_pricing_summary",
     # --- 10 re-checks: oldest evidence (r05-last, the deferred tail) ---
@@ -188,8 +199,7 @@ PRIORITY: tuple[str, ...] = (
     "streaming_similarity_topk",
     "streaming_two_level_window",
     "streaming_view_purchase_full_outer",
-    # --- 3 re-checks: next-oldest evidence (r06-last), alphabetical ---
-    "embedding_dim_stats",
+    # --- 2 re-checks: next-oldest evidence (r06-last), alphabetical ---
     "expanded_keyword_search",
     "length_bucket_batches",
 )

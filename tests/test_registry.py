@@ -79,10 +79,8 @@ _RECHECK_SLATE = {
     # k-means / PQ trainers rewritten since their last CORRECTNESS row
     "similarity_pq_topk", "similarity_ivfpq_topk", "pq_encode",
     "pq_distortion_report", "kmeans_assign",
-    # round-12 optimization code changes
-    "skipgram_pmi", "schema_evolution_read", "hybrid_search_rrf",
-    "corpus_drift", "pagerank_categories", "vocab_prune_coverage",
-    "semdedup_clusters",
+    # round-12 optimization code changes, changed again since r13
+    "hybrid_search_rrf", "vocab_prune_coverage", "semdedup_clusters",
     # global rank now from collected partition offsets
     "decile_lift_chart", "lineitem_quartiles_distributed", "record_id",
     # stream plumbing moved into the shared harness, no slot before
@@ -100,6 +98,9 @@ _RECHECK_SLATE = {
     # exact-rerank tail moved onto the shared _rank_topk
     "similarity_ivf_topk", "similarity_index_topk",
     "similarity_ivf_index_topk",
+    # persisted layout moved into io.persisted_layout
+    "text_index_search", "events_cube_rollup", "repeated_span_dedup",
+    "dedup_span_excision", "bucketed_join_revenue",
     # cross-round canary
     "tpch_q1_pricing_summary",
     # oldest evidence: last driver row is r05 (the deferred tail)
@@ -108,11 +109,10 @@ _RECHECK_SLATE = {
     "streaming_media_features", "streaming_purchase_attribution_outer",
     "streaming_rate_limit", "streaming_similarity_topk",
     "streaming_two_level_window", "streaming_view_purchase_full_outer",
-    # next-oldest evidence: last driver row is r06 (3 of the first 15,
-    # alphabetical; the other twelve gave way to the rank,
-    # document-feature and rank-tail re-checks)
-    "embedding_dim_stats", "expanded_keyword_search",
-    "length_bucket_batches",
+    # next-oldest evidence: last driver row is r06 (2 of the first 15,
+    # alphabetical; the other thirteen gave way to the rank,
+    # document-feature, rank-tail and persisted-layout re-checks)
+    "expanded_keyword_search", "length_bucket_batches",
 }
 
 
