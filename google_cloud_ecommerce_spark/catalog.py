@@ -56,8 +56,8 @@ _PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 # change. On first touch of a pathological table we rewrite it into a
 # multi-file mirror under a cache dir, keyed by the source's
 # (size, mtime) fingerprint so a changed source forces a re-compact —
-# the same fingerprint discipline as the materialized similarity
-# indexes (operators/similarity.py).
+# the rule the persisted layouts follow too (io.persisted_layout),
+# though the mirror keeps its own cache dir and key.
 #
 # Round-10 (VERDICT r9 #3): the rewrite runs THROUGH SPARK — read →
 # repartitionByRange on the leading key → sortWithinPartitions → write

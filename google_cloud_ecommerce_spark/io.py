@@ -23,6 +23,10 @@ scale.
 
 from __future__ import annotations
 
+import os
+from collections.abc import Callable
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -281,36 +285,26 @@ def read_json_permissive(
 
 
 # ---------------------------------------------------------------------------
-# Bucketed (co-located) table layout — the ingest-time partitioning
-# that removes the join shuffle entirely: both sides written with
-# bucketBy(N, key) + sortBy(key) scan straight into a SortMergeJoin
-# with NO Exchange on either side (one task per bucket). This is the
-# 100 TB answer for a join both of whose sides are fact-sized (too big
-# to broadcast): pay the shuffle once at ingest, never per query.
-# The layout persists under spark-warehouse/bucketed/<table>/<sf>/ with
-# the same fingerprint-marker discipline as the ANN index layouts
-# (operators/similarity.py): stale or missing layouts rebuild; a fresh
-# session re-registers the catalog entry over the existing files via
-# CREATE TABLE ... CLUSTERED BY ... LOCATION.
+# Persisted layouts — derived tables written once and read by many
+# queries: the ANN indexes, the text and span indexes, the events cube,
+# the bucketed tables and events_by_day. One rule decides all of them:
+# a layout lives at WAREHOUSE/<kind>/<basename of sf_dir>, its _SOURCE
+# marker holds "<fingerprint of the source table>|<recipe>", and it is
+# rebuilt exactly when the marker does not hold that string. The recipe
+# names the constants and the build shape the persisted rows depend on
+# (bucket counts, hash schemes, trained parameters), so a changed
+# constant over unchanged data rebuilds instead of serving stale rows
+# the oracle no longer computes; bump its trailing v-tag when the build
+# itself changes shape. Two sources with the same basename share one
+# location; the fingerprint tells them apart.
 # ---------------------------------------------------------------------------
 
-N_BUCKETS = 8
-_BUCKET_ROOT = None  # resolved lazily so import carries no path cost
+WAREHOUSE = Path(__file__).resolve().parents[1] / "spark-warehouse"
 
 
-def _bucket_root():
-    global _BUCKET_ROOT
-    if _BUCKET_ROOT is None:
-        from pathlib import Path
-
-        _BUCKET_ROOT = Path(__file__).resolve().parents[1] / "spark-warehouse" / "bucketed"
-    return _BUCKET_ROOT
-
-
-def _bucket_fingerprint(sf_dir: str, table: str) -> str:
-    import os
-    from pathlib import Path
-
+def _source_fingerprint(sf_dir: str, table: str) -> str:
+    """mtime + size of ``<table>.parquet`` (of every file under it when
+    it is a directory)."""
     src = Path(sf_dir) / f"{table}.parquet"
     if src.is_dir():
         stats = sorted(
@@ -319,8 +313,40 @@ def _bucket_fingerprint(sf_dir: str, table: str) -> str:
             if p.is_file()
         )
         return repr(stats)
-    st = os.stat(src)
+    st = src.stat()
     return f"{st.st_mtime_ns}:{st.st_size}"
+
+
+def persisted_layout(
+    sf_dir: str, kind: str, table: str, recipe: str, build: Callable[[str], None]
+) -> str:
+    """Return the location of the ``kind`` layout derived from
+    ``table`` of ``sf_dir``, calling ``build(location)`` first when the
+    location's marker is not ``<fingerprint of table>|<recipe>``."""
+    loc = WAREHOUSE / kind / os.path.basename(os.path.normpath(sf_dir))
+    marker = loc / "_SOURCE"
+    content = f"{_source_fingerprint(sf_dir, table)}|{recipe}"
+    if not (marker.is_file() and marker.read_text() == content):
+        # a build that fails part-way leaves no marker behind
+        marker.unlink(missing_ok=True)
+        build(str(loc))
+        marker.write_text(content)
+    return str(loc)
+
+
+# ---------------------------------------------------------------------------
+# Bucketed (co-located) table layout — the ingest-time partitioning
+# that removes the join shuffle entirely: both sides written with
+# bucketBy(N, key) + sortBy(key) scan straight into a SortMergeJoin
+# with NO Exchange on either side (one task per bucket). This is the
+# 100 TB answer for a join both of whose sides are fact-sized (too big
+# to broadcast): pay the shuffle once at ingest, never per query.
+# The layout persists under bucketed/<table>/<key>_<n>/<sf>/; a fresh
+# session re-registers the catalog entry over the existing files via
+# CREATE TABLE ... CLUSTERED BY ... LOCATION.
+# ---------------------------------------------------------------------------
+
+N_BUCKETS = 8
 
 
 def ensure_bucketed_table(
@@ -333,55 +359,51 @@ def ensure_bucketed_table(
     """Return ``table`` as a catalog-registered bucketed table (bucketed
     AND sorted by ``key`` into ``n_buckets``), building the layout on
     first use per source fingerprint."""
-    import hashlib
-    import os
     import re
 
-    from google_cloud_ecommerce_spark.catalog import load_table
+    from google_cloud_ecommerce_spark.catalog import invalidate_table, load_table
 
     sf_tag = re.sub(r"[^a-zA-Z0-9]", "_", os.path.basename(os.path.normpath(sf_dir)))
-    loc_tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
     # key + bucket count are part of the identity (ADVICE r5): two callers
     # bucketing the same table by different keys must get distinct
     # layouts, not alternate full rebuilds of one shared location
     key_tag = re.sub(r"[^a-zA-Z0-9]", "_", key)
-    name = f"bk_{table}_{key_tag}_{n_buckets}_{sf_tag}_{loc_tag}"
-    loc = _bucket_root() / table / f"{key_tag}_{n_buckets}_{sf_tag}_{loc_tag}"
-    marker = loc / "_SOURCE"
-    content = f"{_bucket_fingerprint(sf_dir, table)}|b{n_buckets}:{key}:v1"
+    name = f"bk_{table}_{key_tag}_{n_buckets}_{sf_tag}"
 
-    # Opportunistic GC (ADVICE r6): layouts cached under the pre-(key,
-    # n_buckets) naming are orphaned by the rename and would waste disk
-    # forever — their _SOURCE marker predates the "|b<n>:<key>:v1"
-    # suffix, which is exactly how we recognize them. Never touches
-    # current-scheme siblings (other keys/bucket counts coexist).
-    table_root = loc.parent
+    # Opportunistic GC (ADVICE r6): layouts cached under an earlier
+    # naming scheme (<sf>, then <key>_<n>_<sf>_<path hash>) are orphaned
+    # and would waste disk forever. They hold a _SOURCE marker directly
+    # under bucketed/<table>/, where the current scheme only has
+    # <key>_<n> directories, so current-scheme siblings (other keys and
+    # bucket counts) are never touched. A concurrent builder in another
+    # process may remove the same directory first (ADVICE r7).
+    table_root = WAREHOUSE / "bucketed" / table
     if table_root.is_dir():
         import shutil
 
         for old in table_root.iterdir():
-            old_marker = old / "_SOURCE"
-            # a concurrent builder in another process can GC the same
-            # stale dir between is_file() and read_text() (ADVICE r7) —
-            # treat a vanished/unreadable marker as "someone else is
-            # handling it" and move on rather than failing the build
-            try:
-                stale = (
-                    old.is_dir()
-                    and old_marker.is_file()
-                    and "|b" not in old_marker.read_text()
-                )
-            except OSError:
-                continue
-            if stale:
+            if (old / "_SOURCE").is_file():
                 shutil.rmtree(old, ignore_errors=True)
 
-    fresh = marker.exists() and marker.read_text() == content
-    if spark.catalog.tableExists(name):
-        if fresh:
-            return spark.table(name)
+    def build(loc: str) -> None:
+        # a fingerprint change means the source files were replaced
+        # out-of-band — drop the cached plan + stale file listings first
+        invalidate_table(spark, sf_dir, table)
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-    if fresh:
+        (
+            load_table(spark, sf_dir, table)
+            .write.format("parquet")
+            .bucketBy(n_buckets, key)
+            .sortBy(key)
+            .option("path", loc)
+            .mode("overwrite")
+            .saveAsTable(name)
+        )
+
+    loc = persisted_layout(
+        sf_dir, f"bucketed/{table}/{key_tag}_{n_buckets}", table, f"b{n_buckets}:{key}:v1", build
+    )
+    if not spark.catalog.tableExists(name):
         # files are current from a prior session — re-register over them
         src = load_table(spark, sf_dir, table)
         cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in src.schema)
@@ -390,22 +412,6 @@ def ensure_bucketed_table(
             f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {n_buckets} BUCKETS "
             f"LOCATION '{loc}'"
         )
-        return spark.table(name)
-    # a fingerprint change means the source files were replaced
-    # out-of-band — drop the cached plan + stale file listings first
-    from google_cloud_ecommerce_spark.catalog import invalidate_table
-
-    invalidate_table(spark, sf_dir, table)
-    src = load_table(spark, sf_dir, table)
-    (
-        src.write.format("parquet")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .option("path", str(loc))
-        .mode("overwrite")
-        .saveAsTable(name)
-    )
-    marker.write_text(content)
     return spark.table(name)
 
 
@@ -415,26 +421,16 @@ def ensure_bucketed_table(
 # every time-bounded query prunes to the days it touches at the FILE
 # LISTING level (PartitionFilters in the scan, zero data read outside
 # the window). At 100 TB this is the difference between scanning one
-# day (~3 TB) and scanning three years. Same fingerprint-marker
-# discipline as the bucketed layout above.
+# day (~3 TB) and scanning three years.
 # ---------------------------------------------------------------------------
 
 
 def ensure_day_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     """Return the path of a day-partitioned copy of the events table,
     building it on first use per source fingerprint."""
-    import hashlib
-    import os
-    import re
-
     from google_cloud_ecommerce_spark.catalog import load_table
 
-    sf_tag = re.sub(r"[^a-zA-Z0-9]", "_", os.path.basename(os.path.normpath(sf_dir)))
-    loc_tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    loc = _bucket_root().parent / "events_by_day" / f"{sf_tag}_{loc_tag}"
-    marker = loc / "_SOURCE"
-    content = f"{_bucket_fingerprint(sf_dir, 'events')}|day:v1"
-    if not (marker.exists() and marker.read_text() == content):
+    def build(loc: str) -> None:
         # day AND hour are materialized at build time under the UTC pin
         # load_table applies, so reads in any session timezone see the
         # same wall-clock buckets (raw ts stays out of downstream
@@ -444,6 +440,6 @@ def ensure_day_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
             .withColumn("day", F.to_date(F.col("ts")))
             .withColumn("hour", F.hour(F.col("ts")).cast("int"))
         )
-        ev.write.mode("overwrite").partitionBy("day").parquet(str(loc))
-        marker.write_text(content)
-    return str(loc)
+        ev.write.mode("overwrite").partitionBy("day").parquet(loc)
+
+    return persisted_layout(sf_dir, "events_by_day", "events", "day:v1", build)

@@ -32,6 +32,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from google_cloud_ecommerce_spark.catalog import load_table
+from google_cloud_ecommerce_spark.io import persisted_layout
 from google_cloud_ecommerce_spark.operators._common import (
     EMBED_DIM,
     FOLD_BASE,
@@ -2099,48 +2100,20 @@ def _span_slide_sql() -> str:
     return f"list_transform(range(1, len(toks) - {SPAN_K - 2}), i -> {parts})"
 
 
-def _span_index_fingerprint(sf_dir: str) -> str:
-    import os
-    from pathlib import Path
-
-    src = Path(sf_dir) / "documents.parquet"
-    if src.is_dir():
-        stats = sorted(
-            (p.name, p.stat().st_mtime_ns, p.stat().st_size)
-            for p in src.rglob("*")
-            if p.is_file()
-        )
-        return repr(stats)
-    st = os.stat(src)
-    return f"{st.st_mtime_ns}:{st.st_size}"
-
-
 def ensure_span_index(spark: SparkSession, sf_dir: str) -> str:
     """Materialized span-fingerprint position index over the documents
     corpus: one parquet table of (doc_id, n_tokens, pos, h) — every
     sliding SPAN_K-token window's xxhash64, with its token position —
     built ONCE per source fingerprint (round-11, VERDICT r10 next #8).
     This is the artifact an exact-substring dedup REWRITE pass (Lee et
-    al. 2022) materializes at corpus-build time; repeated_span_dedup,
-    dedup_span_excision, and the curation funnel all consume it as a
+    al. 2022) materializes at corpus-build time; repeated_span_dedup and
+    dedup_span_excision (and curation_funnel_v2 through it) read it as a
     narrow columnar scan instead of each re-running the tokenize+slide
-    explode (the layout discipline of build_similarity_index /
-    ensure_day_partitioned_events applied to the span subtree — the
-    explode is the dominant cost of both headline entries). At 100 TB
-    the index is the inverted-index shard set of the dedup cluster,
-    partitioned by hash range."""
-    import os
-    from pathlib import Path
+    explode (the explode is the dominant cost of both entries). At 100 TB the index is the
+    inverted-index shard set of the dedup cluster, partitioned by hash
+    range."""
 
-    out = (
-        Path(__file__).resolve().parents[2]
-        / "spark-warehouse"
-        / "span_index"
-        / os.path.basename(os.path.normpath(sf_dir))
-    )
-    marker = out / "_SOURCE"
-    content = f"{_span_index_fingerprint(sf_dir)}|k{SPAN_K}:xxhash64:v1"
-    if not (marker.exists() and marker.read_text() == content):
+    def build(loc: str) -> None:
         toks = (
             _docs(spark, sf_dir)
             .select("doc_id", F.expr(tokens_expr("lower(text)")).alias("toks"))
@@ -2159,9 +2132,9 @@ def ensure_span_index(spark: SparkSession, sf_dir: str) -> str:
             F.col("g.pos").alias("pos"),
             F.col("g.h").alias("h"),
         )
-        pos_spans.write.mode("overwrite").parquet(str(out))
-        marker.write_text(content)
-    return str(out)
+        pos_spans.write.mode("overwrite").parquet(loc)
+
+    return persisted_layout(sf_dir, "span_index", "documents", f"k{SPAN_K}:xxhash64:v1", build)
 
 
 # scan-audit: reads the narrow span_index parquet twice by design (the

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from google_cloud_ecommerce_spark.catalog import load_table
+from google_cloud_ecommerce_spark.io import persisted_layout
 from google_cloud_ecommerce_spark.iterative import iterate
 from google_cloud_ecommerce_spark.operators._common import (
     EMBED_DIM,
@@ -513,134 +514,87 @@ ORACLE["similarity_filtered_topk"] = _similarity_filtered_topk_sql()
 #
 # similarity_lsh_topk / similarity_ivf_topk recompute bucket and cell
 # assignment on every query; at 100 TB the assignment IS the stored
-# layout. build_similarity_index persists the corpus twice under the
-# (gitignored) spark-warehouse:
+# layout. Four layouts persist under the (gitignored) spark-warehouse,
+# each built by the one probe that reads it:
 #
 #   ann_index/lsh/<sf>/bucket=<b>/...   corpus partitioned by sign-LSH bucket
 #   ann_index/ivf/<sf>/cell=<c>/...     corpus partitioned by nearest centroid
+#   ann_index/pq/<sf>/{codes,codebook}  PQ codes + the trained codebook
+#   ann_index/ivfpq/<sf>/{codes,codebook}  cell-partitioned residual codes
 #
 # so a probe reads 1/2^p (LSH) or NPROBE/N_CENTROIDS (IVF) of the data
 # via *partition pruning*, not a filter over a full scan. The probe
 # queries join the partition column against the broadcast query set and
 # Spark's dynamic partition pruning turns that join into a
 # dynamicpruningexpression on the scan (asserted in tests/test_plans.py)
-# — no driver-side collect of bucket ids. A _SOURCE fingerprint file
-# (mtime+size of embeddings.parquet) makes rebuilds lazy: repeated
-# queries and timed bench runs hit the existing layout.
+# — no driver-side collect of bucket ids. io.persisted_layout makes
+# rebuilds lazy (embeddings fingerprint + each layout's recipe):
+# repeated queries and timed bench runs hit the existing layout.
 #
 # Index rows store the exact same doubles as the source (parquet
 # round-trips IEEE doubles bit-exactly), so index-backed results are
 # value-identical to the recomputing variants and share their oracles.
 # ---------------------------------------------------------------------------
 
-import os as _os
-from pathlib import Path as _Path
 
-_INDEX_ROOT = _Path(__file__).resolve().parents[2] / "spark-warehouse" / "ann_index"
-
-
-def _source_fingerprint(sf_dir: str) -> str:
-    src = _Path(sf_dir) / "embeddings.parquet"
-    if src.is_dir():
-        stats = sorted(
-            (p.name, p.stat().st_mtime_ns, p.stat().st_size)
-            for p in src.rglob("*")
-            if p.is_file()
-        )
-        return repr(stats)
-    st = src.stat()
-    return f"{st.st_mtime_ns}:{st.st_size}"
-
-
-def _index_dir(sf_dir: str, layout: str) -> _Path:
-    sf_name = _os.path.basename(_os.path.normpath(sf_dir))
-    return _INDEX_ROOT / layout / sf_name
-
-
-def _layout_recipe(layout: str) -> str:
-    """Algorithm/param version folded into each layout's _SOURCE marker:
-    the persisted payload depends on these constants and the training
-    recipe, not just the source bytes — without them, changing a
-    constant with unchanged data would serve stale persisted codes
-    while the oracle recomputes fresh (parity failures masquerading as
-    engine bugs). Bump the trailing v-tag when the build recipe itself
-    changes shape."""
+def build_lsh_index(spark: SparkSession, sf_dir: str) -> str:
+    """Every vector once, partitioned by its sign-LSH bucket."""
     import hashlib
 
-    from google_cloud_ecommerce_spark.operators._common import PROJECTIONS
+    planes = hashlib.md5(repr(PROJECTIONS).encode()).hexdigest()[:12]
 
-    if layout == "lsh":
-        planes = hashlib.md5(repr(PROJECTIONS).encode()).hexdigest()[:12]
-        return f"lsh:p{N_PROJECTIONS}:{planes}:v1"
-    if layout == "ivf":
-        return f"ivf:c{CENTROID_LO}-{CENTROID_HI}:v1"
-    if layout == "pq":
-        return f"pq:m{PQ_M}k{PQ_K}d{PQ_SUB_DIM}:seedmaxmin:iters1:v2"
-    if layout == "ivfpq":
-        return (
-            f"ivfpq:c{CENTROID_LO}-{CENTROID_HI}:"
-            f"m{PQ_M}k{PQ_K}d{PQ_SUB_DIM}:seedmaxmin:iters1:v2"
-        )
-    raise ValueError(layout)
-
-
-def _marker_content(fp: str, layout: str) -> str:
-    return f"{fp}|{_layout_recipe(layout)}"
-
-
-def build_similarity_index(spark: SparkSession, sf_dir: str) -> dict[str, str]:
-    """Materialize the ANN layouts; returns {layout: path}.
-
-    Lazy: skipped when the layout already exists for the current source
-    fingerprint. The LSH layout holds every vector once (partition =
-    sign bucket); the IVF layout holds every vector once under its
-    primary (c_rank == 1) cell; the PQ layout holds per-vector
-    product-quantization codes (M small ints — the probe scans codes,
-    never floats) plus the tiny trained codebook.
-    """
-    paths: dict[str, str] = {}
-    fp = _source_fingerprint(sf_dir)
-
-    lsh_dir = _index_dir(sf_dir, "lsh")
-    lsh_marker = lsh_dir / "_SOURCE"
-    if not lsh_marker.exists() or lsh_marker.read_text() != _marker_content(fp, "lsh"):
+    def build(loc: str) -> None:
         corpus = (
             _with_norm(_emb(spark, sf_dir))
             .withColumn("bucket", F.expr(_bucket_expr()))
             .select("vec_id", "v", "norm", "bucket")
         )
-        corpus.write.mode("overwrite").partitionBy("bucket").parquet(str(lsh_dir))
-        lsh_marker.write_text(_marker_content(fp, "lsh"))
-    paths["lsh"] = str(lsh_dir)
+        corpus.write.mode("overwrite").partitionBy("bucket").parquet(loc)
 
-    ivf_dir = _index_dir(sf_dir, "ivf")
-    ivf_marker = ivf_dir / "_SOURCE"
-    if not ivf_marker.exists() or ivf_marker.read_text() != _marker_content(fp, "ivf"):
-        assigned = _assigned(spark, sf_dir)
+    return persisted_layout(
+        sf_dir, "ann_index/lsh", "embeddings", f"lsh:p{N_PROJECTIONS}:{planes}:v1", build
+    )
+
+
+def build_ivf_index(spark: SparkSession, sf_dir: str) -> str:
+    """Every vector once, under its primary (c_rank == 1) cell."""
+
+    def build(loc: str) -> None:
         corpus = (
-            assigned.filter(F.col("c_rank") == 1)
+            _assigned(spark, sf_dir)
+            .filter(F.col("c_rank") == 1)
             .select("vec_id", "v", "norm", F.col("c_id").alias("cell"))
         )
-        corpus.write.mode("overwrite").partitionBy("cell").parquet(str(ivf_dir))
-        ivf_marker.write_text(_marker_content(fp, "ivf"))
-    paths["ivf"] = str(ivf_dir)
+        corpus.write.mode("overwrite").partitionBy("cell").parquet(loc)
 
-    pq_dir = _index_dir(sf_dir, "pq")
-    pq_marker = pq_dir / "_SOURCE"
-    if not pq_marker.exists() or pq_marker.read_text() != _marker_content(fp, "pq"):
+    return persisted_layout(
+        sf_dir, "ann_index/ivf", "embeddings", f"ivf:c{CENTROID_LO}-{CENTROID_HI}:v1", build
+    )
+
+
+def build_pq_index(spark: SparkSession, sf_dir: str) -> str:
+    """Per-vector product-quantization codes (M small ints — the probe
+    scans codes, never floats) plus the tiny trained codebook."""
+
+    def build(loc: str) -> None:
         trained, final = _pq_train(_pq_subvecs(_emb(spark, sf_dir).select("vec_id", "v")))
-        _pq_codes(final).write.mode("overwrite").parquet(str(pq_dir / "codes"))
-        _pq_codebook_frame(trained).write.mode("overwrite").parquet(
-            str(pq_dir / "codebook")
-        )
-        pq_marker.write_text(_marker_content(fp, "pq"))
-    paths["pq"] = str(pq_dir)
+        _pq_codes(final).write.mode("overwrite").parquet(f"{loc}/codes")
+        _pq_codebook_frame(trained).write.mode("overwrite").parquet(f"{loc}/codebook")
 
-    # IVF-PQ (FAISS IVFADC layout): cell-partitioned RESIDUAL codes —
-    # the probe prunes to N_PROBE cells, then scans M-byte codes.
-    ivfpq_dir = _index_dir(sf_dir, "ivfpq")
-    ivfpq_marker = ivfpq_dir / "_SOURCE"
-    if not ivfpq_marker.exists() or ivfpq_marker.read_text() != _marker_content(fp, "ivfpq"):
+    return persisted_layout(
+        sf_dir,
+        "ann_index/pq",
+        "embeddings",
+        f"pq:m{PQ_M}k{PQ_K}d{PQ_SUB_DIM}:seedmaxmin:iters1:v2",
+        build,
+    )
+
+
+def build_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
+    """IVF-PQ (FAISS IVFADC layout): cell-partitioned RESIDUAL codes —
+    the probe prunes to N_PROBE cells, then scans M-byte codes."""
+
+    def build(loc: str) -> None:
         assigned = _assigned(spark, sf_dir).filter(F.col("c_rank") == 1)
         cents = (
             _emb(spark, sf_dir)
@@ -654,15 +608,16 @@ def build_similarity_index(spark: SparkSession, sf_dir: str) -> dict[str, str]:
         )
         trained, final = _pq_train(_pq_subvecs(resid.select("vec_id", "v")))
         codes = _pq_codes(final).join(resid.select("vec_id", "cell"), "vec_id")
-        codes.write.mode("overwrite").partitionBy("cell").parquet(
-            str(ivfpq_dir / "codes")
-        )
-        _pq_codebook_frame(trained).write.mode("overwrite").parquet(
-            str(ivfpq_dir / "codebook")
-        )
-        ivfpq_marker.write_text(_marker_content(fp, "ivfpq"))
-    paths["ivfpq"] = str(ivfpq_dir)
-    return paths
+        codes.write.mode("overwrite").partitionBy("cell").parquet(f"{loc}/codes")
+        _pq_codebook_frame(trained).write.mode("overwrite").parquet(f"{loc}/codebook")
+
+    return persisted_layout(
+        sf_dir,
+        "ann_index/ivfpq",
+        "embeddings",
+        f"ivfpq:c{CENTROID_LO}-{CENTROID_HI}:m{PQ_M}k{PQ_K}d{PQ_SUB_DIM}:seedmaxmin:iters1:v2",
+        build,
+    )
 
 
 def similarity_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -672,7 +627,7 @@ def similarity_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plan — the corpus scan is pruned to the query buckets by
     dynamic partition pruning instead of recomputing every bucket.
     """
-    idx = spark.read.parquet(build_similarity_index(spark, sf_dir)["lsh"])
+    idx = spark.read.parquet(build_lsh_index(spark, sf_dir))
     queries = _query_vecs(
         _with_norm(_emb(spark, sf_dir)), F.expr(_bucket_expr()).alias("qbucket")
     )
@@ -693,7 +648,7 @@ def similarity_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     16 broadcast centroids; the corpus scan prunes to the probed cells.
     Same results (and oracle) as similarity_ivf_topk.
     """
-    idx = spark.read.parquet(build_similarity_index(spark, sf_dir)["ivf"])
+    idx = spark.read.parquet(build_ivf_index(spark, sf_dir))
     probes = _query_vecs(_assigned(spark, sf_dir), F.col("c_id").alias("probe_cell"))
     scored = idx.join(
         F.broadcast(probes),
@@ -1436,12 +1391,12 @@ def _adc_topk(pairs: DataFrame) -> DataFrame:
 
 
 def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pq_dir = _Path(build_similarity_index(spark, sf_dir)["pq"])
+    pq_dir = build_pq_index(spark, sf_dir)
     qsub = _pq_subvecs(
         _emb(spark, sf_dir).filter(F.col("vec_id") < N_QUERY_VECS).select("vec_id", "v")
     ).select(F.col("vec_id").alias("q_id"), "m", F.col("v").alias("qsv"))
-    lut = _adc_lut(qsub, spark.read.parquet(str(pq_dir / "codebook")))
-    return _adc_topk(spark.read.parquet(str(pq_dir / "codes")).crossJoin(lut))
+    lut = _adc_lut(qsub, spark.read.parquet(f"{pq_dir}/codebook"))
+    return _adc_topk(spark.read.parquet(f"{pq_dir}/codes").crossJoin(lut))
 
 
 def _similarity_pq_topk_sql() -> str:
@@ -1501,7 +1456,7 @@ ORACLE["similarity_pq_topk"] = _similarity_pq_topk_sql()
 # re-scan by design (iterative); the PROBE side reads only DPP-pruned code
 # partitions (plan-asserted)
 def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ivfpq_dir = _Path(build_similarity_index(spark, sf_dir)["ivfpq"])
+    ivfpq_dir = build_ivfpq_index(spark, sf_dir)
     cents = (
         _emb(spark, sf_dir)
         .filter((F.col("vec_id") >= CENTROID_LO) & (F.col("vec_id") < CENTROID_HI))
@@ -1524,8 +1479,8 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the per-probe lookup map also stopped the 4 chained joins from
     # re-planning the probe-assignment subtree (plan: 54 scans -> 24; DPP
     # on the codes scan unchanged, plan-tested)
-    lut = _adc_lut(qsub, spark.read.parquet(str(ivfpq_dir / "codebook")))
-    codes = spark.read.parquet(str(ivfpq_dir / "codes"))
+    lut = _adc_lut(qsub, spark.read.parquet(f"{ivfpq_dir}/codebook"))
+    codes = spark.read.parquet(f"{ivfpq_dir}/codes")
     return _adc_topk(codes.join(lut, F.col("cell") == F.col("probe_cell")))
 
 

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from google_cloud_ecommerce_spark.catalog import load_table
+from google_cloud_ecommerce_spark.io import persisted_layout
 from google_cloud_ecommerce_spark.iterative import iterate
 from google_cloud_ecommerce_spark.operators._common import (
     FOLD_BASE,
@@ -1561,8 +1562,8 @@ ORACLE["gopher_gates"] = _gopher_gates_sql()
 # ---------------------------------------------------------------------------
 # Materialized text inverted index — the keyword-search counterpart of
 # the persisted ANN layouts (operators/similarity.py): posting lists
-# (token, doc_id, tf) written ONCE, partitioned by a md5-derived token
-# bucket, then probed by search. Because a query's term buckets are
+# (token, doc_id, tf) written ONCE through io.persisted_layout,
+# partitioned by a md5-derived token bucket, then probed by search. Because a query's term buckets are
 # compile-time literals, the probe's partition filter is STATIC — the
 # scan touches |terms| of the TEXT_INDEX_BUCKETS partitions and never
 # reads the rest, which at 100 TB is the difference between a full
@@ -1572,8 +1573,6 @@ ORACLE["gopher_gates"] = _gopher_gates_sql()
 # ---------------------------------------------------------------------------
 
 import hashlib as _hashlib
-import os as _os
-from pathlib import Path as _Path
 
 import numpy as _np
 
@@ -1583,22 +1582,6 @@ from google_cloud_ecommerce_spark.operators._common import (
 )
 
 TEXT_INDEX_BUCKETS = 32
-_TEXT_INDEX_ROOT = (
-    _Path(__file__).resolve().parents[2] / "spark-warehouse" / "text_index"
-)
-
-
-def _text_source_fingerprint(sf_dir: str) -> str:
-    src = _Path(sf_dir) / "documents.parquet"
-    if src.is_dir():
-        stats = sorted(
-            (p.name, p.stat().st_mtime_ns, p.stat().st_size)
-            for p in src.rglob("*")
-            if p.is_file()
-        )
-        return repr(stats)
-    st = src.stat()
-    return f"{st.st_mtime_ns}:{st.st_size}"
 
 
 def _py_token_bucket(tok: str) -> int:
@@ -1609,14 +1592,10 @@ def _py_token_bucket(tok: str) -> int:
 
 
 def build_text_index(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the posting-list layout; lazy on a source fingerprint."""
-    idx_dir = _TEXT_INDEX_ROOT / _os.path.basename(_os.path.normpath(sf_dir))
-    marker = idx_dir / "_SOURCE"
-    # the layout recipe (bucket count + hash scheme) rides in the marker
-    # so constant changes force a rebuild even with unchanged source
-    # data (same staleness hazard as the ANN index markers)
-    fp = f"{_text_source_fingerprint(sf_dir)}|tidx:b{TEXT_INDEX_BUCKETS}:md5mod:v1"
-    if not marker.exists() or marker.read_text() != fp:
+    """Materialize the posting-list layout; lazy on a source fingerprint
+    and the recipe (bucket count + hash scheme)."""
+
+    def build(loc: str) -> None:
         postings = (
             _docs(spark, sf_dir)
             .select("doc_id", F.explode(F.expr(tokens_expr("text"))).alias("token"))
@@ -1627,9 +1606,11 @@ def build_text_index(spark: SparkSession, sf_dir: str) -> str:
                 F.expr(f"({token_hash_expr('token')}) % {TEXT_INDEX_BUCKETS}"),
             )
         )
-        postings.write.mode("overwrite").partitionBy("bucket").parquet(str(idx_dir))
-        marker.write_text(fp)
-    return str(idx_dir)
+        postings.write.mode("overwrite").partitionBy("bucket").parquet(loc)
+
+    return persisted_layout(
+        sf_dir, "text_index", "documents", f"tidx:b{TEXT_INDEX_BUCKETS}:md5mod:v1", build
+    )
 
 
 def text_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from google_cloud_ecommerce_spark.catalog import load_table
+from google_cloud_ecommerce_spark.io import persisted_layout
 
 N_SALTS = 32
 
@@ -872,36 +873,15 @@ ORACLE["event_rate_limit"] = EVENT_RATE_LIMIT_SQL
 # difference between reading days x types x buckets rows and reading
 # the fact table. Additive measures only (counts/sums reaggregate;
 # distincts deliberately excluded — that is what the KMV/HLL sketch
-# rollups are for). The cube is fingerprint-cached like the ANN / text
-# index layouts; the oracle aggregates the BASE table, proving
+# rollups are for). The cube is an io.persisted_layout like the ANN /
+# text index layouts; the oracle aggregates the BASE table, proving
 # cube-derived results identical to first-principles results.
 # streaming_incremental_mv maintains the same shape incrementally.
 # ---------------------------------------------------------------------------
 
-import os as _cube_os
-from pathlib import Path as _CubePath
-
-_CUBE_ROOT = _CubePath(__file__).resolve().parents[2] / "spark-warehouse" / "events_cube"
-
-
-def _cube_fingerprint(sf_dir: str) -> str:
-    src = _CubePath(sf_dir) / "events.parquet"
-    if src.is_dir():
-        stats = sorted(
-            (p.name, p.stat().st_mtime_ns, p.stat().st_size)
-            for p in src.rglob("*")
-            if p.is_file()
-        )
-        return repr(stats)
-    st = src.stat()
-    return f"{st.st_mtime_ns}:{st.st_size}"
-
 
 def build_events_cube(spark: SparkSession, sf_dir: str) -> str:
-    cube_dir = _CUBE_ROOT / _cube_os.path.basename(_cube_os.path.normpath(sf_dir))
-    marker = cube_dir / "_SOURCE"
-    fp = _cube_fingerprint(sf_dir)
-    if not marker.exists() or marker.read_text() != fp:
+    def build(loc: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         cube = ev.groupBy(
             F.to_date("ts").alias("day"),
@@ -911,9 +891,11 @@ def build_events_cube(spark: SparkSession, sf_dir: str) -> str:
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,4)")).alias("sum_value_dec"),
         )
-        cube.write.mode("overwrite").partitionBy("day").parquet(str(cube_dir))
-        marker.write_text(fp)
-    return str(cube_dir)
+        cube.write.mode("overwrite").partitionBy("day").parquet(loc)
+
+    return persisted_layout(
+        sf_dir, "events_cube", "events", "cube:day,event_type,k%10:count,sum_dec(18,4):v1", build
+    )
 
 
 def events_cube_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:

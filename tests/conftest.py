@@ -22,3 +22,15 @@ def sf_smoke() -> str:
 @pytest.fixture(scope="session")
 def sf_correct() -> str:
     return SF_CORRECT
+
+
+@pytest.fixture
+def tmp_warehouse(tmp_path, monkeypatch):
+    """Persisted layouts built during the test go under ``tmp_path``
+    instead of the repo's spark-warehouse (a tmp-dir corpus would
+    otherwise leave its layouts there)."""
+    from google_cloud_ecommerce_spark import io
+
+    warehouse = tmp_path / "spark-warehouse"
+    monkeypatch.setattr(io, "WAREHOUSE", warehouse)
+    return warehouse

@@ -137,13 +137,13 @@ def test_distinct_bucket_keys_get_distinct_layouts(spark, sf_smoke):
 
 
 def test_old_scheme_bucket_layouts_are_garbage_collected(spark, sf_smoke):
-    """ADVICE r6: layouts cached under the pre-(key, n_buckets) naming
-    are orphaned by the rename — recognized by a _SOURCE marker without
-    the "|b<n>:<key>:v1" suffix — and removed on the next build.
+    """ADVICE r6: layouts cached under an earlier naming scheme are
+    orphaned by the rename — recognized by a _SOURCE marker directly
+    under bucketed/<table>/ — and removed on the next build.
     Current-scheme siblings (other keys/counts) survive."""
-    from google_cloud_ecommerce_spark.io import _bucket_root, ensure_bucketed_table
+    from google_cloud_ecommerce_spark.io import WAREHOUSE, ensure_bucketed_table
 
-    table_root = _bucket_root() / "orders"
+    table_root = WAREHOUSE / "bucketed" / "orders"
     table_root.mkdir(parents=True, exist_ok=True)
     stale = table_root / "sf0_001_deadbeef"
     stale.mkdir(exist_ok=True)
@@ -163,9 +163,9 @@ def test_bucket_gc_tolerates_concurrently_vanishing_marker(
     read_text() — the marker read must not fail the build."""
     from pathlib import Path
 
-    from google_cloud_ecommerce_spark.io import _bucket_root, ensure_bucketed_table
+    from google_cloud_ecommerce_spark.io import WAREHOUSE, ensure_bucketed_table
 
-    table_root = _bucket_root() / "orders"
+    table_root = WAREHOUSE / "bucketed" / "orders"
     table_root.mkdir(parents=True, exist_ok=True)
     racy = table_root / "sf0_001_raceme"
     racy.mkdir(exist_ok=True)

@@ -134,7 +134,7 @@ def test_embedding_outliers_flags_planted_outlier(spark, tmp_path):
     assert OUTLIER_SIGMA == 2.0  # the documented gate
 
 
-def test_curation_funnel_v2_monotone_each_gate_kills(spark, tmp_path):
+def test_curation_funnel_v2_monotone_each_gate_kills(spark, tmp_path, tmp_warehouse):
     """VERDICT r9 #6: funnel-stage monotonicity on a crafted corpus
     where each gate uniquely kills one doc. Texts were verified
     analytically against the gate formulas: the ent doc has char

@@ -874,7 +874,7 @@ def test_semdedup_rows_independent_of_salt(spark, sf_smoke):
     assert rows["1"] == rows["32"]
 
 
-def test_shingle_dedup_matches_oracle_on_short_docs(spark, tmp_path):
+def test_shingle_dedup_matches_oracle_on_short_docs(spark, tmp_path, tmp_warehouse):
     """Documents of 0, 1 and 2 tokens have no 3-token shingle. The
     oracle's range() gives them none; the Spark side once built its
     shingles over sequence(1, 0) = [1, 0] and raised

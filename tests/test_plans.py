@@ -443,13 +443,17 @@ def test_ann_index_build_is_lazy(spark, sf_smoke, tmp_path):
     fingerprint match), so repeated probes don't rewrite the layout."""
     import os
 
-    from google_cloud_ecommerce_spark.operators.similarity import (
-        build_similarity_index,
-    )
+    from google_cloud_ecommerce_spark.operators import similarity
 
-    paths = build_similarity_index(spark, sf_smoke)
+    builders = (
+        similarity.build_lsh_index,
+        similarity.build_ivf_index,
+        similarity.build_pq_index,
+        similarity.build_ivfpq_index,
+    )
+    paths = {b.__name__: b(spark, sf_smoke) for b in builders}
     mtimes = {k: os.path.getmtime(os.path.join(v, "_SOURCE")) for k, v in paths.items()}
-    paths2 = build_similarity_index(spark, sf_smoke)
+    paths2 = {b.__name__: b(spark, sf_smoke) for b in builders}
     assert paths == paths2
     for k, v in paths2.items():
         assert os.path.getmtime(os.path.join(v, "_SOURCE")) == mtimes[k]

@@ -196,7 +196,7 @@ def test_streaming_heavy_hitters_is_exact_topn(spark, sf_smoke):
     assert got == want
 
 
-def test_bucketed_table_rebuilds_on_stale_marker(spark, tmp_path):
+def test_bucketed_table_rebuilds_on_stale_marker(spark, tmp_path, tmp_warehouse):
     """A source-fingerprint change must force a layout rebuild; an
     unchanged fingerprint must reuse the files (marker untouched)."""
     import time

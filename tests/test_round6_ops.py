@@ -29,7 +29,7 @@ def _write_docs(tmp_path, texts: list[str]) -> str:
     return str(tmp_path)
 
 
-def test_repeated_span_detects_cross_doc_verbatim_spans(spark, tmp_path):
+def test_repeated_span_detects_cross_doc_verbatim_spans(spark, tmp_path, tmp_warehouse):
     """An 8-token span shared verbatim by two docs is flagged in BOTH;
     a doc with no shared span reports zero (block-misaligned sharing is
     exactly what dedup_segments misses and this operator catches)."""
@@ -51,7 +51,7 @@ def test_repeated_span_detects_cross_doc_verbatim_spans(spark, tmp_path):
         assert r.n_spans > 0
 
 
-def test_repeated_span_counts_every_covered_position(spark, tmp_path):
+def test_repeated_span_counts_every_covered_position(spark, tmp_path, tmp_warehouse):
     """A doc that is entirely a repeat of another reports share 1.0."""
     from google_cloud_ecommerce_spark.operators.dedup import repeated_span_dedup
 
@@ -121,7 +121,7 @@ def test_recursive_cte_date_spine_covers_event_span(spark, sf_smoke):
     assert sum(r.n for r in rows) == events.count()
 
 
-def test_span_excision_drops_exact_repeats_and_keeps_unique(spark, tmp_path):
+def test_span_excision_drops_exact_repeats_and_keeps_unique(spark, tmp_path, tmp_warehouse):
     from google_cloud_ecommerce_spark.operators.dedup import dedup_span_excision
 
     text = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"
@@ -135,7 +135,7 @@ def test_span_excision_drops_exact_repeats_and_keeps_unique(spark, tmp_path):
     assert rows[2].n_excised == 0 and rows[2].retained_share == 1.0
 
 
-def test_span_excision_covers_only_span_positions(spark, tmp_path):
+def test_span_excision_covers_only_span_positions(spark, tmp_path, tmp_warehouse):
     """A shared 8-token span inside a longer unique doc excises exactly
     the covered positions, not the whole document."""
     from google_cloud_ecommerce_spark.operators.dedup import dedup_span_excision
