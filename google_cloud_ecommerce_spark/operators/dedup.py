@@ -2109,9 +2109,9 @@ def ensure_span_index(spark: SparkSession, sf_dir: str) -> str:
     al. 2022) materializes at corpus-build time; repeated_span_dedup and
     dedup_span_excision (and curation_funnel_v2 through it) read it as a
     narrow columnar scan instead of each re-running the tokenize+slide
-    explode (the explode is the dominant cost of both entries). At 100 TB the index is the
-    inverted-index shard set of the dedup cluster, partitioned by hash
-    range."""
+    explode (the explode is the dominant cost of both entries). At
+    100 TB the index is the inverted-index shard set of the dedup
+    cluster, partitioned by hash range."""
 
     def build(loc: str) -> None:
         toks = (

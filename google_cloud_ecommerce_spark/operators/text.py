@@ -1563,11 +1563,12 @@ ORACLE["gopher_gates"] = _gopher_gates_sql()
 # Materialized text inverted index — the keyword-search counterpart of
 # the persisted ANN layouts (operators/similarity.py): posting lists
 # (token, doc_id, tf) written ONCE through io.persisted_layout,
-# partitioned by a md5-derived token bucket, then probed by search. Because a query's term buckets are
-# compile-time literals, the probe's partition filter is STATIC — the
-# scan touches |terms| of the TEXT_INDEX_BUCKETS partitions and never
-# reads the rest, which at 100 TB is the difference between a full
-# corpus scan per query and touching ~terms/buckets of the postings.
+# partitioned by a md5-derived token bucket, then probed by search.
+# Because a query's term buckets are compile-time literals, the probe's
+# partition filter is STATIC — the scan touches |terms| of the
+# TEXT_INDEX_BUCKETS partitions and never reads the rest, which at
+# 100 TB is the difference between a full corpus scan per query and
+# touching ~terms/buckets of the postings.
 # text_index_search returns byte-identical results to keyword_search
 # (same oracle) — only the plan differs.
 # ---------------------------------------------------------------------------
