@@ -95,18 +95,18 @@ def _modules():
 # series_similarity, span_corruption_masks, stratified_hash_sample),
 # green in CORRECTNESS_r12 and r13 and untouched by that change; the
 # ten streaming r05-last names keep their slots, rewritten by it too;
-# 5 re-checks routed through the round-12 manifest-layer hardening
+# 3 re-checks routed through the round-12 manifest-layer hardening
 # (empty-diff change feed, claim fencing, temporal stats bounds,
-# retryable rebase): lakehouse_change_feed, streaming_version_feed,
-# lakehouse_pruned_read, lakehouse_append_ingest,
-# streaming_manifest_ingest;
-# 8 re-checks whose n-gram, repetition-gate, Gopher-count or lambda-bound
+# retryable rebase): streaming_version_feed, lakehouse_pruned_read,
+# streaming_manifest_ingest (lakehouse_change_feed and
+# lakehouse_append_ingest gave way to the pin-rule re-checks below);
+# 4 re-checks whose n-gram, repetition-gate, Gopher-count or lambda-bound
 # expressions moved onto the shared document-feature helpers in
 # operators/_common.py (ngrams_expr, let_expr, the per-row repetition
-# gate, the Gopher counts): pretraining_corpus_prep,
-# corpus_to_training_batches, gopher_gates, curation_funnel_v2,
-# dedup_ngram_jaccard, dedup_prefix_filter, feature_hash_vectors and
-# dedup_simhash (which already held an r06-last slot). The seven that held
+# gate, the Gopher counts): gopher_gates, dedup_ngram_jaccard,
+# dedup_prefix_filter, feature_hash_vectors (pretraining_corpus_prep,
+# corpus_to_training_batches, curation_funnel_v2 and dedup_simhash, moved
+# too, gave way to the pin-rule re-checks below). The seven that held
 # no slot took the two remaining non-streaming r05-last slots
 # (tokenizer_fertility, user_activity_bitmap) and the first five r06-last
 # slots (balanced_group_sample, corpus_mixture_sample,
@@ -129,6 +129,20 @@ def _modules():
 # and expanded_keyword_search / length_bucket_batches changed since r13),
 # and four round-12 re-checks green in r12 and r13 and untouched since:
 # skipgram_pmi, schema_evolution_read, corpus_drift, pagerank_categories;
+# 6 re-checks whose pin or round loop changed under the one pin rule
+# (pins.pin / pins.pin_result): pagerank_categories (edge pin deleted),
+# corpus_curation_pipeline (pairs pin deleted), dedup_clusters (eager
+# label-loop pins now lazy), lineitem_quartiles (rank pin now lazy),
+# bpe_tokenize (iterate template replaced by a plain loop) and
+# embedding_top_component (power-iteration loop likewise); last driver
+# rows r10, r07, r09, r09, r08, r07. Every oldest-evidence slot reaches a
+# changed line (the ten streaming names and length_bucket_batches replay
+# or rank through the rank pin, expanded_keyword_search pins its counts),
+# so they took the oldest-evidence slots among the re-checks green in
+# CORRECTNESS_r13 that reach no changed line: pretraining_corpus_prep,
+# corpus_to_training_batches, dedup_simhash (r06-last), then
+# curation_funnel_v2, lakehouse_append_ingest, lakehouse_change_feed
+# (r11-last, alphabetical; tpch_q1_pricing_summary stays the canary);
 # tpch_q1_pricing_summary as the cross-round canary;
 # then strictly oldest evidence: the ten streaming r05-last names
 # (streaming_band_enrichment onward), rewritten by the harness change;
@@ -161,21 +175,15 @@ PRIORITY: tuple[str, ...] = (
     "streaming_session_state",
     "streaming_jdbc_sink",
     "wire_stream_sink",
-    # --- 5 re-checks: routed through the r12 manifest hardening ---
-    "lakehouse_change_feed",
+    # --- 3 re-checks: routed through the r12 manifest hardening ---
     "streaming_version_feed",
     "lakehouse_pruned_read",
-    "lakehouse_append_ingest",
     "streaming_manifest_ingest",
-    # --- 8 re-checks: moved onto the shared document-feature helpers ---
-    "pretraining_corpus_prep",
-    "corpus_to_training_batches",
+    # --- 4 re-checks: moved onto the shared document-feature helpers ---
     "gopher_gates",
-    "curation_funnel_v2",
     "dedup_ngram_jaccard",
     "dedup_prefix_filter",
     "feature_hash_vectors",
-    "dedup_simhash",
     # --- 3 re-checks: rank tail moved onto the shared _rank_topk ---
     "similarity_ivf_topk",
     "similarity_index_topk",
@@ -186,6 +194,13 @@ PRIORITY: tuple[str, ...] = (
     "repeated_span_dedup",
     "dedup_span_excision",
     "bucketed_join_revenue",
+    # --- 6 re-checks: pin or round loop changed under the one pin rule ---
+    "pagerank_categories",
+    "corpus_curation_pipeline",
+    "dedup_clusters",
+    "lineitem_quartiles",
+    "bpe_tokenize",
+    "embedding_top_component",
     # --- cross-round canary ---
     "tpch_q1_pricing_summary",
     # --- 10 re-checks: oldest evidence (r05-last, the deferred tail) ---

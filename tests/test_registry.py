@@ -74,7 +74,12 @@ _FAMILY_ANCHORS = {
 # keeps the slot it held. The three IVF/LSH top-k entries whose
 # exact-rerank tail moved onto the shared _rank_topk (and whose query
 # set comes from the one _query_vecs builder) took the next three
-# r06-last slots. An undocumented re-check is still a wasted slot.
+# r06-last slots. The six entries whose pin or round loop changed under
+# the one pin rule (pins.pin) took the oldest-evidence re-check slots
+# green in CORRECTNESS_r13 whose entries reach no changed line: three
+# document-feature re-checks with r06-last evidence, then
+# curation_funnel_v2 and two manifest re-checks with r11-last evidence.
+# An undocumented re-check is still a wasted slot.
 _RECHECK_SLATE = {
     # k-means / PQ trainers rewritten since their last CORRECTNESS row
     "similarity_pq_topk", "similarity_ivfpq_topk", "pq_encode",
@@ -87,20 +92,21 @@ _RECHECK_SLATE = {
     "streaming_corpus_prep", "streaming_lakehouse_ingest",
     "streaming_session_state", "streaming_jdbc_sink", "wire_stream_sink",
     # routed through the r12 manifest hardening
-    "lakehouse_change_feed", "streaming_version_feed",
-    "lakehouse_pruned_read", "lakehouse_append_ingest",
+    "streaming_version_feed", "lakehouse_pruned_read",
     "streaming_manifest_ingest",
     # n-gram / repetition-gate / Gopher-count / lambda-bound expressions
     # moved onto the shared document-feature helpers
-    "pretraining_corpus_prep", "corpus_to_training_batches",
-    "gopher_gates", "curation_funnel_v2", "dedup_ngram_jaccard",
-    "dedup_prefix_filter", "feature_hash_vectors", "dedup_simhash",
+    "gopher_gates", "dedup_ngram_jaccard", "dedup_prefix_filter",
+    "feature_hash_vectors",
     # exact-rerank tail moved onto the shared _rank_topk
     "similarity_ivf_topk", "similarity_index_topk",
     "similarity_ivf_index_topk",
     # persisted layout moved into io.persisted_layout
     "text_index_search", "events_cube_rollup", "repeated_span_dedup",
     "dedup_span_excision", "bucketed_join_revenue",
+    # pin or round loop changed under the one pin rule (pins.pin)
+    "pagerank_categories", "corpus_curation_pipeline", "dedup_clusters",
+    "lineitem_quartiles", "bpe_tokenize", "embedding_top_component",
     # cross-round canary
     "tpch_q1_pricing_summary",
     # oldest evidence: last driver row is r05 (the deferred tail)
