@@ -81,7 +81,8 @@ _PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 # event/order scans into pure scheduling overhead; 4 MB leaves the
 # fact-table decode under-split — 1 MB beat both on the affected
 # query set, min-of-3).
-_COMPACT_MIN_ROWS = int(os.environ.get("SPARK_GRAFT_COMPACT_MIN_ROWS", "50000"))
+_OPEN_COST_BYTES = 1048576
+_COMPACT_MIN_ROWS = 50000
 _COMPACT_MIN_GROUP_ROWS = 8192
 
 
@@ -189,10 +190,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Lower the split-size floor so compacted small files fan out to all
     # cores; harmless at scale (see the compaction note above: the
     # bytes/parallelism term and the 128 MB cap dominate for big files).
-    spark.conf.set(
-        "spark.sql.files.openCostInBytes",
-        os.environ.get("SPARK_GRAFT_OPEN_COST", "1048576"),
-    )
+    spark.conf.set("spark.sql.files.openCostInBytes", str(_OPEN_COST_BYTES))
     key = (spark.sparkContext.applicationId, sf_dir, name)
     cached = _PLAN_CACHE.get(key)
     if cached is not None:

@@ -55,6 +55,7 @@ from google_cloud_ecommerce_spark.operators.guards import (
     broadcast_threshold_bytes,
     doc_sizes_bytes_bound,
 )
+from google_cloud_ecommerce_spark.pins import pin
 
 JACCARD_THRESHOLD = 0.8
 NGRAM_JACCARD_THRESHOLD = 0.2
@@ -435,7 +436,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sizes and BOTH sides of the intersection self-join — pinned (raw
     # and pruned) so the tokenize+shingle explode runs once, not once
     # per consumer (round-6 scan audit: 12 documents scans)
-    sh = (
+    sh = pin(
         _docs(spark, sf_dir)
         .select("doc_id", F.expr(tokens_expr("text")).alias("toks"))
         .select(
@@ -447,7 +448,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("shingle"),
         )
-        .localCheckpoint(eager=False)
     )
     max_df = _docs(spark, sf_dir).agg(
         F.greatest(
@@ -462,9 +462,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("df") > F.col("max_df"))
         .select("shingle")
     )
-    sh = sh.join(F.broadcast(hot), "shingle", "left_anti").localCheckpoint(
-        eager=False
-    )
+    sh = pin(sh.join(F.broadcast(hot), "shingle", "left_anti"))
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     inter = (
         sh.alias("a")
@@ -639,10 +637,10 @@ def _dedup_embedding_sql() -> str:
 # min of its neighbours' labels until fixpoint — O(component diameter)
 # rounds; high-threshold Jaccard components are small chains/cliques,
 # so a handful of rounds. Each round is one shuffle of the EDGE list
-# (orders of magnitude smaller than the corpus); `localCheckpoint`
-# truncates the lineage so round N doesn't recompute rounds 1..N-1
-# (the standard Spark iterative-algorithm pattern; GraphFrames does
-# the same internally). The fixpoint (not a fixed round count) makes
+# (orders of magnitude smaller than the corpus); each round's labels
+# are pinned, so round N doesn't recompute rounds 1..N-1 (the standard
+# Spark iterative-algorithm pattern; GraphFrames does the same
+# internally). The fixpoint (not a fixed round count) makes
 # the result deterministic, verified against DuckDB's recursive-CTE
 # transitive closure.
 #
@@ -660,16 +658,17 @@ CC_MAX_ROUNDS = 25
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (
+    # every round reads the edges; none may re-run the Jaccard join
+    edges = pin(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .localCheckpoint()  # materialize once; rounds must not re-run the simhash join
     )
-    labels = (
+    # each round's labels feed its neighbour join, its `changed` count
+    # (the action that writes the pinned blocks) and the next round
+    labels = pin(
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint()
     )
     for _ in range(CC_MAX_ROUNDS):
         nbr_min = (
@@ -677,15 +676,13 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("src")
             .agg(F.min("label").alias("nbr_min"))
         )
-        new_labels = (
-            labels.join(nbr_min, labels.node == nbr_min.src, "left")
-            .select(
+        new_labels = pin(
+            labels.join(nbr_min, labels.node == nbr_min.src, "left").select(
                 labels.node,
                 F.least(labels.label, F.coalesce(F.col("nbr_min"), labels.label)).alias(
                     "label"
                 ),
             )
-            .localCheckpoint()
         )
         changed = (
             new_labels.alias("n")
@@ -871,7 +868,7 @@ def dedup_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one explode pass pinned as the narrow (doc, segment, occurrences)
     # aggregate; the corpus-wide occurrence counts and the per-doc
     # rollup both read it (pin-narrow/recompute-wide rule, round 6)
-    segs = (
+    segs = pin(
         toks.select(
             "doc_id",
             F.explode(
@@ -883,7 +880,6 @@ def dedup_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("doc_id", "seg_hash")
         .agg(F.count("*").alias("cnt"))
-        .localCheckpoint(eager=False)
     )
     occ = segs.groupBy("seg_hash").agg(F.sum("cnt").alias("n_occ"))
     inst = segs.join(occ, "seg_hash")
@@ -985,11 +981,11 @@ def dedup_prefix_filter(
     # the candidate self-join, the verify intersect — shuffles and
     # compares fixed-width int64 keys instead of ~20-byte 3-word
     # strings; 31-bit collisions are deterministic and mirrored by the
-    # oracle. The checkpoint pins the exploded list: it feeds the df
+    # oracle. The pin holds the exploded list: it feeds the df
     # table, the per-doc sizes, the prefix ranking, AND both sides of
     # the verify join — five references that would each re-run the
     # shingle generation without truncation.
-    sh = (
+    sh = pin(
         _docs(spark, sf_dir)
         .select("doc_id", F.expr(tokens_expr("text")).alias("toks"))
         .select(
@@ -1001,7 +997,6 @@ def dedup_prefix_filter(
                 )
             ).alias("shingle"),
         )
-        .localCheckpoint(eager=False)
     )
     df_tbl = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     ranked = sh.join(df_tbl, "shingle")
@@ -1268,7 +1263,9 @@ def semdedup_clusters(
         _kmeans_train,
     )
 
-    assigned = (
+    # pinned: both join sides read the assignment; without the pin the
+    # broadcast-centroid argmin is recomputed per side
+    assigned = pin(
         # one-row centroid state per Lloyd round (see _kmeans_train): one
         # corpus aggregate + one broadcast per round, no regroup exchange
         _kmeans_train(
@@ -1276,9 +1273,6 @@ def semdedup_clusters(
         )
         .select("vec_id", "v", F.col("c_id").alias("cluster_id"))
         .withColumn("norm", F.expr(f"sqrt({dot_expr('v', 'v')})"))
-        # pin: both join sides read this; without it the assignment
-        # (broadcast-centroid argmin) is recomputed per side
-        .localCheckpoint(eager=False)
     )
     # Skew cap: sub-split clusters above SEMDEDUP_CLUSTER_CAP by the
     # low bits of the fixed sign-LSH key. Cluster sizes are K rows —

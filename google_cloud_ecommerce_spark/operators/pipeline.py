@@ -45,6 +45,7 @@ from google_cloud_ecommerce_spark.operators._common import (
     tokens_expr,
     tokens_sql,
 )
+from google_cloud_ecommerce_spark.pins import pin
 
 CHUNK_SIZE = 120  # chars per chunk
 CHUNK_STRIDE = 100  # start-to-start distance => 20-char overlap
@@ -1112,30 +1113,24 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     raw = docs.groupBy("source").agg(F.count("*").alias("n_raw"))
     keepers = docs.groupBy(F.md5("text")).agg(F.min("doc_id").alias("doc_id"))
-    # lazy checkpoints: each survivor set feeds 2-3 consumers (the next
-    # stage, the near-dup drop join, its own rollup); pinning makes each
-    # stage materialize once instead of re-running its upstream chain
-    # per consumer. (The funnel's wall-clock at sf0.1 is dominated by
-    # the minhash verify on the corpus's dense near-duplicate mass,
-    # ~40 s at sf0.1 after the hashed-set verify rewrite — which runs
-    # once either way.)
-    s1 = (
+    # each survivor set feeds 2-3 consumers (the next stage, the near-dup
+    # drop join, its own rollup); pinning makes each stage materialize
+    # once instead of re-running its upstream chain per consumer. The
+    # near-dup pairs feed only the drop join, so they stay unpinned.
+    # (The funnel's wall-clock at sf0.1 is dominated by the minhash
+    # verify on the corpus's dense near-duplicate mass, ~40 s at sf0.1
+    # after the hashed-set verify rewrite — which runs once either way.)
+    s1 = pin(
         docs.join(keepers, "doc_id")
         .select("doc_id", "source")
-        .localCheckpoint(eager=False)
     )
     gates = gopher_gates(spark, sf_dir).select("doc_id", "keep")
-    s2 = (
+    s2 = pin(
         s1.join(gates, "doc_id")
         .filter(F.col("keep") == 1)
         .select("doc_id", "source")
-        .localCheckpoint(eager=False)
     )
-    pairs = (
-        dedup_minhash_lsh(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=False)
-    )
+    pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     dropped = (
         pairs.join(s2.select(F.col("doc_id").alias("doc_a")), "doc_a")
         .select(F.col("doc_b").alias("doc_id"))

@@ -18,10 +18,11 @@ two-pass construction here keeps every stage parallel:
   3. The tile index is closed-form ntile arithmetic over (rank, N):
      the first N % t tiles hold N DIV t + 1 rows.
 
-``localCheckpoint`` pins the sampled range boundaries and assigned ids
-so the two downstream consumers (counts, ranked rows) agree — without
-it, recomputation could resample boundaries and re-deal ids. Every
-rank is then a deterministic projection of that one pinned frame.
+``pins.pin`` pins the sampled range boundaries and assigned ids so the
+two consumers (the collected per-partition counts and the ranked rows)
+agree: without it, recomputation could resample boundaries and re-deal
+ids. The pin is lazy; the offset collect is the action that writes its
+blocks, and every rank is a deterministic projection of them.
 
 The same machinery (with the tile step swapped for a plain offset add)
 backs ``record_id`` (queries/reference.py) and the stream replay
@@ -37,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
+
+from google_cloud_ecommerce_spark.pins import pin
 
 # monotonically_increasing_id layout: partition id in the high bits,
 # per-partition record number in the low 33.
@@ -71,11 +74,12 @@ def _ranked(
     spark = df.sparkSession
     if n_parts is None:
         n_parts = max(2, spark.sparkContext.defaultParallelism)
-    ordered = (
+    # two consumers, the offset collect and the ranked rows, must see
+    # the same range boundaries and ids
+    ordered = pin(
         df.repartitionByRange(n_parts, *order_exprs)
         .sortWithinPartitions(*order_exprs)
         .withColumn("__mid", F.monotonically_increasing_id())
-        .localCheckpoint()  # pin sampled range boundaries + assigned ids
     )
     offset, n = _collected_offsets(
         ordered, F.shiftright("__mid", _MID_RECORD_BITS), F.count("*")
@@ -125,11 +129,12 @@ def range_partition_prefix_sum(
     spark = df.sparkSession
     if n_parts is None:
         n_parts = max(2, spark.sparkContext.defaultParallelism)
-    ordered = (
-        df.repartitionByRange(n_parts, *order_exprs)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint()  # pin sampled range boundaries: the partition
-        # sums and the per-row window must see the SAME assignment
+    # two consumers, the partition sums and the per-row window, must
+    # see the same range assignment
+    ordered = pin(
+        df.repartitionByRange(n_parts, *order_exprs).withColumn(
+            "__pid", F.spark_partition_id()
+        )
     )
     offset, _ = _collected_offsets(ordered, F.col("__pid"), F.sum(value_col))
     w = (

@@ -52,6 +52,7 @@ from google_cloud_ecommerce_spark.operators.text import (
     _bm25_score_tpl,
     _docs,
 )
+from google_cloud_ecommerce_spark.pins import pin
 
 
 # ---------------------------------------------------------------------------
@@ -83,11 +84,10 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"CAST(size(filter(toks, x -> x = '{t}')) AS BIGINT)").alias(f"tf_{i}")
         for i, t in enumerate(BM25_TERMS)
     ]
-    tfd = (
+    tfd = pin(
         _docs(spark, sf_dir)
         .select("doc_id", F.expr(tokens_expr("lower(text)")).alias("toks"))
         .select("doc_id", F.expr("CAST(size(toks) AS BIGINT)").alias("dl"), *tf_cols)
-        .localCheckpoint(eager=False)
     )
     stats = tfd.agg(
         F.count("*").alias("n_docs"),
@@ -376,7 +376,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     lam, oml = float(MMR_LAMBDA), float(1.0 - MMR_LAMBDA)
     corpus = _with_norm(_emb(spark, sf_dir))
     rank_w = Window.partitionBy("q_id").orderBy(F.desc("rel"), F.asc("vec_id"))
-    pool_df = (
+    pool_df = pin(
         corpus.join(F.broadcast(_query_vecs(corpus)), F.col("vec_id") != F.col("q_id"))
         .withColumn(
             "rel", F.expr(dot_expr("qv", "v")) / (F.col("qnorm") * F.col("norm"))
@@ -384,7 +384,6 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rk", F.row_number().over(rank_w))
         .filter(F.col("rk") <= MMR_POOL)
         .select("q_id", "vec_id", "rel", "v", "norm")
-        .localCheckpoint(eager=False)
     )
     a, b = pool_df.alias("a"), pool_df.alias("b")
     sims = a.join(
@@ -693,21 +692,18 @@ def expanded_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # `counts` feeds dfreq, base, co AND the final scoring join; without a
     # pin Catalyst re-plans the tokenize+explode+groupBy subtree per use
-    # (12 corpus scans, VERDICT r5). The lazy localCheckpoint computes it
-    # once — the embedding_outliers fix pattern.
-    counts = (
+    # (12 corpus scans, VERDICT r5)
+    counts = pin(
         toks.groupBy("doc_id", "tok")
         .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
     )
     doc_toks = counts.select("doc_id", "tok")  # distinct by construction
     nd = doc_toks.agg(F.count_distinct("doc_id").alias("n_docs"))
     # dfreq broadcasts twice (as q_tok and as partner tok); pinned so the
     # vocab-sized aggregate runs once instead of once per broadcast
-    dfreq = (
+    dfreq = pin(
         doc_toks.groupBy("tok")
         .agg(F.count("*").alias("df"))
-        .localCheckpoint(eager=False)
     )
     base = doc_toks.filter(F.col("tok").isin(*EXP_TERMS)).select(
         F.col("tok").alias("q_term"), "doc_id"

@@ -28,7 +28,6 @@ from pyspark.sql.window import Window
 
 from google_cloud_ecommerce_spark.catalog import load_table
 from google_cloud_ecommerce_spark.io import persisted_layout
-from google_cloud_ecommerce_spark.iterative import iterate
 from google_cloud_ecommerce_spark.operators._common import (
     EMBED_DIM,
     N_PROJECTIONS,
@@ -38,6 +37,7 @@ from google_cloud_ecommerce_spark.operators._common import (
     spark_double_array,
     sql_double_array,
 )
+from google_cloud_ecommerce_spark.pins import pin
 
 N_QUERY_VECS = 5  # vec_id < 5 are the query vectors
 TOP_K = 10
@@ -798,9 +798,9 @@ def _kmeans_train(emb: DataFrame, k: int, iters: int) -> DataFrame:
             F.struct(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
         ).alias("cs")
     )
-    cents = iterate(
-        seeds, lambda c, _rnd: _lloyd_update(_lloyd_assign(emb, c)), iters
-    )
+    cents = seeds
+    for _ in range(iters):
+        cents = _lloyd_update(_lloyd_assign(emb, cents))
     return _lloyd_assign(emb, cents)
 
 
@@ -969,7 +969,7 @@ def _power_iterate(spark: SparkSession, emb: DataFrame) -> DataFrame:
             ) + ")"
         ).alias("x")
     )
-    def one_round(x: DataFrame, _rnd: int) -> DataFrame:
+    for _ in range(POWER_ITERS):
         scored = emb.crossJoin(F.broadcast(x)).withColumn(
             "s", F.expr(dot_expr("v", "x"))
         )
@@ -982,7 +982,7 @@ def _power_iterate(spark: SparkSession, emb: DataFrame) -> DataFrame:
                 .alias("y")
             )
         )
-        return per_dim.agg(
+        x = per_dim.agg(
             F.expr(
                 "transform(array_sort(collect_list(struct(dim, y))), t -> t.y)"
             ).alias("raw")
@@ -991,8 +991,7 @@ def _power_iterate(spark: SparkSession, emb: DataFrame) -> DataFrame:
                 f"transform(raw, e -> e / sqrt({dot_expr('raw', 'raw')}))"
             ).alias("x")
         )
-
-    return iterate(x, one_round, POWER_ITERS)
+    return x
 
 
 # scan-audit: power-iteration rounds re-scan by design (iterative)
@@ -1129,7 +1128,7 @@ def _pq_seed_rows(sub: DataFrame) -> DataFrame:
     same array, and (mind, nid) is already a total order, so the
     comparison never reaches it) and appends the pick in the same
     projection. The old shape kept seeds as a (m, c_id, cv) TABLE:
-    each round then paid a union + a localCheckpoint pin (the union
+    each round then paid a union + a pin (the union
     embedded the previous seeds twice) + a fresh groupBy(m) collapse
     before it could broadcast. This chain is single-reference, so no
     pins are needed and each round materializes exactly once as the
@@ -1171,11 +1170,10 @@ def _pq_train(sub: DataFrame) -> tuple[DataFrame, DataFrame]:
     """PQ codebook training over the ``_pq_subvecs`` table: maxmin seeds,
     one Lloyd round per subspace, then the final assignment. Returns
     (codebook, final): the (m, cs) broadcast rows and every subvector's
-    (vec_id, m, v, c_id, sq_dist). The subvector table is pinned
-    (lazy checkpoint): it feeds the seed selection, the training round
-    and the final assignment, and is re-derived per reference
-    otherwise."""
-    sub = sub.localCheckpoint(eager=False)
+    (vec_id, m, v, c_id, sq_dist). The subvector table is pinned: it
+    feeds the seed selection, the training round and the final
+    assignment, and is re-derived per reference otherwise."""
+    sub = pin(sub)
     on = ("m",)
     codebook = _lloyd_update(_lloyd_assign(sub, _pq_seed_rows(sub), on), on)
     return codebook, _lloyd_assign(sub, codebook, on)
@@ -1709,14 +1707,12 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             "transform(array_sort(collect_list(struct(pos, comp))), s -> s.comp)"
         ).alias("cv")
     )
-    # LAZY checkpoint: the dist subtree feeds both the moments
-    # aggregate and the final projection — without the pin Catalyst
-    # re-inlines it under every reference (8 parquet scans; 2 with it).
-    # Lazy, so nothing runs at query-build time (bench stays honest).
-    with_dist = (
+    # the dist subtree feeds both the moments aggregate and the final
+    # projection — without the pin Catalyst re-inlines it under every
+    # reference (8 parquet scans; 2 with it)
+    with_dist = pin(
         emb.join(F.broadcast(centroid))
         .withColumn("dist", F.expr(f"sqrt({_sqdist_expr('v', 'cv')})"))
-        .localCheckpoint(eager=False)
     )
     moments = with_dist.agg(
         (dec_sum(F.col("dist")) / F.count("*")).alias("mean_d"),
@@ -2610,15 +2606,14 @@ def similarity_binary_topk(
     spark: SparkSession, sf_dir: str, *, n_candidates: int = BQ_CANDIDATES
 ) -> DataFrame:
     # the sign-word table is NARROW (vec_id + one int64) and feeds two
-    # roles (Hamming stream + query-word broadcast build); the lazy pin
+    # roles (Hamming stream + query-word broadcast build); the pin
     # computes the embedding-column decode + 64-dim pack once instead
     # of once per role — measured 1.11 -> 0.92 s at sf0.1 even though
     # the pin feeds a broadcast (the avoided re-decode outweighs the
     # checkpoint barrier, the round-7 fact-table-scale pin rule)
-    words = (
+    words = pin(
         _emb(spark, sf_dir)
         .select("vec_id", F.expr(_sign_pack_expr("v")).alias("w"))
-        .localCheckpoint(eager=False)
     )
     qwords = words.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("q_id"), F.col("w").alias("qw")

@@ -19,7 +19,6 @@ from pyspark.sql.window import Window
 
 from google_cloud_ecommerce_spark.catalog import load_table
 from google_cloud_ecommerce_spark.io import persisted_layout
-from google_cloud_ecommerce_spark.iterative import iterate
 from google_cloud_ecommerce_spark.operators._common import (
     FOLD_BASE,
     GOPHER_MAX_MEAN_LEN,
@@ -51,6 +50,7 @@ from google_cloud_ecommerce_spark.operators.guards import (
 from google_cloud_ecommerce_spark.operators.ranking import (
     range_partition_prefix_sum,
 )
+from google_cloud_ecommerce_spark.pins import pin
 
 # Language-ID chain order over the stopword lists (alphabetical,
 # first-wins on ties) is part of the operator's contract so results
@@ -714,13 +714,13 @@ def _bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Pin the base word-split table (round-8 A/B, VERDICT r7 #6): it is
     # a NARROW vocabulary-sized aggregate that every unrolled merge
-    # round re-planned from the parquet scan — the single lazy pin cut
+    # round re-planned from the parquet scan — the single pin cut
     # the documents scans 7/9 -> 1 and WON at sf0.1 (bpe_merges
     # 0.95 -> 0.66 s, bpe_tokenize 1.45 -> 0.91 s, min-of-3). This is
     # the BASE pin, not the per-round vocab pin that LOST in round 6
     # (that one added a job barrier before every round's 1-row
     # broadcast; this one pays one barrier total).
-    return (
+    return pin(
         toks.groupBy("word")
         .agg(F.count("*").alias("wcount"))
         .select(
@@ -730,7 +730,6 @@ def _bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
             ).alias("syms"),
         )
-        .localCheckpoint(eager=False)
     )
 
 
@@ -769,28 +768,22 @@ _BPE_MERGE_FOLD = (
 )
 
 
-def _bpe_one_round(state, rnd):
-    """One BPE training round over composite state (vocab, bests):
-    argmax adjacent pair -> broadcast 1-row merge -> map-side fold."""
-    vocab, bests = state
-    best = _bpe_best_pair(vocab, rnd)
-    merged = vocab.crossJoin(
-        F.broadcast(best.select("ls", "rs", "merged"))
-    ).select("word", "wcount", F.expr(_BPE_MERGE_FOLD).alias("syms"))
-    return merged, bests + (best,)
+def _bpe_train(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[DataFrame]]:
+    """BPE_ROUNDS training rounds over the pinned base vocabulary, each
+    an argmax adjacent pair -> broadcast 1-row merge -> map-side fold.
+    Returns the merged vocabulary and the per-round best pairs."""
+    vocab, bests = _bpe_vocab(spark, sf_dir), []
+    for rnd in range(1, BPE_ROUNDS + 1):
+        best = _bpe_best_pair(vocab, rnd)
+        vocab = vocab.crossJoin(
+            F.broadcast(best.select("ls", "rs", "merged"))
+        ).select("word", "wcount", F.expr(_BPE_MERGE_FOLD).alias("syms"))
+        bests.append(best)
+    return vocab, bests
 
 
 def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # composite state (vocab, per-round bests): the lineage guard pins
-    # only the growing vocab — at production round counts (~30k merges)
-    # the unrolled merge-fold lineage is what blows up, and each round's
-    # best-pair plan restarts from the last pinned vocab.
-    _, bests = iterate(
-        (_bpe_vocab(spark, sf_dir), ()),
-        _bpe_one_round,
-        BPE_ROUNDS,
-        pin=lambda s: (s[0].localCheckpoint(eager=False), s[1]),
-    )
+    _, bests = _bpe_train(spark, sf_dir)
     out = bests[0]
     for b in bests[1:]:
         out = out.unionByName(b)
@@ -884,14 +877,7 @@ ORACLE["bpe_merges"] = _bpe_merges_sql()
 # its pinned blocks) and once for the final doc-words join (banner above).
 # The audit sees only the second: a pinned table plans as an RDD scan
 def bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from google_cloud_ecommerce_spark.iterative import iterate
-
-    vocab, _ = iterate(
-        (_bpe_vocab(spark, sf_dir), ()),
-        _bpe_one_round,
-        BPE_ROUNDS,
-        pin=lambda s: (s[0].localCheckpoint(eager=False), s[1]),
-    )
+    vocab, _ = _bpe_train(spark, sf_dir)
     doc_words = _docs(spark, sf_dir).select(
         "doc_id", F.explode(F.expr(tokens_expr("lower(text)"))).alias("word")
     )
@@ -967,14 +953,13 @@ def tfidf_top_terms(
     spark: SparkSession, sf_dir: str, broadcast_threshold: int | None = None
 ) -> DataFrame:
     # tf feeds both the document-frequency aggregate and the scoring
-    # join; the lazy pin computes the tokenize+explode+groupBy subtree
+    # join; the pin computes the tokenize+explode+groupBy subtree
     # once instead of once per use (the expanded_keyword_search fix)
-    tf = (
+    tf = pin(
         _docs(spark, sf_dir)
         .select("doc_id", F.explode(F.expr(tokens_expr("lower(text)"))).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
     )
     df_t = tf.groupBy("term").agg(F.count("*").alias("df"))
     if broadcast_threshold is None:
@@ -1151,12 +1136,11 @@ def countmin_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast cell lookups) and the ground-truth counts all derive
     # from it — the prior shape re-tokenized the corpus CM_DEPTH + 1
     # times (round-6 scan audit: 5 documents scans)
-    tok_counts = (
+    tok_counts = pin(
         _docs(spark, sf_dir)
         .select(F.explode(F.expr(tokens_expr("lower(text)"))).alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("true_count"))
-        .localCheckpoint(eager=False)
     )
     rows = tok_counts.select(
         "true_count",
@@ -1384,10 +1368,9 @@ def kn_bigram_score(
     bigrams = toks.select(
         "doc_id", F.inline(F.expr(ngrams_expr("toks", 2, ("prev", "w"))))
     )
-    c2 = (
+    c2 = pin(
         bigrams.groupBy("prev", "w")
         .agg(F.count("*").alias("c2"))
-        .localCheckpoint(eager=False)
     )
     c1 = c2.groupBy("prev").agg(
         F.sum("c2").alias("c1"), F.count("*").alias("n1f")
@@ -2229,10 +2212,9 @@ def token_zipf_fit(
     # and feeds both sides of the prefix self-join — unpinned, each
     # side replanned the tokenize + explode + two aggregates (3
     # documents FileScans)
-    hist = (
+    hist = pin(
         freqs.groupBy("f")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False)
     )
     pref = _hist_exclusive_prefix(spark, sf_dir, hist, broadcast_threshold)
     B = ZIPF_BLOCK
@@ -2364,10 +2346,9 @@ def heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the train-side vocabulary histogram feeds the totals, the
     # per-token table AND (via totals) the OOV bucket — pinned so the
     # train tokenize runs once (round-6 scan audit: 4 documents scans)
-    counts = (
+    counts = pin(
         train_toks.groupBy("token")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False)
     )
     totals = counts.agg(
         F.sum("c").alias("n_total"), F.count("*").alias("v")
@@ -2476,10 +2457,9 @@ def skipgram_pmi(
     # the pair table (the expensive corpus explode + aggregate) feeds
     # the two marginals, the total AND the scoring join — pinned so the
     # explode runs once, not four times (round-6 scan audit)
-    pairs = (
+    pairs = pin(
         skipgram_pairs(spark, sf_dir, window=window, min_count=1)
         .select("center", "context", "n_pairs")
-        .localCheckpoint(eager=False)
     )
     n_a = pairs.groupBy("center").agg(F.sum("n_pairs").alias("n_center"))
     n_b = pairs.groupBy("context").agg(F.sum("n_pairs").alias("n_context"))
@@ -2582,10 +2562,9 @@ def vocab_prune_coverage(
     # round-7 pin: the histogram feeds the prefix self-join (both
     # sides) AND the totals broadcast — unpinned, all three replanned
     # the tokenize + explode + two aggregates (3 documents FileScans)
-    hist = (
+    hist = pin(
         freqs.groupBy("f")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False)
     )
     pref = _hist_exclusive_prefix(spark, sf_dir, hist, broadcast_threshold)
     budgets = ", ".join(str(v) for v in VOCAB_BUDGETS)

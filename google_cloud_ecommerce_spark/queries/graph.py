@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from google_cloud_ecommerce_spark.catalog import load_table
+from google_cloud_ecommerce_spark.pins import pin
 
 N_BUCKETS = 10  # category vocabulary: k % 10, as in conversion_rate
 PR_SCALE = 10**12  # fixed-point scale for integer PageRank
@@ -81,12 +82,7 @@ def pagerank_categories(spark: SparkSession, sf_dir: str) -> DataFrame:
     (85 * in_mass) DIV 100 + (15 * SCALE) DIV (100 * N). Dangling-node
     mass is dropped (documented; identical in the oracle).
     """
-    # LAZY checkpoint: the aggregated edge list feeds the collect_list
-    # below; the pin keeps the event-scale window+aggregate planned
-    # once. It materializes ONCE on the first action — still inside the
-    # timed run, nothing eager at build time.
-    edges = _transition_edges(spark, sf_dir).localCheckpoint(eager=False)
-    # r12 rewrite (guide §2.4): the post-pin graph is bounded by the
+    # r12 rewrite (guide §2.4): the aggregated edge list is bounded by the
     # QUERY, not the corpus — buckets = k % N_BUCKETS gives <= 10 nodes
     # and <= 90 aggregated edges at ANY scale. The old shape ran each
     # damping round as broadcast-join + hash-aggregate + left-join over
@@ -97,7 +93,9 @@ def pagerank_categories(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1: min 1.54 -> 1.39 s, rows bit-identical (all-integer
     # fixed-point, order-independent sums). The corpus-scale work (the
     # per-user transition window + (src,dst) aggregate) is untouched.
-    one = edges.agg(F.collect_list(F.struct("src", "dst", "w")).alias("es"))
+    one = _transition_edges(spark, sf_dir).agg(
+        F.collect_list(F.struct("src", "dst", "w")).alias("es")
+    )
     one = (
         one.withColumn(
             "nodes",
@@ -234,7 +232,7 @@ def triangle_coview(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("bucket").isNotNull())
         .distinct()
     )
-    pairs = (
+    pairs = pin(
         ub.alias("x")
         .join(ub.alias("y"), F.col("x.user_id") == F.col("y.user_id"))
         .filter(F.col("x.bucket") < F.col("y.bucket"))
@@ -247,12 +245,10 @@ def triangle_coview(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the edge list joins itself 3x and the triangle table feeds a
         # 3-branch union: unpinned, the events scan + user self-join
         # re-planned per reference (18 events scans, round-6 audit).
-        # Both tables are vocabulary-bounded — pin them (the pagerank
-        # edge-pin discipline, round 2).
-        .localCheckpoint(eager=False)
+        # Both tables are vocabulary-bounded — pin them.
     )
     e1, e2, e3 = pairs.alias("e1"), pairs.alias("e2"), pairs.alias("e3")
-    tris = (
+    tris = pin(
         e1.join(e2, F.col("e1.b") == F.col("e2.a"))
         .join(
             e3,
@@ -263,7 +259,6 @@ def triangle_coview(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("e1.b").alias("b"),
             F.col("e2.b").alias("c"),
         )
-        .localCheckpoint(eager=False)
     )
     per_node = (
         tris.select(F.col("a").alias("node"))

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from google_cloud_ecommerce_spark.catalog import load_table
+from google_cloud_ecommerce_spark.pins import pin
 
 ATTRIBUTION_WINDOW_US = 3_600 * 1_000_000  # views within 1 hour before purchase
 
@@ -474,13 +475,9 @@ def _skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The demo's join subtree (pre-aggregation), shared with the AQE
     plan test so the asserted plan is the shipped plan."""
     ev = _skewed_events(spark, sf_dir)
-    # The profile is pinned (lazy localCheckpoint — a materialized
-    # upstream table in production). Load-bearing for the skew split:
-    # OptimizeSkewedJoin only matches Sort(Shuffle) join inputs — an
-    # inline final aggregate between shuffle and sort disqualifies the
-    # side (splitting a partition would break the aggregate), so an
-    # unpinned profile silently forfeits the runtime skew handling.
-    profile = (
+    # pinned though it has one consumer: OptimizeSkewedJoin only splits a
+    # Sort(Shuffle) join side, and an inline final aggregate is not one
+    profile = pin(
         ev.groupBy("skew_uid")
         .agg(
             F.count("*").alias("n_user_events"),
@@ -488,7 +485,6 @@ def _skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("user_value"),
         )
-        .localCheckpoint(eager=False)
     )
     # merge hint: the profile is fact-derived — at scale it is far too
     # big to broadcast, and the guards forbid hinting it; SMJ is the

@@ -32,6 +32,7 @@ from pyspark.sql.window import Window
 
 from google_cloud_ecommerce_spark.catalog import load_table
 from google_cloud_ecommerce_spark.operators.ranking import range_partition_rank
+from google_cloud_ecommerce_spark.pins import pin
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30-minute inactivity gap, in microseconds
 
@@ -284,7 +285,7 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 #      partitions are globally ordered, each sorts in parallel;
 #      monotonically_increasing_id() then encodes (partition, local
 #      row) as (pid << 33) + local with local following the sort order.
-#      One localCheckpoint pins the sampled range boundaries and the
+#      One pin (pins.pin) holds the sampled range boundaries and the
 #      assigned ids so both passes see identical partitions (the range
 #      partitioner's boundary sampling is not re-run per consumer).
 #   2. per-partition counts -> exclusive offsets. The count table has
@@ -716,7 +717,7 @@ ORACLE = {
 def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir)
     anchor = ev.agg(F.max(F.to_date("ts")).alias("anchor_day"))
-    per_user = (
+    per_user = pin(
         ev.groupBy("user_id")
         .agg(
             F.max(F.to_date("ts")).alias("last_day"),
@@ -734,7 +735,6 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         # and feeds BOTH the quartile bounds and the segment pass —
         # unpinned, each consumer replanned the events scan + per-user
         # aggregate + anchor scan (4 events FileScans total)
-        .localCheckpoint(eager=False)
     )
     bounds = per_user.agg(
         F.expr("percentile(r, array(0.25, 0.5, 0.75))").alias("rb"),
@@ -812,21 +812,20 @@ ORACLE["rfm_segments"] = RFM_SEGMENTS_SQL
 # NARROW (two int64 columns, vocabulary-bounded) and was replanned 4x
 # (pair join both sides + both basket-count broadcasts) — 5 events
 # FileScans with the from_json + distinct shuffle repeated each time.
-# The lazy localCheckpoint evaluates it once; only the corpus-wide
-# n_users count still reads events. 4 passes saved for 1 barrier —
-# the winning side of the round-6 pin rule.
+# Pinned, it is evaluated once; only the corpus-wide n_users count
+# still reads events. 4 passes saved for 1 barrier — the winning side
+# of the round-6 pin rule.
 # ---------------------------------------------------------------------------
 
 
 def band_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir)
     k = F.from_json(F.col("props"), "k INT").getField("k")
-    user_bands = (
+    user_bands = pin(
         ev.withColumn("k", k)
         .filter(F.col("k").isNotNull())
         .select("user_id", F.expr("CAST(floor(k / 25.0) AS BIGINT)").alias("band"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     n_users = ev.agg(F.count_distinct("user_id").alias("n_users"))
     band_counts = user_bands.groupBy("band").agg(F.count("*").alias("n_band"))

@@ -32,6 +32,7 @@ from pyspark.sql.window import Window
 
 from google_cloud_ecommerce_spark.catalog import load_table
 from google_cloud_ecommerce_spark.operators.ranking import range_partition_ntile
+from google_cloud_ecommerce_spark.pins import pin
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -881,15 +882,14 @@ ORACLE["order_value_distribution"] = ORDER_VALUE_DISTRIBUTION_SQL
 
 def grouping_id_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
-    # lazy checkpoint: the 6-row partial table feeds all three grouping
-    # sets; without truncation each set re-plans the full scan
-    base = (
+    # the 6-row partial table feeds all three grouping sets; without
+    # the pin each set re-plans the full scan
+    base = pin(
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.count("*").alias("n_items"),
             F.sum(F.col("l_extendedprice").cast("decimal(18,4)")).alias("tp_dec"),
         )
-        .localCheckpoint(eager=False)
     )
     finest = base.select(
         "l_returnflag", "l_linestatus", F.lit(0).cast("long").alias("gid"),

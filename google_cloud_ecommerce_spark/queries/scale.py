@@ -35,6 +35,7 @@ from pyspark.sql.window import Window
 
 from google_cloud_ecommerce_spark.catalog import load_table
 from google_cloud_ecommerce_spark.io import persisted_layout
+from google_cloud_ecommerce_spark.pins import pin
 
 N_SALTS = 32
 
@@ -575,10 +576,9 @@ def key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         # outweighs the tiny local scan) — kept anyway because the saved
         # pass is over the FACT table: at production SF the barrier is
         # histogram-sized while each avoided re-scan is the full corpus.
-        hist = (
+        hist = pin(
             counts.groupBy("x")
             .agg(F.count("*").alias("c"))
-            .localCheckpoint(eager=False)
         )
         earlier = hist.select(F.col("x").alias("e_x"), F.col("c").alias("e_c"))
         pref = (

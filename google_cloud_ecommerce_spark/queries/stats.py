@@ -28,6 +28,7 @@ from pyspark.sql.window import Window
 
 from google_cloud_ecommerce_spark.catalog import load_table
 from google_cloud_ecommerce_spark.operators.ranking import range_partition_ntile
+from google_cloud_ecommerce_spark.pins import pin
 
 
 def value_hour_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1131,9 +1132,9 @@ def market_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤21 pairs + 7 singles + 1 marker per order). Everything downstream
     of the single basket aggregate is attribute-bounded: ≤B²/2+B+1 rows
     for B distinct brands (Heaps-free — brands are a catalog attribute,
-    not corpus vocabulary), pinned once with a lazy localCheckpoint so
-    the three rule inputs (pairs, marginals, total) never re-plan the
-    corpus-sized subtree, then broadcast-joined.
+    not corpus vocabulary), pinned once so the three rule inputs (pairs,
+    marginals, total) never re-plan the corpus-sized subtree, then
+    broadcast-joined.
     """
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
@@ -1168,16 +1169,15 @@ def market_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("IF(a = '', array(''), filter(brands, b -> b >= a))")
         ).alias("b"),
     )
-    counts = (
+    # <=B^2/2+B+1 rows; pinned so the three branches below reuse it
+    # instead of re-planning the basket scan
+    counts = pin(
         pairs.groupBy(
             F.col("a").alias("brand_a"),
             F.when(F.col("b") == F.col("a"), F.lit(""))
             .otherwise(F.col("b"))
             .alias("brand_b"),
-        )
-        .agg(F.count("*").alias("cnt"))
-        .localCheckpoint(eager=False)  # <=B^2/2+B+1 rows; pin so the three
-        # branches below reuse it instead of re-planning the basket scan
+        ).agg(F.count("*").alias("cnt"))
     )
     pair_cnt = counts.filter((F.col("brand_a") != "") & (F.col("brand_b") != ""))
     single = counts.filter((F.col("brand_a") != "") & (F.col("brand_b") == "")).select(

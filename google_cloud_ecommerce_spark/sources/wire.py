@@ -59,6 +59,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from google_cloud_ecommerce_spark.catalog import load_table
+from google_cloud_ecommerce_spark.pins import pin_result
 
 WIRE_FORMAT = "csvwire"
 WIRE_SCHEMA = (
@@ -451,11 +452,8 @@ def _safe_register(spark: SparkSession) -> None:
 def wire_format_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch face: equality filter pushed INTO the Python reader (rows
     pruned at parse time), then a typed aggregate per day. The result is
-    pinned executor-side (an eager localCheckpoint, never a driver
-    collect) before the temp wire dir is deleted — the same
-    ``_pin_result`` discipline the streaming entries use."""
-    from google_cloud_ecommerce_spark.streaming.jobs import _pin_result
-
+    pinned executor-side (``pins.pin_result``, never a driver collect)
+    before the temp wire dir is deleted, as the streaming entries do."""
     _safe_register(spark)
     with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as wire_dir:
         write_wire_dir(spark, sf_dir, n_files=4, out=wire_dir)
@@ -470,7 +468,7 @@ def wire_format_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_value"),
             )
         )
-        return _pin_result(res)
+        return pin_result(res)
 
 
 def wire_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -515,7 +513,7 @@ def wire_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the verification read consumes committed_only — so a message
     only counts if its epoch's manifest landed. The batch oracle over
     the source events must match exactly."""
-    from google_cloud_ecommerce_spark.streaming.jobs import _drain, _pin_result
+    from google_cloud_ecommerce_spark.streaming.jobs import _drain
     from google_cloud_ecommerce_spark.streaming.replay import (
         read_replay_stream,
         write_replay_dir,
@@ -538,7 +536,7 @@ def wire_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count_distinct("user_id").alias("n_users"),
             F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
         )
-        return _pin_result(final)
+        return pin_result(final)
 
 
 QUERIES["wire_stream_sink"] = wire_stream_sink

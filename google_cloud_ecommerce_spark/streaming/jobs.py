@@ -11,7 +11,7 @@ as everything else, not a weaker rows-only pass). The result outlives
 every scratch dir: plain aggregates drain into a memory sink
 (``_run_to_memory``); the foreachBatch entries (state folds, lakehouse,
 MERGE, JDBC, retrieval) write a sink and pin the read-back
-executor-side (``_pin_result``). The streaming plan is identical to
+executor-side (``pins.pin_result``). The streaming plan is identical to
 what would run unbounded against Kafka; only the source/trigger/sink
 bindings are test-harness choices, and they live in one place each:
 
@@ -58,22 +58,13 @@ from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from google_cloud_ecommerce_spark.catalog import load_table
+from google_cloud_ecommerce_spark.pins import pin_result
 from google_cloud_ecommerce_spark.streaming.replay import (
     DOCUMENTS_DDL,
     land_chunks,
     read_replay_stream,
     write_replay_dir,
 )
-
-
-def _pin_result(df: DataFrame) -> DataFrame:
-    """Materialize a bounded streaming result EXECUTOR-side: one eager
-    ``localCheckpoint`` into the block managers, lineage cut. The result
-    never rides through the driver (the harness shape holds when the
-    "bounded" result is millions of rows), the replay / checkpoint /
-    sink temp dirs it was derived from can be removed, and no result
-    directory is written — the blocks go when the frame does."""
-    return df.localCheckpoint(eager=True)
 
 
 def _drain(writer: DataStreamWriter) -> None:
@@ -140,7 +131,7 @@ def _fold_epochs(
             latest.append(out)
 
         _drain(stream.writeStream.foreachBatch(step))
-        return _pin_result(final(**_read_state(spark, latest[-1])))
+        return pin_result(final(**_read_state(spark, latest[-1])))
 
 
 # ---------------------------------------------------------------------------
@@ -849,7 +840,7 @@ def streaming_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(qdir)
         )
         _drain(stream.writeStream.foreachBatch(score_batch))
-        return _pin_result(spark.read.parquet(out))
+        return pin_result(spark.read.parquet(out))
 
 
 QUERIES["streaming_similarity_topk"] = streaming_similarity_topk
@@ -1193,7 +1184,7 @@ def streaming_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.count("*") - F.sum("kept")).alias("n_dropped"),
             F.max("rn").alias("max_burst"),
         )
-        return _pin_result(final)
+        return pin_result(final)
 
 
 QUERIES["streaming_rate_limit"] = streaming_rate_limit
@@ -1244,7 +1235,7 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         top = final.orderBy(F.desc("n_events"), F.asc("user_id")).limit(HH_TOP_N)
-        return _pin_result(top)
+        return pin_result(top)
 
 
 QUERIES["streaming_heavy_hitters"] = streaming_heavy_hitters
@@ -1291,7 +1282,7 @@ def streaming_lakehouse_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
         )
-        return _pin_result(final)
+        return pin_result(final)
 
 
 QUERIES["streaming_lakehouse_ingest"] = streaming_lakehouse_ingest
@@ -1366,7 +1357,7 @@ def streaming_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("event_type") == "adjusted").cast("long")).alias("n_adjusted"),
             F.sum((F.col("event_type") == "backfill").cast("long")).alias("n_backfill"),
         )
-        return _pin_result(final)
+        return pin_result(final)
 
 
 # the batch MERGE oracle verbatim: stream + batch must converge on the
@@ -1420,7 +1411,7 @@ def streaming_jdbc_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count_distinct("event_id").alias("n_events"),
             F.count_distinct("user_id").alias("n_users"),
         )
-        return _pin_result(final)
+        return pin_result(final)
     finally:
         # also on a failed stream: the in-memory database would otherwise
         # stay in the JVM for the rest of the session
@@ -1512,7 +1503,7 @@ def streaming_version_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("sum_value"),
         )
-        return _pin_result(_run_to_memory(agg, "complete"))
+        return pin_result(_run_to_memory(agg, "complete"))
 
 
 from google_cloud_ecommerce_spark.queries.scale import (  # noqa: E402
@@ -1608,7 +1599,7 @@ def streaming_manifest_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
         )
-        return _pin_result(final)
+        return pin_result(final)
 
 
 QUERIES["streaming_manifest_ingest"] = streaming_manifest_ingest

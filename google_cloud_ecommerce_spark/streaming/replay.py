@@ -96,15 +96,16 @@ def write_replay_dir(
     next chunk (duplicate delivery).
 
     Scale shape (VERDICT r5 "what's wrong" #2): the global order comes
-    from the window-free ``_ranked`` (range shuffle, one pinned
-    localCheckpoint, per-partition counts collected as offsets), never
+    from the window-free ``_ranked`` (range shuffle, one ``pins.pin``,
+    per-partition counts collected as offsets), never
     ``row_number() OVER ()`` on an unpartitioned window; all chunks
     land in ONE partitioned write (``land_chunks``) instead of an
     n_files-iteration driver loop that re-plans the sort per chunk. The
     rank also yields the row count, and every numbering is a
     deterministic projection of the one pinned frame, so the chunk and
-    overlap-duplicate branches of the union read the same blocks: 7
-    Spark jobs in all (checkpoint 3, offsets 2, write 2). ``file_id =
+    overlap-duplicate branches of the union read the same blocks: 6
+    Spark jobs in all (range sample and shuffle 2, offsets 2, which
+    also write the pinned blocks, write 2). ``file_id =
     rn * n_files / n`` gives every chunk an exact row share — never a
     sampled range partition per chunk, whose sizes would change from
     call to call — and chunks by rank, not by key value, so sparse or

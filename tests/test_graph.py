@@ -45,7 +45,7 @@ def test_pagerank_no_per_event_work_in_loop(spark, sf_smoke):
     """The iteration must run on the aggregated edge list: since the
     r12 single-row rewrite the damping rounds are pure map/array
     arithmetic over one collected row — no join of ANY strategy (and a
-    fortiori no cartesian product) may appear after the edge pin."""
+    fortiori no cartesian product) may appear in the plan."""
     df = graph.pagerank_categories(spark, sf_smoke)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan

@@ -263,24 +263,6 @@ def test_bpe_greedy_merge_reference(syms, pair):
     assert "".join(acc) == "".join(syms)
 
 
-@given(rounds=st.integers(min_value=0, max_value=40), every=st.integers(min_value=1, max_value=10))
-def test_iterate_pin_schedule(rounds, every):
-    """pin fires exactly on multiples of `every` strictly before the
-    final round, and the step sequence is 1..rounds in order."""
-    from google_cloud_ecommerce_spark.iterative import iterate
-
-    steps, pins = [], []
-    iterate(
-        0,
-        lambda s, i: steps.append(i) or s,
-        rounds,
-        checkpoint_every=every,
-        pin=lambda s: pins.append(len(steps)) or s,
-    )
-    assert steps == list(range(1, rounds + 1))
-    assert pins == [i for i in range(1, rounds + 1) if i % every == 0 and i < rounds]
-
-
 basket_strategy = st.lists(
     st.tuples(
         st.integers(min_value=1, max_value=6),      # l_orderkey

@@ -14,6 +14,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
+from google_cloud_ecommerce_spark import pins
 from google_cloud_ecommerce_spark.catalog import load_table
 from google_cloud_ecommerce_spark.queries.reference import daily_events
 from google_cloud_ecommerce_spark.streaming import jobs
@@ -331,10 +332,11 @@ def test_replay_chunks_match_window_reference(spark, sf_smoke):
                 shutil.rmtree(d, ignore_errors=True)
 
 
-def test_replay_dir_runs_at_most_seven_jobs(spark, sf_smoke):
-    """Range checkpoint (3 jobs), collected partition offsets (2) and
-    the one partitioned write (2): no separate count, no offsets join —
-    for every table a replay is cut from."""
+def test_replay_dir_runs_at_most_six_jobs(spark, sf_smoke):
+    """Range sample and shuffle (2 jobs), collected partition offsets
+    (2, which also write the lazily pinned blocks) and the one
+    partitioned write (2): no separate count, no offsets join, no eager
+    pin pass — for every table a replay is cut from."""
     sc = spark.sparkContext
     for table, order, _key in REPLAYS:
         load_table(spark, sf_smoke, table)  # any first-touch mirror work
@@ -347,7 +349,7 @@ def test_replay_dir_runs_at_most_seven_jobs(spark, sf_smoke):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         shutil.rmtree(d, ignore_errors=True)
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 7, table
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6, table
 
 
 def test_pin_result_leaves_no_result_dir(spark, sf_smoke):
@@ -357,7 +359,7 @@ def test_pin_result_leaves_no_result_dir(spark, sf_smoke):
     pattern = os.path.join(tempfile.gettempdir(), "spark_graft_stream_result_*")
     before = set(glob.glob(pattern))
     src = load_table(spark, sf_smoke, "events").groupBy("event_type").count()
-    pinned = jobs._pin_result(src)
+    pinned = pins.pin_result(src)
     assert set(glob.glob(pattern)) == before
     assert sorted(pinned.collect()) == sorted(src.collect())
 
