@@ -793,12 +793,11 @@ def _kmeans_train(emb: DataFrame, k: int, iters: int) -> DataFrame:
     the final assignment (vec_id, v, c_id, sq_dist) is returned. The
     seeds go straight to the one-row broadcast state, so every round is
     exactly one corpus-side aggregate plus one broadcast build."""
-    seeds = emb.filter(F.col("vec_id") < k).agg(
+    cents = emb.filter(F.col("vec_id") < k).agg(
         F.collect_list(
             F.struct(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
         ).alias("cs")
     )
-    cents = seeds
     for _ in range(iters):
         cents = _lloyd_update(_lloyd_assign(emb, cents))
     return _lloyd_assign(emb, cents)
