@@ -134,7 +134,7 @@ def _modules():
 # corpus_curation_pipeline (pairs pin deleted), dedup_clusters (eager
 # label-loop pins now lazy), lineitem_quartiles (rank pin now lazy),
 # bpe_tokenize (iterate template replaced by a plain loop) and
-# embedding_top_component (power-iteration loop likewise); last driver
+# embedding_top_component (power-iteration loop likewise); last CORRECTNESS
 # rows r10, r07, r09, r09, r08, r07. Every oldest-evidence slot reaches a
 # changed line (the ten streaming names and length_bucket_batches replay
 # or rank through the rank pin, expanded_keyword_search pins its counts),
